@@ -522,13 +522,15 @@ def main() -> None:
     # r11 boundary that 8-core run wrote last and the committed
     # BENCH_DETAIL_r12.json held 8-core numbers, which would have
     # become the next round's 32-core baseline. Low-core runs (CPUS
-    # set below the machine's core count) archive under a _c{cpus}
-    # suffix instead of the round file.
+    # set below the cores this process may run on) archive under a
+    # _c{cpus} suffix instead of the round file. The affinity mask, not
+    # os.cpu_count(): a container pinned to fewer cores than the host
+    # has would otherwise file every full-width run as low-core.
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
     low_core = (
         cpus_env is not None
         and cpus_env.isdigit()
-        and int(cpus_env) < (os.cpu_count() or int(cpus_env))
+        and int(cpus_env) < len(os.sched_getaffinity(0))
     )
     suffix = f"_c{cpus_env}" if low_core else ""
     with open(

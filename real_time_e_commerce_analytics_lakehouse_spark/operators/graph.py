@@ -8,38 +8,33 @@ single-table `dropDuplicates`, 02_bronze_to_silver.py:66); this is the
 standard production step between near-dup detection and survivor
 selection in a training-data pipeline.
 
-Two algorithms behind one API, identical fixpoint (vertex -> min
-vertex id of its component):
-
-- "star" (default since r9): alternating large-star / small-star EDGE
-  REWIRING — the published MapReduce formulation (Kiveris et al.,
-  SoCC'14) with an O(log^2 n) round guarantee; each round's shuffle
-  gets CHEAPER as stars contract. Measured r9 on the sf0.1
-  levenshtein name graph: 6.5 s vs 32.5 s for the jump spelling,
-  identical output.
-- "jump": iterative min-label propagation with pointer jumping —
-  1. hop:  label[v] <- min(label[v], min over neighbors u of label[u])
-  2. jump: label[v] <- label[label[v]] (path halving)
-  The jump doubles propagation distance on id-ordered paths but
-  degrades toward one-hop-per-round when vertex ids are uncorrelated
-  with graph position (r9 measurement: 26 rounds for ~190-vertex
-  chains; extra jump iterations per round did NOT reduce the count —
-  the bottleneck is the min REACHING across edges, not chase depth).
-  Kept as the equivalence witness; real duplicate clusters are tiny
-  (d <= 3-4), where both spellings converge in 2-3 rounds.
+One algorithm: alternating large-star / small-star EDGE REWIRING — the
+published MapReduce formulation (Kiveris et al., "Connected Components
+in MapReduce and Beyond", SoCC'14) with an O(log^2 n) round guarantee.
+Rounds rewire edges toward local minima, so distances shrink
+multiplicatively and the edge set itself contracts as it converges:
+each round's shuffle gets CHEAPER. Min-label propagation, by contrast,
+moves labels one edge per round on graphs whose vertex ids are
+uncorrelated with position (r9, the sf0.1 levenshtein name graph's
+~190-vertex chains: 26 rounds and 32.5 s vs 6.5 s for star rounds).
 
 Scale notes:
-- Per-round results are materialized and lineage-truncated
-  (localCheckpoint) — without this the plan doubles every iteration
-  and the driver dies planning round ~15. On a cluster with a
-  checkpoint dir configured, `spark.sparkContext.setCheckpointDir` +
-  `use_local_checkpoint=False` gives fault-tolerant truncation.
+- Each round's edge set is lineage-truncated (localCheckpoint) —
+  without this the plan doubles every iteration and the driver dies
+  planning round ~15 — and persisted, so later plans see its real
+  materialized size instead of the estimate the checkpoint inherits.
+- Every frame a call materializes is released on every exit, raise
+  paths included, on both layers: the cache entry and the checkpoint
+  blocks (operators/simsearch.release_frame). The result is itself a
+  local checkpoint; its lease rides the result (`_cached_deps`), so
+  callers pass it on and free it with release_cached after their
+  action.
 - Convergence is certified by TWO independently-seeded hash digests of
-  the labels (sums of per-row hashes mod distinct primes —
-  type-agnostic and overflow-safe): labels only ever decrease, so an
-  unchanged digest pair IS the fixpoint — one tiny agg action per
-  round instead of a changed-rows join, and a false certification
-  needs both digests to collide in the same round (~1/p²).
+  the canonical edge set (sums of per-row hashes mod distinct primes —
+  type-agnostic and overflow-safe): an unchanged digest pair across
+  consecutive rounds IS the fixpoint — one tiny agg action per round
+  instead of a changed-rows join, and a false certification needs both
+  digests to collide in the same round (~1/p²).
 - The fixpoint (vertex -> min vertex id of its component) is unique,
   so results are deterministic and hash-exact against the DuckDB
   recursive-CTE oracle (plans/documents.py:neardup_clusters).
@@ -47,40 +42,37 @@ Scale notes:
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Plan-audit hook (tools/r12_measure.py --stage-plans): checkpointed CC
-# rounds enter the consumer query's final plan as `Scan ExistingRDD`, so
-# an end-of-query explain dump cannot evidence per-round plan-shape
-# claims (VERDICT r11 "what's wrong" #2). When set, the hook receives
-# every frame passed to a `_materialize` BEFORE lineage truncation so
-# the full pre-checkpoint stage plan can be dumped. None (no-op) in
-# production — the hook must not run actions or mutate the frame.
-PLAN_AUDIT_HOOK = None
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_frame,
+)
 
 
-def _label_digests():
-    """Overflow-safe change digests over the comp column: sums of
-    per-row hashes reduced mod a prime (works for any id type; a raw
-    xxhash64 sum overflows BIGINT under ANSI).
+def _edge_digest(df: DataFrame) -> tuple:
+    """(digest, digest, row count) of an edge set, in one aggregate.
 
-    TWO independent digests (second one salted so it is a different
-    hash function): a single digest could collide between consecutive
-    rounds — labels changed but the sums coincide mod the prime — and
-    silently certify a non-fixpoint. For one round to be falsely
-    accepted, BOTH independent digests must collide simultaneously
-    (~1/p² per round instead of ~1/p), and both sums are computed in
-    the same one-pass aggregation so the extra witness costs no
-    additional action."""
-    return [
-        F.sum(F.pmod(F.xxhash64("comp"), F.lit(1_000_000_007))),
-        F.sum(
-            F.pmod(
-                F.xxhash64(F.lit("cc-salt-2"), "comp"), F.lit(998_244_353)
-            )
-        ),
-    ]
+    Both endpoints hash into one column first — digesting a single side
+    could certify a changed edge set whose one-sided multiset happened
+    to match. Each digest is a sum of per-row hashes reduced mod a prime
+    (works for any id type; a raw xxhash64 sum overflows BIGINT under
+    ANSI). TWO independent digests (the second salted, so a different
+    hash function): one digest could collide between consecutive rounds
+    and silently certify a non-fixpoint; both colliding in the same
+    round is ~1/p² instead of ~1/p, and they share one pass."""
+    h = df.select(F.xxhash64("u", "v").alias("h"))
+    return tuple(
+        h.agg(
+            F.sum(F.pmod(F.xxhash64("h"), F.lit(1_000_000_007))),
+            F.sum(
+                F.pmod(F.xxhash64(F.lit("cc-salt-2"), "h"), F.lit(998_244_353))
+            ),
+            F.count(F.lit(1)),
+        ).collect()[0]
+    )
 
 
 def connected_components(
@@ -89,9 +81,8 @@ def connected_components(
     dst: str = "dst",
     vertex_col: str = "vertex",
     component_col: str = "component",
-    max_rounds: int = 64,
-    use_local_checkpoint: bool = True,
-    algorithm: str = "star",
+    max_rounds: int = 40,
+    round_stats: list | None = None,
 ) -> DataFrame:
     """Connected components of an undirected edge list.
 
@@ -100,150 +91,164 @@ def connected_components(
     in the component (a canonical, deterministic cluster id). Vertices
     with no edges are not emitted — left-join the result back onto the
     full vertex set and coalesce to the vertex id for singleton
-    clusters. Vertex ids must be orderable and non-null.
+    clusters. Vertex ids must be orderable and non-null. The result
+    carries its own checkpoint lease (`_cached_deps`): pass it on to
+    whatever frame you return, or release_cached it after the action.
 
-    ``algorithm``: "star" (default since r9) dispatches to
-    ``connected_components_star`` — the large-star/small-star edge
-    rewiring with the published O(log^2 n) round bound, measured 5x
-    faster on the sf0.1 levenshtein name graph (6.5 s vs 32.5 s,
-    identical fixpoint); "jump" keeps the r1-r8 min-label-propagation
-    + pointer-jumping spelling below (same output, useful as the
-    equivalence witness and for label-stream consumers).
+    Per round over the undirected edge set E (self-loops dropped):
+      large-star: for each node u with neighborhood G(u), m =
+        min(G(u) ∪ {u}); replace the edges to u's LARGER neighbors
+        with (x, m) for x in G(u), x > u.
+      small-star: canonicalize each edge to (larger, smaller); for
+        each u over its smaller neighbors G-(u), m = min(G-(u) ∪ {u});
+        emit (x, m) for x in (G-(u) ∪ {u}) \\ {m}.
+    Both preserve connectivity (proved in the paper); the fixpoint is
+    a star forest whose roots are component minima.
 
-    ``max_rounds`` (jump path) defaults to 64: real duplicate clusters
-    have tiny diameter (2-4 rounds), but adversarial chain-shaped
-    graphs whose vertex ids are uncorrelated with chain position (the
-    sf0.1 levenshtein name graph: 190-vertex chains) measured ~26-40
-    rounds — hop moves the wavefront one edge and the jump only halves
-    the chase to the CURRENT label holder, so the log bound carries a
-    structure-dependent constant. Each round is two small joins over
-    checkpointed labels; a generous bound costs nothing when
-    convergence is early (the digest fixpoint exits the loop).
-    """
-    if algorithm == "star":
-        return connected_components_star(
-            edges,
-            src=src,
-            dst=dst,
-            vertex_col=vertex_col,
-            component_col=component_col,
-            use_local_checkpoint=use_local_checkpoint,
-        )
-    if algorithm != "jump":
-        raise ValueError(f"unknown algorithm {algorithm!r} (star|jump)")
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .persist()
-    )
+    ``max_rounds`` bounds the loop (RuntimeError past it); the round
+    count is O(log^2 n), and real duplicate clusters converge in 2-3.
+
+    ``round_stats`` (the soak instrumentation): pass a list and each
+    completed round appends ``{"round", "edges", "seconds"}`` where
+    ``edges`` is the rewired edge-set size AFTER the round — the
+    contraction curve (each round's shuffle gets cheaper). The count
+    rides the round's digest aggregate, so it costs no extra job."""
+    held: list[DataFrame] = []  # released in `finally`, on every exit
 
     def _materialize(df: DataFrame) -> DataFrame:
         # checkpoint truncates LINEAGE, persist fixes STATS: Spark's
         # localCheckpoint copies the origin plan's ESTIMATED
-        # sizeInBytes into the new LogicalRDD
-        # (LogicalRDD.rewriteStatsAndConstraints), and the jump step's
-        # self-join SQUARES that estimate — left uncorrected, the
-        # BigInt doubles its digit count every round and by round ~18
-        # the driver burns MINUTES inside BigInteger.multiply costing
-        # a single plan (found by the r9 full-suite sf0.1 run).
-        # Caching each round's labels substitutes an InMemoryRelation
-        # with the REAL materialized size into every later plan, so
-        # per-round estimates stay grounded and checkpoint-time stats
-        # rewriting is O(plan), not O(2^round) digit arithmetic. The
-        # digest action right after each _materialize call fills the
-        # cache; the caller unpersists the previous round.
-        # r11 (guide §1/§2: fewer passes): eager=False — the digest
-        # collect that always follows is the FIRST job over this
-        # frame, so the local checkpoint and the cache fill happen
-        # inside that one job instead of a separate eager
-        # materialization job per round (measured ~15% off
-        # entity_resolution_parts at sf0.1; identical fixpoint). The
-        # reliable-checkpoint branch stays eager: a non-eager
-        # checkpoint() recomputes the frame for the file write.
-        # CONTRACT (lazy checkpoint, r11 advice): the caller must run
-        # an action on the returned frame BEFORE unpersisting the
-        # frames it was built from — otherwise the lazy checkpoint
-        # recomputes through a released cache. Upheld here: the digest
-        # collect on the new labels precedes prev_labels.unpersist().
-        if PLAN_AUDIT_HOOK is not None:
-            PLAN_AUDIT_HOOK(df)
-        cp = (
-            df.localCheckpoint(eager=False)
-            if use_local_checkpoint
-            else df.checkpoint(eager=True)
-        )
-        return cp.persist()
+        # sizeInBytes into the new LogicalRDD, and caching substitutes
+        # an InMemoryRelation with the REAL materialized size into
+        # every later plan (r9: unchecked estimates grew every round
+        # until the driver spent minutes costing one plan).
+        # r11: eager=False — the edge digest (or, for verts, the final
+        # labels join) is the first job over the frame and performs the
+        # checkpoint + cache fill inside itself, saving one eager
+        # materialization job per round. CONTRACT: run an action on the
+        # returned frame before releasing its inputs, or the lazy
+        # checkpoint recomputes through a released cache. Upheld here:
+        # each round's edge digest precedes releasing the previous edge
+        # set, and the final labels join is eager-checkpointed before
+        # the `finally` releases verts and e.
+        cp = df.localCheckpoint(eager=False).persist()
+        held.append(cp)
+        return cp
 
-    labels = _materialize(
-        sym.select(F.col("a").alias("v")).distinct().withColumn("comp", F.col("v"))
-    )
-    if labels.isEmpty():
-        sym.unpersist()
-        return labels.select(
-            F.col("v").alias(vertex_col), F.col("comp").alias(component_col)
+    def _sym(df: DataFrame) -> DataFrame:
+        return df.select("u", "v").union(
+            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
 
-    prev_sum = tuple(labels.agg(*_label_digests()).collect()[0])
-    for _ in range(max_rounds):
-        # hop: min over neighbor labels
-        nbr = (
-            sym.join(labels, sym["b"] == labels["v"])
-            .groupBy("a")
-            .agg(F.min("comp").alias("nc"))
+    try:
+        # r12 (guide §2.4/§5): persist the normalized edge input — it is
+        # read THREE times (the vertex set unions both endpoint columns,
+        # and e filters self-loops), so without the cache the caller's
+        # whole upstream edge pipeline (for entity_resolution_parts: the
+        # blocked levenshtein self-join + three hash joins) re-executed
+        # once per branch.
+        raw = (
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+            .persist()
         )
-        hopped = (
-            labels.join(nbr, labels["v"] == nbr["a"], "left")
-            .select(
-                labels["v"],
-                F.least(F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))).alias(
-                    "comp"
-                ),
+        held.append(raw)
+        # vertex set BEFORE dropping self-loops: a vertex appearing only
+        # in a self-loop is a singleton that must still get a row
+        verts = _materialize(
+            raw.select(F.col("u").alias("x"))
+            .union(raw.select(F.col("v").alias("x")))
+            .distinct()
+        )
+        e = _materialize(raw.filter(F.col("u") != F.col("v")).distinct())
+
+        # r12 (guide §1/§2: fewer passes): no standalone pre-loop digest
+        # — round 1's digest job materializes e's lazy checkpoint anyway,
+        # so the loop compares round k against round k-1. A graph that
+        # is already a fixpoint pays one extra (cheap, contracted)
+        # round; every other graph saves exactly one job.
+        prev: tuple | None = None
+        for rnd in range(1, max_rounds + 1):
+            t0 = time.perf_counter()
+            # ---- large-star ---------------------------------------------
+            sym = _sym(e)
+            m = sym.groupBy("u").agg(
+                F.least(F.min("v"), F.first("u")).alias("m")
             )
-        )
-        # jump: labels are vertex ids — chase label[label[v]] (path halving)
-        l2 = hopped.select(
-            F.col("v").alias("jv"), F.col("comp").alias("jcomp")
-        )
-        jumped = (
-            hopped.join(l2, hopped["comp"] == l2["jv"], "left")
-            .select(
-                hopped["v"],
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("jcomp"), F.col("comp"))
-                ).alias("comp"),
+            # every edge is processed exactly once, at its SMALLER
+            # endpoint's star: (u, v) with v > u becomes (v, m(u)) — the
+            # original edge is REPLACED, not kept (the paper's
+            # operation; connectivity is preserved because u's own link
+            # to m(u) is an existing edge processed at m(u)'s star)
+            ls = (
+                sym.join(m, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
             )
+            # r12 (guide §2.4): NO mid-round distinct — the large-star
+            # output flows into small-star as a multiset. m2 is a MIN, so
+            # duplicate rows cannot change it, and the round's final
+            # distinct collapses duplicate emissions.
+            e1 = ls.where(F.col("u") != F.col("v"))
+            # ---- small-star ---------------------------------------------
+            canon = e1.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            m2 = canon.groupBy("u").agg(
+                F.least(F.min("v"), F.first("u")).alias("m")
+            )
+            joined = canon.join(m2, "u")
+            # r11 (guide §2.4): ONE distinct. Every small-star output is
+            # already canonically ordered — (v, m) has m <= v and (u, m)
+            # has m <= v < u — so the greatest/least projection below is
+            # free and pins the invariant the digest relies on; the
+            # dedup runs once, on the canonical form.
+            ss = (
+                joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(joined.select(F.col("u"), F.col("m").alias("v")))
+                .where(F.col("u") != F.col("v"))
+            )
+            prev_e = e
+            e = _materialize(
+                ss.select(
+                    F.greatest("u", "v").alias("u"),
+                    F.least("u", "v").alias("v"),
+                ).distinct()
+            )
+            new = _edge_digest(e)
+            held.remove(prev_e)
+            release_frame(prev_e)
+            if round_stats is not None:
+                round_stats.append(
+                    {
+                        "round": rnd,
+                        "edges": new[2],
+                        "seconds": round(time.perf_counter() - t0, 3),
+                    }
+                )
+            if new == prev:
+                break
+            prev = new
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_rounds} rounds"
+            )
+        # fixpoint: a star forest (u -> component min). Roots appear only
+        # on the v side; every vertex from the ORIGINAL edge set gets a
+        # row (roots label themselves).
+        out = (
+            verts.join(e, verts["x"] == e["u"], "left")
+            .select(
+                F.col("x").alias(vertex_col),
+                F.coalesce(F.col("v"), F.col("x")).alias(component_col),
+            )
+            .localCheckpoint(eager=True)
         )
-        prev_labels = labels
-        labels = _materialize(jumped)
-        # convergence witness must work for ANY orderable id type:
-        # F.sum over STRING comps casts to NULL (non-ANSI), making
-        # None == None converge after round 1 with wrong components —
-        # hash (mod a prime: a raw 64-bit hash sum overflows long under
-        # ANSI), then sum; labels are per-vertex non-increasing, so any
-        # change flips its hash and the digest moves. Two independently
-        # seeded digests guard against a single-digest collision
-        # certifying a false fixpoint (see _label_digests).
-        new_sum = tuple(labels.agg(*_label_digests()).collect()[0])
-        prev_labels.unpersist()
-        if new_sum == prev_sum:  # labels only decrease: fixpoint reached
-            break
-        prev_sum = new_sum
-    else:
-        # release BOTH cached frames before raising — a leaked persist
-        # pins executor storage for the rest of the session (r9 advice)
-        sym.unpersist()
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
-    sym.unpersist()
-    # the fixpoint lives in the checkpoint blocks; the cache layer was
-    # only needed to ground per-round stats — release it
-    labels.unpersist()
-    return labels.select(
-        F.col("v").alias(vertex_col), F.col("comp").alias(component_col)
-    )
+    finally:
+        for f in held:
+            release_frame(f)
+    out._cached_deps = [out]
+    return out
 
 
 def resolve_duplicate_clusters(
@@ -256,219 +261,11 @@ def resolve_duplicate_clusters(
     """Survivor selection over duplicate pairs: transitive clusters via
     connected components, keep the minimum id of each cluster. Returns
     `all_docs` filtered to survivors (singletons — docs in no pair —
-    always survive)."""
+    always survive), carrying the components' lease (`_cached_deps`)."""
     comps = connected_components(pairs, src=pair_a, dst=pair_b)
     losers = comps.filter(F.col("vertex") != F.col("component")).select(
         F.col("vertex").alias(id_col)
     )
-    return all_docs.join(losers, id_col, "left_anti")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertex_col: str = "vertex",
-    component_col: str = "component",
-    max_rounds: int = 40,
-    use_local_checkpoint: bool = True,
-    round_stats: list | None = None,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star EDGE
-    REWIRING — the published MapReduce formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14), with the
-    O(log^2 n) round guarantee the label-propagation spelling in
-    ``connected_components`` lacks on adversarial graphs (r9
-    measurement: 26 hop rounds on the sf0.1 levenshtein name graph's
-    ~190-vertex id-uncorrelated chains, because min labels travel one
-    EDGE per round there; star rounds REWIRE edges toward local
-    minima, so distances shrink multiplicatively and the edge set
-    itself contracts as it converges — each round's shuffle gets
-    CHEAPER, the property that matters at 100 TB edge scales).
-
-    Per round over the undirected edge set E (self-loops dropped):
-      large-star: for each node u with neighborhood G(u), m =
-        min(G(u) ∪ {u}); replace the edges to u's LARGER neighbors
-        with (x, m) for x in G(u), x > u.
-      small-star: canonicalize each edge to (larger, smaller); for
-        each u over its smaller neighbors G-(u), m = min(G-(u) ∪ {u});
-        emit (x, m) for x in (G-(u) ∪ {u}) \\ {m}.
-    Both preserve connectivity (proved in the paper); the fixpoint is
-    a star forest whose roots are component minima. Convergence is
-    certified by the same double-digest trick ``connected_components``
-    uses, over the canonical edge set.
-
-    Same contract as ``connected_components``: one row per vertex that
-    appears in ``edges``; component = minimum vertex id; singletons not
-    emitted; ids orderable and non-null.
-
-    ``round_stats`` (r10, the soak instrumentation): pass a list and
-    each completed round appends ``{"round", "edges", "seconds"}``
-    where ``edges`` is the rewired edge-set size AFTER the round —
-    the contraction curve is the 100 TB property the soak certifies
-    (each round's shuffle gets cheaper). Costs one count() action per
-    round; leave None in production."""
-    # r12 (guide §2.4/§5): persist the normalized edge input — it is
-    # read THREE times (the vertex set unions both endpoint columns, and
-    # e filters self-loops), so without the cache the caller's whole
-    # upstream edge pipeline (for entity_resolution_parts: the blocked
-    # levenshtein self-join + three hash joins) re-executed once per
-    # branch. Same pattern the jump spelling always used for `sym`.
-    # Released with verts/e at every exit below.
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col("u").isNotNull() & F.col("v").isNotNull()
-    ).persist()
-    # vertex set BEFORE dropping self-loops: a vertex appearing only in
-    # a self-loop is a singleton that must still get a row (the
-    # connected_components contract)
-    verts = (
-        raw.select(F.col("u").alias("x"))
-        .union(raw.select(F.col("v").alias("x")))
-        .distinct()
-    )
-    e = raw.filter(F.col("u") != F.col("v")).distinct()
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        # same lineage-truncation + stats-grounding pairing as
-        # connected_components (localCheckpoint inherits ESTIMATED
-        # sizes; persist substitutes real ones into later plans).
-        # r11: eager=False — the edge digest (or, for verts, the final
-        # labels join) is the first job over the frame and performs the
-        # checkpoint + cache fill inside itself, saving one eager
-        # materialization job per round (see connected_components).
-        # CONTRACT: caller must run an action on the returned frame
-        # before unpersisting its inputs (see connected_components).
-        # Upheld here: each round's edge digest precedes
-        # prev_e.unpersist(), and the final labels join over verts/e
-        # is eager-checkpointed before either unpersists.
-        if PLAN_AUDIT_HOOK is not None:
-            PLAN_AUDIT_HOOK(df)
-        cp = (
-            df.localCheckpoint(eager=False)
-            if use_local_checkpoint
-            else df.checkpoint(eager=True)
-        )
-        return cp.persist()
-
-    verts = _materialize(verts)
-    e = _materialize(e)
-
-    def _edge_digest(df: DataFrame) -> tuple:
-        # hash BOTH endpoints into one column first — digesting a
-        # single side could certify a changed edge set whose one-sided
-        # multiset happened to match
-        return tuple(
-            df.select(F.xxhash64("u", "v").alias("comp"))
-            .agg(*_label_digests())
-            .collect()[0]
-        )
-
-    # r12 (guide §1/§2: fewer passes): no standalone pre-loop digest —
-    # round 1's digest job materializes e's lazy checkpoint anyway, so
-    # the loop compares round k against round k-1 instead. A graph that
-    # is already a fixpoint pays one extra (cheap, contracted) round;
-    # every other graph saves exactly one job. Termination and fixpoint
-    # are unchanged: the loop still stops precisely when a round leaves
-    # the canonical edge set untouched.
-    prev: tuple | None = None
-
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.select("u", "v").union(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    import time as _time
-
-    for _round in range(max_rounds):
-        _t0 = _time.perf_counter()
-        # ---- large-star -------------------------------------------------
-        sym = _sym(e)
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        # every edge is processed exactly once, at its SMALLER
-        # endpoint's star: (u, v) with v > u becomes (v, m(u)) — the
-        # original edge is REPLACED, not kept (the paper's operation;
-        # connectivity is preserved because u's own link to m(u) is an
-        # existing edge processed at m(u)'s star)
-        ls = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # r12 (guide §2.4): NO mid-round distinct — the large-star
-        # output flows into small-star as a multiset. m2 is a MIN, so
-        # duplicate rows cannot change it, and the round's final
-        # distinct collapses duplicate emissions; the round's edge SET
-        # (what the digest certifies and the next round consumes) is
-        # identical, one full exchange + dedup pass per round cheaper.
-        e1 = ls.where(F.col("u") != F.col("v"))
-        # ---- small-star -------------------------------------------------
-        canon = e1.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m2 = canon.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        joined = canon.join(m2, "u")
-        # r11 (guide §2.4): ONE distinct instead of two back-to-back.
-        # Every small-star output is already canonically ordered —
-        # (v, m) has m <= v (m is the min over G-(u) ∪ {u} ∋ v) and
-        # (u, m) has m <= v < u — so the old `ss.distinct()` followed
-        # by `.select(greatest, least).distinct()` deduped an
-        # identical row set twice: one full exchange + dedup pass per
-        # round, pure waste. The greatest/least canonicalization is
-        # kept (it is a free projection and pins the invariant the
-        # digest relies on); the dedup runs once, on the canonical
-        # form.
-        ss = (
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(joined.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-        )
-        prev_e = e
-        e = _materialize(
-            ss.select(
-                F.greatest("u", "v").alias("u"),
-                F.least("u", "v").alias("v"),
-            ).distinct()
-        )
-        new = _edge_digest(e)
-        prev_e.unpersist()
-        if round_stats is not None:
-            round_stats.append(
-                {
-                    "round": _round + 1,
-                    "edges": e.count(),
-                    "seconds": round(_time.perf_counter() - _t0, 3),
-                }
-            )
-        if prev is not None and new == prev:
-            break
-        prev = new
-    else:
-        # release ALL cached frames before raising — leaving the last
-        # round's edge set persisted holds executor storage until
-        # session GC (r9 advice)
-        raw.unpersist()
-        verts.unpersist()
-        e.unpersist()
-        raise RuntimeError(
-            f"connected_components_star did not converge in "
-            f"{max_rounds} rounds"
-        )
-    # fixpoint: a star forest (u -> component min). Roots appear only
-    # on the v side; every vertex from the ORIGINAL edge set gets a row
-    # (roots label themselves).
-    labels = (
-        verts.join(e, verts["x"] == e["u"], "left")
-        .select(
-            F.col("x").alias(vertex_col),
-            F.coalesce(F.col("v"), F.col("x")).alias(component_col),
-        )
-    )
-    out = labels.localCheckpoint(eager=True)
-    raw.unpersist()
-    verts.unpersist()
-    e.unpersist()
+    out = all_docs.join(losers, id_col, "left_anti")
+    out._cached_deps = comps._cached_deps
     return out

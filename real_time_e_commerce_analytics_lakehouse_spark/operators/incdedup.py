@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_e_commerce_analytics_lakehouse_spark.functions import textexpr as tx
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_cached,
+)
 from real_time_e_commerce_analytics_lakehouse_spark.tables import LakeTable
 
 
@@ -159,8 +162,7 @@ def ingest_batch(
             index.overwrite(nb)
     finally:
         nb.unpersist()
-        for dep in getattr(nb, "_cached_deps", []):
-            dep.unpersist()
+        release_cached(nb)
     # the caller releases the result's own cache when done
     # (operators.simsearch.release_cached) — previously it leaked one
     # cached pair frame per ingest in a long-lived session

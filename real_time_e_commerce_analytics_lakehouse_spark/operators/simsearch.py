@@ -115,13 +115,25 @@ def cosine_topk_vectorized(
     )
 
 
+def release_frame(df: DataFrame) -> None:
+    """Free everything materializing ``df`` pinned, on both layers: its
+    cache entry (``persist``) and, when ``df`` is a local checkpoint
+    (analyzed plan = ``LogicalRDD``), the checkpoint's persisted
+    blocks, which ``unpersist()`` leaves in place until the session
+    ends. Safe on a frame that was never materialized."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def release_cached(df: DataFrame) -> None:
-    """Unpersist the cache leases an operator attached to its result
+    """Release the leases an operator attached to its result
     (`_cached_deps`) — call after the consuming ACTION completes.
     VERDICT r3 wrong #4: persist without unpersist accumulates cached
     frames across a long-lived session."""
     for c in getattr(df, "_cached_deps", []):
-        c.unpersist()
+        release_frame(c)
 
 
 def semantic_dedup_flags(

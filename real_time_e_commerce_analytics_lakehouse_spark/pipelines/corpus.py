@@ -149,6 +149,7 @@ def curate(
         comps = connected_components(
             verified.select("doc_a", "doc_b"), src="doc_a", dst="doc_b"
         )
+        cached_deps.extend(comps._cached_deps)
         to_drop = comps.filter(F.col("vertex") != F.col("component")).select(
             F.col("vertex").alias(id_col)
         )

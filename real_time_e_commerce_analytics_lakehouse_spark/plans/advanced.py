@@ -519,7 +519,7 @@ def scd2_dimension_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transitive clustering -> canonicalization): nation-blocked "
         "Levenshtein<=1 name pairs (fuzzy_customer_pairs' verify join) "
         "feed distributed connected components (operators/graph.py "
-        "pointer jumping), and each entity cluster elects a canonical "
+        "star rewiring), and each entity cluster elects a canonical "
         "record (min custkey / min name). Pairwise match alone "
         "mis-handles A~B, B~C chains — the clustering step is what "
         "makes the output an ENTITY table. Oracle = recursive-CTE "
@@ -540,7 +540,7 @@ def customer_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         vertex_col="c_custkey", component_col="entity_id",
     )
     customer = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
+    out = (
         comp.join(customer, "c_custkey")
         .groupBy("entity_id")
         .agg(
@@ -549,3 +549,5 @@ def customer_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("c_name").alias("canonical_name"),
         )
     )
+    out._cached_deps = comp._cached_deps
+    return out

@@ -947,7 +947,7 @@ def _bfs_sql() -> str:
         f"Breadth-first shortest hop distances ({BFS_ROUNDS} synchronous "
         "rounds) from the lowest-id part over the co-purchase graph — "
         "the graph-traversal sibling of copurchase_pagerank (value "
-        "iteration) and neardup_clusters (pointer jumping): frontier "
+        "iteration) and neardup_clusters (star rewiring): frontier "
         "expansion as a bounded join/agg chain, the recursive-CTE "
         "workload expressed Spark-native. Each round is ONE shuffle "
         "(frontier ⋈ edges on src, re-min on node); the frontier frame "

@@ -31,24 +31,7 @@ from real_time_e_commerce_analytics_lakehouse_spark.plans.registry import regist
 BPE_ROUNDS = 3
 
 
-def _words0_sql(d: str, source: str = "documents") -> str:
-    """The double-spaced distinct-word table as a standalone statement —
-    byte-identical text to _bpe_chain's words0 CTE, split out so the
-    engine can materialize it once (see _bpe_chain's words0_rel)."""
-    if d == "spark":
-        spaced = "regexp_replace(word, '(.)', ' $1 ')"
-        toks = f"explode({tx.tokens('text', 'spark')})"
-    else:
-        spaced = r"regexp_replace(word, '(.)', ' \1 ', 'g')"
-        toks = f"unnest({tx.tokens('text', 'duck')})"
-    return f"""
-        SELECT word, count(*) AS wn, {spaced} AS s
-        FROM (SELECT {toks} AS word FROM {source})
-        GROUP BY word
-    """
-
-
-def _bpe_chain(d: str, source: str = "documents", words0_rel: str | None = None) -> str:
+def _bpe_chain(d: str, source: str = "documents") -> str:
     if d == "spark":
         spaced = "regexp_replace(word, '(.)', ' $1 ')"
         toks = f"explode({tx.tokens('text', 'spark')})"
@@ -75,20 +58,12 @@ def _bpe_chain(d: str, source: str = "documents", words0_rel: str | None = None)
             FROM (SELECT wn, string_split(trim(s), '  ') AS a FROM {src})
         ) GROUP BY p.l, p.r"""
 
-    if words0_rel is None:
-        sql = f"""
+    sql = f"""
     WITH words0 AS (
         SELECT word, count(*) AS wn, {spaced} AS s
         FROM (SELECT {toks} AS word FROM {source})
         GROUP BY word
     )"""
-    else:
-        # r12 (guide §2.4/§5): the engine materializes words0 once
-        # behind a persisted temp view; each merge round's pair count
-        # AND the final encode read the cache instead of re-inlining
-        # the tokenize + groupBy(word) subtree per CTE reference.
-        sql = f"""
-    WITH words0 AS (SELECT * FROM {words0_rel})"""
     for k in range(1, BPE_ROUNDS + 1):
         prev = f"words{k - 1}"
         sql += f""",
@@ -115,9 +90,7 @@ def _bpe_sql(d: str, source: str = "documents") -> str:
     return _bpe_chain(d, source) + "\n    " + finals
 
 
-def _bpe_encode_sql(
-    d: str, source: str = "documents", words0_rel: str | None = None
-) -> str:
+def _bpe_encode_sql(d: str, source: str = "documents") -> str:
     """Apply the learned merge table to the corpus itself: every doc's
     words join the (already-merged) vocabulary encodings on the WORD
     blocking key, then aggregate per doc — training and application in
@@ -128,7 +101,7 @@ def _bpe_encode_sql(
     else:
         toks = f"unnest({tx.tokens('text', 'duck')})"
         nsym = "len(string_split(trim(s), '  '))"
-    return f"""{_bpe_chain(d, source, words0_rel=words0_rel)},
+    return f"""{_bpe_chain(d, source)},
     doc_words AS (
         SELECT doc_id, {toks} AS word FROM {source}
     ),
@@ -198,11 +171,10 @@ def learn_bpe_merges(docs: DataFrame, text_col: str = "text") -> DataFrame:
     tags=("documents", "text"),
 )
 def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: a persisted words0 vocabulary frame (the pagerank recipe,
-    # via words0_rel=...) was tried and measured WORSE at sf0.1
-    # (1.33 s -> 1.45 s steady): AQE reuses the identical groupBy(word)
-    # shuffle stages at runtime, so the persist only added the cache
-    # materialization. Kept on the plain spelling; the words0_rel hook
-    # remains (OPTIMIZATION_r12.md).
+    # r12: a persisted words0 vocabulary frame (the pagerank recipe)
+    # was tried and measured WORSE at sf0.1 (1.33 s -> 1.45 s steady):
+    # AQE reuses the identical groupBy(word) shuffle stages at runtime,
+    # so the persist only added the cache materialization
+    # (OPTIMIZATION_r12.md).
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(_bpe_encode_sql("spark"))

@@ -1279,8 +1279,8 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Duplicate-cluster resolution: transitive closure of the "
         "Jaccard-verified near-dup pairs via distributed connected "
-        "components (operators/graph.py: min-label propagation with "
-        "pointer jumping, O(log diameter) join rounds). cluster_id = min "
+        "components (operators/graph.py: large-star/small-star edge "
+        "rewiring, O(log^2 n) join rounds). cluster_id = min "
         "doc_id of the cluster — the canonical survivor. The oracle is "
         "DuckDB's recursive CTE over the same pairs; the fixpoint is "
         "unique, so the comparison is hash-exact. This is the step "

@@ -58,23 +58,9 @@ def _features_sql(d: str) -> str:
     """
 
 
-def _gd_sql(d: str, feats_rel: str | None = None) -> str:
-    """``feats_rel`` (r12, guide §2.4/§5): the engine passes a temp-view
-    name over a PERSISTED feature frame, so the tokenize-heavy feature
-    scan materializes once instead of being re-inlined into every
-    gradient round's CTE reference (Spark inlines plain CTEs; the r12
-    before-plan carries 4 copies of the feature subtree). The oracle
-    keeps the self-contained CTE (DuckDB CTEs are its own concern).
-    Downstream SQL text is identical either way, so the weight
-    trajectory is bit-identical."""
-    if feats_rel is None:
-        feats = _features_sql(d)
-        sql = f"""
-    WITH feats AS ({feats}),"""
-    else:
-        sql = f"""
-    WITH feats AS (SELECT * FROM {feats_rel}),"""
-    sql += """
+def _gd_sql(d: str) -> str:
+    sql = f"""
+    WITH feats AS ({_features_sql(d)}),
     n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM feats),
     w0 AS (SELECT CAST(0 AS DOUBLE) AS b, CAST(0 AS DOUBLE) AS w1,
                   CAST(0 AS DOUBLE) AS w2, CAST(0 AS DOUBLE) AS w3)"""
@@ -128,14 +114,13 @@ def _gd_sql(d: str, feats_rel: str | None = None) -> str:
     tags=("documents", "ml", "agg"),
 )
 def logreg_quality_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: a persisted fanned-out feature frame (the pagerank recipe,
-    # via _gd_sql(feats_rel=...)) was tried and measured WORSE at sf0.1
-    # (0.89 s -> 1.49 s steady): the 4 inline copies of the row-local
-    # feature subtree pipeline inside each aggregation stage, while the
+    # r12: a persisted fanned-out feature frame (the pagerank recipe)
+    # was tried and measured WORSE at sf0.1 (0.89 s -> 1.49 s steady):
+    # the 4 inline copies of the row-local feature subtree pipeline
+    # inside each aggregation stage, while the
     # persist adds a materialization barrier + cache write for a
     # 5000-row frame — the same finding as the r11 nb_lang persist
-    # revert. Kept on the plain spelling; the feats_rel hook remains
-    # for genuinely large corpora (see OPTIMIZATION_r12.md).
+    # revert (see OPTIMIZATION_r12.md).
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(_gd_sql("spark"))
 
@@ -252,7 +237,7 @@ _ALS_RATINGS_SQL = """
     """
 
 
-def _als_sql(r_rel: str | None = None) -> str:
+def _als_sql() -> str:
     """Rank-1 alternating least squares on the customer x part quantity
     matrix — valid in both dialects. Ratings are integer-valued (exact
     in any summation order); each alternation's products are ROUNDED
@@ -261,17 +246,9 @@ def _als_sql(r_rel: str | None = None) -> str:
     engine's own rounding mode, which flipped 3 of 61k factors in the
     9th decimal at sf0.1; found by the r9 full-suite sf0.1 run), and
     the emitted factor rounds to 6 decimals so the remaining pure-IEEE
-    ratio carries no boundary sensitivity into the value hash.
-
-    ``r_rel`` (r12, guide §2.4/§5): the engine passes a temp-view name
-    over a PERSISTED ratings frame so the lineitem ⋈ orders + groupBy
-    subtree materializes once instead of being re-inlined into all
-    three alternation references (the r12 before-plan carries three
-    verbatim copies). Downstream SQL is byte-identical, so the learned
-    factors are unchanged."""
-    r_cte = f"({_ALS_RATINGS_SQL})" if r_rel is None else f"(SELECT * FROM {r_rel})"
+    ratio carries no boundary sensitivity into the value hash."""
     return f"""
-    WITH r AS {r_cte},
+    WITH r AS ({_ALS_RATINGS_SQL}),
     u1 AS (
         SELECT c, CAST(sum(r) AS DOUBLE) / count(*) AS u
         FROM r GROUP BY c
@@ -315,12 +292,11 @@ def _als_sql(r_rel: str | None = None) -> str:
     tags=("ml", "join", "agg", "analytics"),
 )
 def rank1_mf_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: a persisted ratings frame (the pagerank recipe, via
-    # _als_sql(r_rel=...)) was tried and measured WORSE at sf0.1
-    # (2.33 s -> 3.58 s steady): AQE reuses the three identical ratings
+    # r12: a persisted ratings frame (the pagerank recipe) was tried
+    # and measured WORSE at sf0.1 (2.33 s -> 3.58 s steady): AQE reuses the three identical ratings
     # shuffle stages at runtime anyway, so the persist only added a
-    # 600k-row cache materialization + columnar round-trip. Kept on the
-    # plain spelling; the r_rel hook remains (OPTIMIZATION_r12.md).
+    # 600k-row cache materialization + columnar round-trip
+    # (OPTIMIZATION_r12.md).
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_als_sql())

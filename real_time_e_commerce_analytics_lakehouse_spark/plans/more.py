@@ -1056,7 +1056,7 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
     )
     comp = connected_components(edges, vertex_col="v", component_col="comp")
-    return (
+    out = (
         p.join(gmin, ["blk", "nm"])
         .join(comp, F.col("gid") == F.col("v"), "left")
         .select(
@@ -1066,3 +1066,5 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("entity_id"),
         )
     )
+    out._cached_deps = comp._cached_deps
+    return out

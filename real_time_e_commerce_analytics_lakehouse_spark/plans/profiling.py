@@ -350,7 +350,7 @@ def daily_revenue_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy(BUCKET).orderBy("__day").rowsBetween(-7, 0)
     lst = F.collect_list("day_rev").over(w)
     ewma = F.aggregate(lst, F.lit(0.0), lambda acc, v: acc / 2 + v)
-    return (
+    out = (
         aug.select(
             "order_date",
             CARRIED,
@@ -360,6 +360,8 @@ def daily_revenue_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(~F.col(CARRIED))
         .drop(CARRIED)
     )
+    out._cached_deps = getattr(aug, "_cached_deps", [])
+    return out
 
 
 @register(
@@ -410,7 +412,7 @@ def trailing_7d_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = carried_rows_buckets(daily, "__day", k_back=6)
     w = Window.partitionBy(BUCKET).orderBy("__day").rowsBetween(-6, 0)
     win = F.sort_array(F.collect_list("day_rev").over(w))
-    return (
+    out = (
         aug.select(
             "order_date",
             CARRIED,
@@ -423,6 +425,8 @@ def trailing_7d_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(~F.col(CARRIED))
         .drop(CARRIED)
     )
+    out._cached_deps = getattr(aug, "_cached_deps", [])
+    return out
 
 
 @register(

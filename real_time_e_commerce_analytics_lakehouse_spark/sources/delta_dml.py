@@ -49,6 +49,9 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_frame,
+)
 from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
     _DELTA_DIR,
     DeltaSnapshot,
@@ -445,7 +448,9 @@ def _generate_identity(
     per-Spark-partition counts -> prefix offsets (driver sees one row
     per partition, never data) -> per-partition row_number. No global
     single-reducer window; the ids are contiguous and unique. Returns
-    (df with the column, new high-water mark).
+    (df with the column, new high-water mark). The result leases the
+    checkpointed frame it reads (`_cached_deps`): release it once the
+    write that consumes the result has run.
 
     The tagged frame is ``localCheckpoint``-ed (eager) BEFORE the count
     job: both jobs then read the same materialized blocks, so the
@@ -475,6 +480,7 @@ def _generate_identity(
         offsets[i] = acc
         acc += counts[i]
     if not offsets:
+        release_frame(tagged)  # no rows: nothing will read it
         return df.withColumn(name, F.lit(None).cast(dtype)), base
     omap = F.create_map(
         *[x for i in offsets for x in (F.lit(i), F.lit(offsets[i]))]
@@ -503,26 +509,29 @@ def _generate_identity(
     out = tagged.withColumn(
         name, (F.lit(base) + k * F.lit(step)).cast(dtype)
     ).drop("__id_pid")
+    out._cached_deps = [tagged]
     return out, base + total * step
 
 
 def _apply_identity(
     df: DataFrame, snap: DeltaSnapshot
-) -> tuple[DataFrame, dict[str, int]]:
+) -> tuple[DataFrame, dict[str, int], list[DataFrame]]:
     """Fill / validate identity columns on rows being INSERTED:
     a column absent from ``df`` is GENERATED (fresh values above the
     high-water mark, aligned to start/step); a column present must have
     ``allowExplicitInsert`` (GENERATED BY DEFAULT) — its water mark
     then SYNCs to the furthest explicit value in the step's direction.
-    Returns (df covering every table column, {column: new hwm})."""
+    Returns (df covering every table column, {column: new hwm},
+    checkpointed frames to release_frame after the consuming write)."""
     specs = _identity_specs(snap)
     if not specs:
-        return df, {}
+        return df, {}, []
     dtypes = {
         f.name: f.dataType.simpleString()
         for f in snap.spark_schema().fields
     }
     new_hwm: dict[str, int] = {}
+    leases: list[DataFrame] = []
     for name, sp in specs.items():
         step = sp["step"]
         if name in df.columns:
@@ -547,9 +556,10 @@ def _apply_identity(
             continue
         base = sp["hwm"] if sp["hwm"] is not None else sp["start"] - step
         df, hwm = _generate_identity(df, name, dtypes[name], base, step)
+        leases += getattr(df, "_cached_deps", [])
         if hwm != base:
             new_hwm[name] = hwm
-    return df, new_hwm
+    return df, new_hwm, leases
 
 
 def _identity_metadata_action(
@@ -752,21 +762,27 @@ def insert_delta(spark: SparkSession, path: str, df: DataFrame) -> dict:
     contiguous range."""
     snap = DeltaSnapshot(path)
     _guard_writable(snap, overwrite=False, enforce_constraints=True)
-    df, new_hwms = _apply_identity(df, snap)
-    cols = [f.name for f in snap.spark_schema().fields]
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"insert lacks table columns {missing}")
-    adds = _stage_data_files(df.select(*cols), path, list(snap.partition_cols), snap)
-    cdcs = (
-        _stage_cdc_files(
-            df.select(*cols).withColumn("_change_type", F.lit("insert")),
-            path,
-            snap,
+    df, new_hwms, id_leases = _apply_identity(df, snap)
+    try:
+        cols = [f.name for f in snap.spark_schema().fields]
+        missing = [c for c in cols if c not in df.columns]
+        if missing:
+            raise ValueError(f"insert lacks table columns {missing}")
+        adds = _stage_data_files(
+            df.select(*cols), path, list(snap.partition_cols), snap
         )
-        if _cdf_enabled(snap)
-        else []
-    )
+        cdcs = (
+            _stage_cdc_files(
+                df.select(*cols).withColumn("_change_type", F.lit("insert")),
+                path,
+                snap,
+            )
+            if _cdf_enabled(snap)
+            else []
+        )
+    finally:
+        for f in id_leases:
+            release_frame(f)
     n = sum(a[2] for a in adds)
     v = _commit_dml(
         path,
@@ -1273,6 +1289,7 @@ def merge_delta(
             )
     tgt = _scan_with_file(spark, path, snap)
     id_hwms: dict[str, int] = {}
+    id_leases: list[DataFrame] = []
     ins_cols = [c for c in cols if c not in gen_ids]
     inserts = (
         src.select(*ins_cols).join(
@@ -1284,7 +1301,7 @@ def merge_delta(
     n_ins = inserts.count() if inserts is not None else 0
     if inserts is not None and id_specs:
         # generate absent identity values / validate+sync explicit ones
-        inserts, id_hwms = _apply_identity(inserts, snap)
+        inserts, id_hwms, id_leases = _apply_identity(inserts, snap)
         inserts = inserts.select(*cols)
     updated = kept = pre = post = None
     nmbs_upd = nmbs_cdc = None
@@ -1560,6 +1577,8 @@ def merge_delta(
             for p in parts[1:]:
                 cdc = cdc.unionByName(p)
             cdcs = _stage_cdc_files(cdc, path, snap)
+    for f in id_leases:  # both writes that read the identity rows ran
+        release_frame(f)
     v = _commit_dml(
         path,
         snap.version,

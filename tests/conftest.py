@@ -21,3 +21,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def cache_held(spark):
+    """Callable returning what the session holds on the two layers an
+    operator must release: (cached frames in the CacheManager, ids of
+    persistent RDDs — cache blocks and local-checkpoint blocks)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    return lambda: (cm.numCachedEntries(), set(jsc.getPersistentRDDs().keys()))

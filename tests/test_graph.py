@@ -11,6 +11,9 @@ from real_time_e_commerce_analytics_lakehouse_spark.operators.graph import (
     connected_components,
     resolve_duplicate_clusters,
 )
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_cached,
+)
 
 
 def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -35,18 +38,25 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {v: comp_min[find(v)] for v in parent}
 
 
-def _cc(spark, edges):
+def _cc(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r.vertex: r.component
-        for r in connected_components(df, max_rounds=12).collect()
-    }
+    out = connected_components(df, **kw)
+    got = {r.vertex: r.component for r in out.collect()}
+    release_cached(out)
+    return got
+
+
+def _clear(spark):
+    """Empty both layers: cached frames and persistent RDDs."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
 
 
 def test_connected_components_chain_and_star(spark):
     # chain 1-2-3 (transitive), star 10<-11,12, singleton pair (20,21)
     edges = [(1, 2), (2, 3), (11, 10), (12, 10), (20, 21)]
-    assert _cc(spark, edges) == {
+    assert _cc(spark, edges, max_rounds=12) == {
         1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20,
     }
 
@@ -57,10 +67,10 @@ def test_connected_components_empty(spark):
 
 
 def test_connected_components_long_path_pointer_jumping(spark):
-    # a 14-vertex path has diameter 13; pointer jumping must converge
+    # a 14-vertex path has diameter 13; star rewiring must converge
     # well inside max_rounds=12 (one-hop propagation alone would not)
     edges = [(i, i + 1) for i in range(13)]
-    got = _cc(spark, edges)
+    got = _cc(spark, edges, max_rounds=12)
     assert got == {v: 0 for v in range(14)}
 
 
@@ -76,9 +86,8 @@ def test_connected_components_long_path_pointer_jumping(spark):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@pytest.mark.soak  # r12: soak-style; default run deselects (pytest.ini)
 def test_connected_components_model(spark, edges):
-    assert _cc(spark, edges) == _union_find_components(edges)
+    assert _cc(spark, edges, max_rounds=12) == _union_find_components(edges)
 
 
 def test_resolve_duplicate_clusters_is_transitive(spark):
@@ -87,50 +96,77 @@ def test_resolve_duplicate_clusters_is_transitive(spark):
     # keeps only the cluster minimum, 1.
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(1, 6)], "doc_id long, text string")
     pairs = spark.createDataFrame([(1, 3), (2, 3)], "doc_a long, doc_b long")
-    kept = sorted(
-        r.doc_id for r in resolve_duplicate_clusters(pairs, docs).collect()
-    )
+    survivors = resolve_duplicate_clusters(pairs, docs)
+    kept = sorted(r.doc_id for r in survivors.collect())
+    release_cached(survivors)
     assert kept == [1, 4, 5]  # 2 and 3 fold into cluster 1; singletons survive
 
 
 def test_connected_components_nonconvergence_raises(spark):
     df = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_rounds=2, algorithm="jump")
+        connected_components(df, max_rounds=2)
 
 
-def test_nonconvergence_raise_unpersists_everything(spark):
-    """r9 advice: the non-convergence raise paths used to leak cached
-    frames (star left the last edge set persisted; jump left the last
-    labels), pinning executor storage until session GC. Both paths must
-    leave the DataFrame cache manager exactly as empty as before."""
-    from real_time_e_commerce_analytics_lakehouse_spark.operators.graph import (
-        connected_components_star,
-    )
-
+def test_nonconvergence_raise_unpersists_everything(spark, cache_held):
+    """The non-convergence raise must leave nothing behind on either
+    layer: no cached frame (r9 advice: the last edge set stayed
+    persisted) and no local-checkpoint blocks."""
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "src long, dst long"
     )
-    spark.catalog.clearCache()
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    for run in (
-        lambda: connected_components(df, max_rounds=2, algorithm="jump"),
-        lambda: connected_components_star(df, max_rounds=1),
-    ):
+    _clear(spark)
+    for rounds in (1, 2):
         with pytest.raises(RuntimeError, match="did not converge"):
-            run()
-        assert cache_mgr.isEmpty(), "cached frame leaked on raise path"
+            connected_components(df, max_rounds=rounds)
+        # no cached frame, no persistent RDD (checkpoint blocks)
+        assert cache_held() == (0, set())
 
 
-@pytest.mark.soak  # r12: soak-style; default run deselects (pytest.ini)
-def test_star_and_jump_agree(spark):
-    """r9: connected_components dispatches to the large-star/small-star
-    edge-rewiring algorithm by default (published O(log^2 n) bound,
-    measured 5x faster on the sf0.1 name graph); the jump spelling is
-    retained as the equivalence witness. Both must emit the identical
-    fixpoint on every structure class, including the contract edges:
-    self-loop-only vertices are singletons, permuted ids, duplicate
-    and reversed edges."""
+def test_round_failure_releases_everything(spark, cache_held):
+    """A job failing inside round 1 (a Python UDF in the edge input
+    raises when the first digest runs the pipeline) must release every
+    frame materialized so far on both layers."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def explode_on_7(x):
+        if x == 7:
+            raise ValueError("edge source failed mid-round")
+        return x
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "src long, dst long"
+    ).withColumn("src", explode_on_7("src"))
+    _clear(spark)
+    # PythonException when the UDF error is the job failure's direct
+    # cause, Py4JJavaError when Spark wraps it deeper (varies by stage)
+    with pytest.raises(
+        (PythonException, Py4JJavaError), match="edge source failed mid-round"
+    ):
+        connected_components(df)
+    assert cache_held() == (0, set())
+
+
+def test_result_lease_frees_checkpoint(spark, cache_held):
+    """The result is a local checkpoint whose lease rides `_cached_deps`:
+    releasing it after the action returns the session to where it was."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+    before = cache_held()
+    out = connected_components(df)
+    assert out.count() == 5
+    assert cache_held() != before  # the output checkpoint is held...
+    release_cached(out)
+    assert cache_held() == before  # ...until the lease is released
+
+
+def test_star_matches_model_on_contract_cases(spark):
+    """The large-star/small-star fixpoint equals the union-find model on
+    every structure class, including the contract edges: self-loop-only
+    vertices are singletons, permuted ids, duplicate and reversed
+    edges."""
     import random
 
     rnd = random.Random(13)
@@ -146,15 +182,27 @@ def test_star_and_jump_agree(spark):
         ],
     }
     for name, edges in cases.items():
-        df = spark.createDataFrame(edges, "src long, dst long")
-        star = {
-            (r.vertex, r.component)
-            for r in connected_components(df, algorithm="star").collect()
-        }
-        jump = {
-            (r.vertex, r.component)
-            for r in connected_components(df, algorithm="jump").collect()
-        }
-        assert star == jump, name
-        model = _union_find_components(edges)
-        assert {v: c for v, c in star} == model, name
+        assert _cc(spark, edges) == _union_find_components(edges), name
+
+
+def test_star_cc_multiround_with_multiedges(spark):
+    """Two long chains with shuffled ids (several star rounds) plus
+    duplicate and reversed edges and a self-loop singleton: the
+    per-round single distinct keeps the fixpoint, and the round stats
+    report the contraction down to a star forest."""
+    import random
+
+    rnd = random.Random(7)
+    ids = list(range(1, 81))
+    rnd.shuffle(ids)
+    chain1 = [(ids[i], ids[i + 1]) for i in range(0, 39)]
+    chain2 = [(ids[i], ids[i + 1]) for i in range(40, 79)]
+    edges = chain1 + chain2 + [(b, a) for a, b in chain1[:10]] + chain1[:5]
+    edges += [(999, 999)]  # self-loop-only vertex -> singleton
+    stats: list[dict] = []
+    got = _cc(spark, edges, round_stats=stats)
+    assert got == _union_find_components(edges)
+    assert len(set(got.values())) == 3  # two chains + the 999 singleton
+    assert len(stats) > 2
+    # a star forest has one edge per non-root vertex: 81 - 3
+    assert stats[-1]["edges"] == len(got) - 3

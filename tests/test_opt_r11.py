@@ -1,20 +1,15 @@
-"""Round-11 optimization pins: operator internals that changed for
+"""Round-11 optimization pin: an operator internal that changed for
 performance must compute exactly what the old spelling computed.
 
-- _copurchase_pairs: basket-array pair generation (one groupBy + array
-  comprehension) replaced the distinct + self-join spelling (guide
-  §2.3/§2.4). Pinned against a literal re-implementation of the old
-  self-join over a frame with duplicate lines, singleton baskets, and
-  a wide basket.
-- connected_components_star: the per-round double-distinct fold (ONE
-  dedup of already-canonical small-star outputs) must preserve the
-  fixpoint — exercised here on a graph that needs several rounds plus
-  duplicate/reversed multi-edges (test_graph.py pins the rest).
+_copurchase_pairs: basket-array pair generation (one groupBy + array
+comprehension) replaced the distinct + self-join spelling (guide
+§2.3/§2.4). Pinned against a literal re-implementation of the old
+self-join over a frame with duplicate lines, singleton baskets, and a
+wide basket.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -78,40 +73,3 @@ def test_basket_pairs_match_old_selfjoin_spelling(spark, tmp_path):
         assert _rowset(op_new) == _rowset(op_old)
         # one basket row per distinct order
         assert baskets.count() == 4
-
-
-@pytest.mark.soak  # r12: soak-style; default run deselects (pytest.ini)
-def test_star_cc_multiround_with_multiedges(spark):
-    from real_time_e_commerce_analytics_lakehouse_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    # two long chains with shuffled ids (forces >1 star round) plus
-    # duplicate + reversed edges and a self-loop singleton
-    import random
-
-    rnd = random.Random(7)
-    ids = list(range(1, 81))
-    rnd.shuffle(ids)
-    chain1 = [(ids[i], ids[i + 1]) for i in range(0, 39)]
-    chain2 = [(ids[i], ids[i + 1]) for i in range(40, 79)]
-    edges = chain1 + chain2 + [(b, a) for a, b in chain1[:10]] + chain1[:5]
-    edges += [(999, 999)]  # self-loop-only vertex -> singleton
-    df = spark.createDataFrame(edges, "src long, dst long")
-
-    star = {
-        (r["vertex"], r["component"])
-        for r in connected_components_star(df).collect()
-    }
-    jump = {
-        (r["vertex"], r["component"])
-        for r in connected_components(df, algorithm="jump").collect()
-    }
-    assert star == jump
-    # the two chains are distinct components; 999 is its own singleton
-    comps = {}
-    for v, c in star:
-        comps.setdefault(c, set()).add(v)
-    assert (999,) in {tuple(sorted(s)) for s in comps.values()}
-    assert len(comps) == 3

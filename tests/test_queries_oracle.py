@@ -13,9 +13,23 @@ from tools.check_correctness import check
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
-    ok, msg = check(name, sf_dir, spark)
-    assert ok, f"{name}: {msg}"
+def test_query_matches_oracle(name: str, spark, sf_dir: str, cache_held) -> None:
+    """Oracle parity, and the leak gate: once check() has released the
+    builder's leases, the query holds no more cached frames and no more
+    persistent RDDs than the session held before it ran."""
+    frames0, rdds0 = cache_held()
+    try:
+        ok, msg = check(name, sf_dir, spark)
+        assert ok, f"{name}: {msg}"
+        frames, rdds = cache_held()
+        assert frames <= frames0, f"{name} left {frames - frames0} cached frame(s)"
+        assert rdds <= rdds0, f"{name} left persistent RDDs {sorted(rdds - rdds0)}"
+    finally:
+        # clear what this query left so one leak fails one test only
+        spark.catalog.clearCache()
+        for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
+            if rid not in rdds0:
+                rdd.unpersist(False)
 
 
 def test_entry_smoke(spark) -> None:

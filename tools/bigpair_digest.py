@@ -49,6 +49,9 @@ def main() -> int:
 
     import duckdb
 
+    from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+        release_cached,
+    )
     from real_time_e_commerce_analytics_lakehouse_spark.plans import QUERIES
     from real_time_e_commerce_analytics_lakehouse_spark.session import (
         TESTDATA_TABLES,
@@ -67,8 +70,7 @@ def main() -> int:
         ]
         t0 = time.time()
         srow = sdf.selectExpr(*exprs).collect()[0]
-        for dep in getattr(sdf, "_cached_deps", []):
-            dep.unpersist()
+        release_cached(sdf)
         spark.catalog.clearCache()
         t_spark = round(time.time() - t0, 1)
 

@@ -22,6 +22,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_cached,
+)
 from real_time_e_commerce_analytics_lakehouse_spark.plans import QUERIES
 from real_time_e_commerce_analytics_lakehouse_spark.session import TESTDATA_TABLES, get_spark
 
@@ -79,13 +82,11 @@ def check(name: str, sf_dir: str, spark) -> tuple[bool, str]:
     try:
         srows = [tuple(r) for r in sdf.collect()]
     finally:
-        # release cache leases + any persists a builder took for its own
-        # multi-action internals: this harness (and the pytest wrapper)
-        # runs the whole registry in ONE session, so an unreleased
-        # persist would stay pinned for every later query (r4 review)
-        for dep in getattr(sdf, "_cached_deps", []):
-            dep.unpersist()
-        spark.catalog.clearCache()
+        # release the builder's cache leases: this harness (and the
+        # pytest wrapper, which asserts nothing stays behind) runs the
+        # whole registry in ONE session, so an unreleased persist would
+        # stay pinned for every later query (r4 review)
+        release_cached(sdf)
     scols = sdf.columns
     if q.oracle is None:
         return True, f"rows-only ({len(srows)} rows)"
@@ -127,6 +128,7 @@ def main() -> int:
             ok, msg = check(name, sf_dir, spark)
         except Exception as e:  # noqa: BLE001
             ok, msg = False, f"EXCEPTION {type(e).__name__}: {e}"
+        spark.catalog.clearCache()  # a leak in one query skews no other
         status = "PASS" if ok else "FAIL"
         print(f"[{status}] {name}: {msg}", flush=True)
         m = re.search(r"\((\d+) rows\)", msg)

@@ -62,7 +62,11 @@ def cc_star_soak(spark, sf_dir: str) -> dict:
     shuffle must get CHEAPER), and wall time. Fixed algorithm, scaled
     graph: the cross-scale exponent of total time is the soak row."""
     from real_time_e_commerce_analytics_lakehouse_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
+    )
+    from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+        release_cached,
+        release_frame,
     )
 
     edges = (
@@ -75,12 +79,13 @@ def cc_star_soak(spark, sf_dir: str) -> dict:
     n_edges = edges.count()
     stats: list[dict] = []
     t0 = time.perf_counter()
-    out = connected_components_star(
+    out = connected_components(
         edges, src="custkey_a", dst="custkey_b", round_stats=stats
     )
     n_verts = out.count()
     total = round(time.perf_counter() - t0, 3)
-    edges.unpersist()
+    release_cached(out)
+    release_frame(edges)
     import math as _m
 
     log2n = _m.log2(max(n_verts, 2))
