@@ -78,57 +78,7 @@ REGRESSION_RATIO = 1.25
 # newest RECORDED round — compared like-for-like is impossible, so they
 # are reported under "workload_changes" (with the note) instead of
 # "regressions". Prune entries once a round records the new workload.
-WORKLOAD_CHANGES: dict[str, str] = {
-    # Prune once a recorded round's baseline includes the new spelling.
-    # (trailing_7d_revenue's r5 carry-partitioned rewrite is now IN the
-    # recorded r5 baseline — entry pruned.)
-    # r6 bench-protocol change (VERDICT r5 wrong #3): run() now drains
-    # each query's cache leases after the action, so steady-state reruns
-    # no longer silently reuse the cold run's persisted intermediates
-    # (and the CacheManager re-cache warnings are gone). The five lease-
-    # attaching headline queries therefore measure a self-contained
-    # execution for the first time — slower vs their recorded r5 numbers
-    # by the cost of actually rebuilding their cached intermediates, not
-    # by any code change. The A/B paired ratios (tools/ab_bench.py) run
-    # both trees under the SAME drained protocol and are the like-for-
-    # like signal.
-    "copurchase_pagerank": (
-        "r6 bench drains cache leases between runs; steady state now "
-        "rebuilds the persisted edge/graph frames instead of reusing the "
-        "cold run's cache — protocol change, not a plan change"
-    ),
-    "semantic_dedup_lsh": (
-        "r6 bench drains cache leases between runs; steady state now "
-        "rebuilds the persisted LSH-cell assignments — protocol change"
-    ),
-    "pq_adc_topk": (
-        "r6 bench drains cache leases between runs; steady state now "
-        "retrains the persisted PQ codebook subsample — protocol change"
-    ),
-    "lsh_candidate_pairs": (
-        "r8 rewrote pair generation: single-scan band explode + one "
-        "groupBy-on-blocking-key with the PAIR_BLOCK_CAP guard IN-PLAN "
-        "(row_number+assert_true, zero extra jobs) replacing the "
-        "persisted-sig band self-join + r7's eager probe (which cost a "
-        "whole job, paired 2.7x vs r6 — its '~0.2 s' annotation was "
-        "wrong, VERDICT r7 wrong #2). Full-record paired 0.62 vs r7."
-    ),
-    "ngram_jaccard_pairs": (
-        "r8 rewrote pair generation: groupBy-on-shingle + in-plan "
-        "PAIR_BLOCK_CAP guard replacing the shingle self-join + r7's "
-        "eager probe (see lsh_candidate_pairs). Full-record paired 0.74 "
-        "vs r7."
-    ),
-    "asof_last_click_before_purchase": (
-        "r5 changed asof_join SEMANTICS (unannotated then — VERDICT r5 "
-        "wrong #2): the as-of value rides in a STRUCT so a NULL nearest "
-        "value no longer falls back to an older right row; that fix "
-        "carried the bare value through the union shuffle a second time "
-        "as a window tie-breaker. r6 orders the window by the struct "
-        "field (__rbox.v) and drops the duplicate column — the value "
-        "crosses the shuffle once, hash-exact vs oracle both directions"
-    ),
-}
+WORKLOAD_CHANGES: dict[str, str] = {}
 
 
 def _git(*args: str) -> str | None:

@@ -21,15 +21,34 @@ Known reference quirks intentionally FIXED (SURVEY §2.10): facts merge
 their deduped frames on first write too (06:96-103 uses the pre-dedup
 frame); metrics derive dates from business events, not warehouse-load
 time (09:30).
+
+Concurrency contract. Each layer method is a barrier: it returns only
+after all of its work is done, and `run()` calls the four layers in
+order. Within a layer, the per-table units that do not depend on each
+other (the 8 bronze streams, the 8 silver conforms, the 4 dims beside the
+mirror-then-3-facts chain, the 3 marts) run concurrently on driver
+threads, so their small Spark jobs overlap instead of queueing behind one
+another. Every unit runs with the caller's Spark local properties and
+session tags (job group, description, scheduler pool), each unit with its
+own copy. A failing unit does not cancel the others: the layer waits for
+every unit, then raises the first failure in submission order, and no
+thread outlives the call. Re-running after a failure is idempotent: the
+units that finished committed their progress, and the failed one
+re-processes from its last committed version or checkpoint through the
+same guarded merges.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from real_time_e_commerce_analytics_lakehouse_spark.operators.bucketing import (
     read_bucketed,
@@ -76,44 +95,63 @@ class OlistPipeline:
     def _now(self):  # noqa: ANN202
         return F.lit(self.clock).cast("timestamp") if self.clock else F.current_timestamp()
 
+    def _run_concurrently(self, *units: Callable[[], object]) -> None:
+        """Run independent units on one driver thread each and return once
+        all have finished; then raise the first failure in submission
+        order. Each unit is wrapped on its own, so it gets its own clone
+        of the caller's local properties (two threads sharing one clone
+        would also share spark.sql.execution.id)."""
+        if not units:
+            return
+        with ThreadPoolExecutor(max_workers=len(units)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(unit))
+                for unit in units
+            ]
+        # leaving the block joined every worker, so each future is done
+        for future in futures:
+            future.result()
+
     # -------------------------------------------------------------- bronze
 
     def bronze_ingest(self) -> list[str]:
         """Stream new landing CSVs into bronze tables; idempotent per
         source file (replayed/duplicated files insert nothing)."""
-        tables = [t for t in discover_tables(self.landing_dir) if t in CONTRACTS]
-        for name in tables:
-            contract = CONTRACTS[name]
+
+        def ingest(name: str) -> None:
             target = self.table("bronze", name)
-            stream = bronze_csv_stream(
-                self.spark, self.landing_dir, name, contract.raw_schema, self.clock
-            )
-
-            def _merge(batch_df: DataFrame, _epoch: int, target=target) -> None:
-                target.merge_insert_only(batch_df, keys="source_file")
-
             run_available_now(
-                stream,
+                bronze_csv_stream(
+                    self.spark, self.landing_dir, name, CONTRACTS[name].raw_schema, self.clock
+                ),
                 checkpoint_dir=os.path.join(self.lake_root, "_checkpoints", name),
-                batch_fn=_merge,
+                batch_fn=lambda batch_df, _epoch: target.merge_insert_only(
+                    batch_df, keys="source_file"
+                ),
             )
+
+        tables = [t for t in discover_tables(self.landing_dir) if t in CONTRACTS]
+        self._run_concurrently(*(partial(ingest, t) for t in tables))
         return tables
 
     # -------------------------------------------------------------- silver
 
+    def _bronze_present(self) -> list[str]:
+        """Contracts whose bronze table exists, in CONTRACTS order."""
+        return [name for name in CONTRACTS if self.table("bronze", name).exists()]
+
     def silver_conform(self) -> None:
         """Incrementally conform each bronze table into silver
         (batch-incremental tier: LakeTable change feed + version state)."""
-        for name, contract in CONTRACTS.items():
-            bronze = self.table("bronze", name)
-            if not bronze.exists():
-                continue
-            silver = self.table("silver", name)
 
-            def _conform(batch: DataFrame, name=name, contract=contract, silver=silver) -> None:
-                self._conform_batch(batch, name, contract, silver)
+        def conform(name: str) -> None:
+            self.runner.process(
+                f"silver_{name}",
+                self.table("bronze", name),
+                lambda batch: self._conform_batch(batch, name),
+            )
 
-            self.runner.process(f"silver_{name}", bronze, _conform)
+        self._run_concurrently(*(partial(conform, n) for n in self._bronze_present()))
 
     def silver_conform_stream(self) -> None:
         """True streaming silver (reference S6 parity,
@@ -123,26 +161,23 @@ class OlistPipeline:
         as a StreamingQuery, not a batch poll. The conform body is the
         same as the batch-incremental tier; the downstream guarded merge
         makes redelivery idempotent either way."""
-        for name, contract in CONTRACTS.items():
-            bronze = self.table("bronze", name)
-            if not bronze.exists():
-                continue
-            silver = self.table("silver", name)
 
-            def _conform(batch: DataFrame, _epoch: int, name=name, contract=contract, silver=silver) -> None:
-                self._conform_batch(batch, name, contract, silver)
-
+        def conform(name: str) -> None:
             run_available_now(
-                bronze.read_stream(),
+                self.table("bronze", name).read_stream(),
                 checkpoint_dir=os.path.join(
                     self.lake_root, "_checkpoints", f"silver_{name}"
                 ),
-                batch_fn=_conform,
+                batch_fn=lambda batch, _epoch: self._conform_batch(batch, name),
             )
 
-    def _conform_batch(self, batch: DataFrame, name: str, contract, silver: LakeTable) -> None:
+        self._run_concurrently(*(partial(conform, n) for n in self._bronze_present()))
+
+    def _conform_batch(self, batch: DataFrame, name: str) -> None:
         """One micro-batch of bronze rows -> silver (clean / type / dedup
         / guarded upsert; 02_bronze_to_silver.py per-table semantics)."""
+        contract = CONTRACTS[name]
+        silver = self.table("silver", name)
         cleaned = clean(batch, contract.clean_spec).withColumn(
             "silver_processed_ts", self._now()
         )
@@ -223,11 +258,21 @@ class OlistPipeline:
         return F.xxhash64(*[F.col(c) for c in cols])
 
     def gold_build(self) -> None:
+        """The 4 dims beside one chain: the bucketed orders mirror, then
+        the 3 facts that join it."""
+        self._run_concurrently(
+            self._build_dim_customers,
+            self._build_dim_products,
+            self._build_dim_sellers,
+            self._build_dim_geolocation,
+            self._build_facts,
+        )
+
+    def _build_facts(self) -> None:
         self._mirror_orders_bucketed()
-        self._build_dims()
-        self._build_fact_orders()
-        self._build_fact_payments()
-        self._build_fact_reviews()
+        self._run_concurrently(
+            self._build_fact_orders, self._build_fact_payments, self._build_fact_reviews
+        )
 
     # The one table EVERY fact refresh joins on order_id is silver
     # orders (04_gold_fact_orders.py:55-59, 05:43-46, 06:54-90 — the
@@ -261,8 +306,7 @@ class OlistPipeline:
     def _silver_orders(self) -> DataFrame:
         return read_bucketed(self.spark, self._bucket_table_name())
 
-    def _build_dims(self) -> None:
-        now = self._now()
+    def _build_dim_customers(self) -> None:
         customers = self.table("silver", "customers").read()
         dim_customers = (
             dedup_latest(customers, "customer_id", "ingestion_ts", ("source_file",))
@@ -273,11 +317,12 @@ class OlistPipeline:
                 F.col("customer_zip_code_prefix").cast("int").alias("customer_zip_code_prefix"),  # 03:42
                 F.lower(F.trim("customer_city")).alias("customer_city"),  # 03:43
                 F.upper(F.trim("customer_state")).alias("customer_state"),  # 03:44
-                now.alias("gold_created_ts"),
+                self._now().alias("gold_created_ts"),
             )
         )
         self.table("gold", "dim_customers").overwrite(dim_customers)
 
+    def _build_dim_products(self) -> None:
         products = self.table("silver", "products").read()
         dim_products = (
             dedup_latest(products, "product_id", "ingestion_ts", ("source_file",))
@@ -291,11 +336,12 @@ class OlistPipeline:
                     * F.col("product_height_cm")
                     * F.col("product_width_cm")
                 ).alias("product_volume_cm3"),  # 03:128-137, NULL propagates
-                now.alias("gold_created_ts"),
+                self._now().alias("gold_created_ts"),
             )
         )
         self.table("gold", "dim_products").overwrite(dim_products)
 
+    def _build_dim_sellers(self) -> None:
         sellers = self.table("silver", "sellers").read()
         dim_sellers = (
             dedup_latest(sellers, "seller_id", "ingestion_ts", ("source_file",))
@@ -305,11 +351,12 @@ class OlistPipeline:
                 "seller_zip_code_prefix",
                 F.upper(F.trim("seller_city")).alias("seller_city"),  # 03:226
                 F.upper(F.trim("seller_state")).alias("seller_state"),
-                now.alias("gold_created_ts"),
+                self._now().alias("gold_created_ts"),
             )
         )
         self.table("gold", "dim_sellers").overwrite(dim_sellers)
 
+    def _build_dim_geolocation(self) -> None:
         geo = self.table("silver", "geolocation").read()
         dim_geolocation = geo.select(
             self._sk("zip_code_prefix").alias("geolocation_sk"),
@@ -318,7 +365,7 @@ class OlistPipeline:
             "longitude",
             "modal_city",
             "modal_state",
-            now.alias("gold_created_ts"),
+            self._now().alias("gold_created_ts"),
         )
         self.table("gold", "dim_geolocation").overwrite(dim_geolocation)
 
@@ -439,9 +486,9 @@ class OlistPipeline:
     # ------------------------------------------------------------- metrics
 
     def metrics_build(self) -> None:
-        self._metrics_revenue()
-        self._metrics_orders()
-        self._metrics_customers()
+        self._run_concurrently(
+            self._metrics_revenue, self._metrics_orders, self._metrics_customers
+        )
 
     def metrics_revenue_incremental(self) -> bool:
         """The 100 TB path for the revenue mart (the reference full-

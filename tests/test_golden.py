@@ -5,47 +5,15 @@ whose partition order Spark does not fix)."""
 
 from __future__ import annotations
 
-import json
 from datetime import datetime
-from pathlib import Path
 
 from real_time_e_commerce_analytics_lakehouse_spark.pipelines.olist import OlistPipeline
 from tools.make_olist_fixtures import make_fixtures
 
-GOLDEN = Path(__file__).parent / "golden_metrics_revenue.json"
 
-
-def test_metrics_revenue_matches_golden(spark, tmp_path):
+def test_metrics_revenue_matches_golden(spark, tmp_path, assert_golden_revenue):
     landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
     make_fixtures(landing, seed=42)
     p = OlistPipeline(spark, lake, landing, clock=datetime(2024, 6, 1, 12, 0, 0))
     p.run()
-
-    rows = []
-    for r in p.table("metrics", "metrics_revenue").read().collect():
-        rows.append(
-            {
-                "order_date": r.order_date.isoformat() if r.order_date else None,
-                "customer_state": r.customer_state,
-                "order_status": r.order_status,
-                "total_revenue": round(r.total_revenue, 2)
-                if r.total_revenue is not None
-                else None,
-                "order_count": r.order_count,
-            }
-        )
-    rows.sort(
-        key=lambda d: (
-            str(d["order_date"]),
-            str(d["customer_state"]),
-            str(d["order_status"]),
-        )
-    )
-    golden = json.loads(GOLDEN.read_text())
-    assert len(rows) == len(golden)
-    for got, want in zip(rows, golden):
-        assert got["order_date"] == want["order_date"]
-        assert got["customer_state"] == want["customer_state"]
-        assert got["order_status"] == want["order_status"]
-        assert got["order_count"] == want["order_count"]
-        assert abs(got["total_revenue"] - want["total_revenue"]) < 0.011
+    assert_golden_revenue(p)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 from datetime import datetime, timedelta
 
 import pytest
@@ -422,3 +423,60 @@ def test_mirror_delta_opens_marts_with_a_delta_reader(pipeline):
 
     # idempotent: nothing changed, no new delta commit
     assert pipeline.mirror_delta() == versions
+
+
+def _threads_besides_py4j_callbacks() -> set[threading.Thread]:
+    """Live threads, minus py4j's callback threads: the callback server,
+    started on the session's first foreachBatch, and one connection per
+    JVM thread that calls back into Python (each streaming query), which
+    py4j keeps open after the query ends, sequential or not."""
+    return {
+        t
+        for t in threading.enumerate()
+        if not type(getattr(getattr(t, "_target", None), "__self__", None))
+        .__module__.startswith("py4j.")
+    }
+
+
+def test_failed_unit_lets_its_layer_finish_then_rerun_recovers(
+    spark, tmp_path, monkeypatch, assert_golden_revenue
+):
+    """A silver unit that fails does not stop the others: the layer waits
+    for every table, then raises the failure, and no worker thread
+    outlives it. The tables after order_payments in CONTRACTS still get
+    their silver, and a clean re-run converges to the golden mart."""
+    landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
+    make_fixtures(landing, seed=42)
+    p = OlistPipeline(spark, lake, landing, clock=CLOCK)
+    conform = OlistPipeline._conform_batch
+
+    def faulty(self, batch, name, *args):
+        if name == "order_payments":
+            raise RuntimeError("injected order_payments fault")
+        return conform(self, batch, name, *args)
+
+    threads = _threads_besides_py4j_callbacks()
+    with monkeypatch.context() as m:
+        m.setattr(OlistPipeline, "_conform_batch", faulty)
+        with pytest.raises(RuntimeError, match="injected order_payments fault"):
+            p.run()
+    assert _threads_besides_py4j_callbacks() == threads
+    for name in ("order_reviews", "orders", "products", "sellers"):
+        assert p.table("silver", name).exists(), name
+    assert not p.table("silver", "order_payments").exists()
+
+    p.run()
+    assert_golden_revenue(p)
+
+
+def test_layer_units_run_under_the_callers_job_group(pipeline):
+    """The units' jobs carry the caller's local properties, so a job
+    group set around a layer covers the work its threads launch."""
+    sc = pipeline.spark.sparkContext
+    group = "olist_metrics_build_group"
+    sc.setJobGroup(group, "metrics_build under a job group")
+    try:
+        pipeline.metrics_build()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
