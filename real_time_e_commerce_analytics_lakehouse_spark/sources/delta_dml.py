@@ -56,9 +56,9 @@ from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
     _DELTA_DIR,
     DeltaSnapshot,
     _apply_deletion_vectors,
-    _commit_file,
     _encode_path,
     _num_records,
+    commit_delta,
 )
 from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_table import (
     _delta_pval,
@@ -647,7 +647,6 @@ def create_delta_table(
             )
             fj["metadata"] = md
         fields.append(fj)
-    os.makedirs(os.path.join(path, "_delta_log"), exist_ok=True)
     now = int(time.time() * 1000)
     cfg = dict(configuration or {})
     protocol: dict[str, Any] = {
@@ -697,9 +696,6 @@ def create_delta_table(
     from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
         _legacy_writer_features as _lwf,
     )
-    from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
-        commit_time_fields,
-    )
 
     if cfg.get("delta.enableInCommitTimestamps", "").lower() == "true":
         # ICT at birth: the writer-7 feature must accompany the
@@ -715,13 +711,6 @@ def create_delta_table(
             "writerFeatures": sorted(feats0 | {"inCommitTimestamp"}),
         }
     actions = [
-        {
-            "commitInfo": {
-                **commit_time_fields(path, cfg, now),
-                "operation": "CREATE TABLE",
-                "operationParameters": {},
-            }
-        },
         {"protocol": protocol},
         {
             "metaData": {
@@ -737,17 +726,7 @@ def create_delta_table(
         },
         *rt_actions,
     ]
-    target = os.path.join(path, "_delta_log", f"{0:020d}.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise RuntimeError(f"concurrent CREATE at {path}") from None
-    finally:
-        os.remove(tmp)
+    commit_delta(path, 0, actions, "CREATE TABLE", {}, None, cfg)
 
 
 def insert_delta(spark: SparkSession, path: str, df: DataFrame) -> dict:
@@ -1009,7 +988,6 @@ def _commit_dml(
             }
         )
     from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
-        commit_time_fields,
         row_tracking_enabled,
         stamp_row_tracking,
     )
@@ -1021,35 +999,15 @@ def _commit_dml(
         if snap is None:
             snap = DeltaSnapshot(path)
         stamp_row_tracking(path, snap, actions, base_version + 1)
-    actions.append(
-        {
-            "commitInfo": {
-                **commit_time_fields(path, configuration, now),
-                "operation": operation,
-                "operationParameters": dict(params),
-                # delta-spark's observability contract: history()
-                # surfaces these; values serialize as strings upstream
-                "operationMetrics": {
-                    k: str(v) for k, v in (metrics or {}).items()
-                },
-            }
-        }
+    return commit_delta(
+        path,
+        base_version + 1,
+        actions,
+        operation,
+        params,
+        metrics or {},
+        configuration,
     )
-    v = base_version + 1
-    target = _commit_file(path, v)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent commit at version {v}; re-run the statement"
-        ) from None
-    finally:
-        os.remove(tmp)
-    return v
 
 
 # Legacy protocol versions imply named table features when upgrading to

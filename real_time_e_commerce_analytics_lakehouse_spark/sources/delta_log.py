@@ -58,6 +58,12 @@ pyarrow only, against the PUBLIC Delta transaction-log specification
   the entry path for a user migrating FROM Delta, mirroring
   ``LakeTable.convert_parquet`` (CONVERT TO DELTA parity, reversed).
 
+Every Delta version this engine writes — export, RESTORE, OPTIMIZE,
+CONVERT, ALTER, CLUSTER BY, protocol upgrades, CREATE, DML and the
+format writers — is committed by ``commit_delta``, the only commit
+path: it writes ``commitInfo`` first and claims ``<version>.json``
+exclusively, so a racing writer gets ``DeltaCommitConflict``.
+
 Round-trip contract (pinned in tests/test_delta_log.py): laketable →
 export → read_delta_log == table.read(); and laketable → export →
 convert_delta → read() hash-equal, schema + partition layout preserved.
@@ -68,6 +74,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from typing import Any, Sequence
 from urllib.parse import quote, unquote
 
@@ -564,12 +571,10 @@ def _dv_file_path(table_path: str, path_or_inline: str) -> str:
     """Resolve a storageType='u' pathOrInlineDv: ``<optional random
     prefix><z85 of 16-byte uuid>`` -> ``<table>/<prefix>/deletion_vector_
     <canonical uuid>.bin`` (the spec's relative-DV naming)."""
-    import uuid as _uuid
-
     from real_time_e_commerce_analytics_lakehouse_spark.sources.roaring import z85_decode
 
     prefix, enc = path_or_inline[:-20], path_or_inline[-20:]
-    u = _uuid.UUID(bytes=z85_decode(enc))
+    u = uuid.UUID(bytes=z85_decode(enc))
     return os.path.join(table_path, prefix, f"deletion_vector_{u}.bin")
 
 
@@ -1559,15 +1564,13 @@ def export_delta_log(table: LakeTable) -> int:
     dv_desc: dict[str, dict] = {}
     dv_rels = [rel for rel in adds if rel in want_dv]
     if dv_rels:
-        import uuid as _uuid
-
         from real_time_e_commerce_analytics_lakehouse_spark.sources.roaring import (
             write_dv_file,
             z85_encode,
         )
 
         img, offsets = write_dv_file([want_dv[rel][0] for rel in dv_rels])
-        dvu = _uuid.uuid4()
+        dvu = uuid.uuid4()
         with open(
             os.path.join(table.path, f"deletion_vector_{dvu}.bin"), "wb"
         ) as f:
@@ -1643,33 +1646,15 @@ def export_delta_log(table: LakeTable) -> int:
     stamp_row_tracking(
         table.path, None if first else prev, actions, next_v
     )
-    actions.append(
-        {
-            "commitInfo": {
-                **commit_time_fields(
-                    table.path,
-                    None if first else prev.configuration,
-                    now,
-                ),
-                "operation": "LAKETABLE EXPORT" if not first else "CONVERT",
-                "operationParameters": {"laketableVersion": str(v)},
-            }
-        }
+    return commit_delta(
+        table.path,
+        next_v,
+        actions,
+        "LAKETABLE EXPORT" if not first else "CONVERT",
+        {"laketableVersion": str(v)},
+        None,
+        None if first else prev.configuration,
     )
-    target = _commit_file(table.path, next_v)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)  # exclusive claim, like laketable commits
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Delta export at version {next_v}"
-        ) from None
-    finally:
-        os.remove(tmp)
-    return next_v
 
 
 def _num_records(parquet_path: str) -> int:
@@ -1992,8 +1977,6 @@ def write_delta_checkpoint(
                 "upgrade_delta_protocol(path, 3, 7) then add the "
                 "feature, or write format='classic'"
             )
-        import uuid as _uuid
-
         # file actions go to SIDECARS (parquet, add/remove columns
         # only); the top-level checkpoint holds checkpointMetadata +
         # non-file actions + sidecar pointers. Sidecars are sharded so
@@ -2014,7 +1997,7 @@ def write_delta_checkpoint(
         ] + top_rows
         for i in range(0, max(len(file_rows), 1), shard):
             chunk = file_rows[i : i + shard]
-            sname = f"{_uuid.uuid4()}.parquet"
+            sname = f"{uuid.uuid4()}.parquet"
             spath = os.path.join(side_dir, sname)
             pq.write_table(
                 pa.Table.from_pylist(chunk, schema=side_schema), spath
@@ -2054,7 +2037,7 @@ def write_delta_checkpoint(
         )
         cp = os.path.join(
             log,
-            f"{snap.version:020d}.checkpoint.{_uuid.uuid4()}.parquet",
+            f"{snap.version:020d}.checkpoint.{uuid.uuid4()}.parquet",
         )
         pq.write_table(pa.Table.from_pylist(top, schema=top_schema), cp)
     else:
@@ -2488,28 +2471,15 @@ def restore_delta(path: str, version: int) -> int:
     stamp_row_tracking(
         path, cur, actions, cur.version + 1, preserve_from=tgt
     )
-    actions.append(
-        {
-            "commitInfo": {
-                **commit_time_fields(path, cur.configuration, now),
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(version)},
-            }
-        }
+    return commit_delta(
+        path,
+        cur.version + 1,
+        actions,
+        "RESTORE",
+        {"version": str(version)},
+        None,
+        cur.configuration,
     )
-    v = cur.version + 1
-    target = _commit_file(path, v)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise RuntimeError(f"concurrent commit at version {v}") from None
-    finally:
-        os.remove(tmp)
-    return v
 
 
 CLUSTERING_DOMAIN = "delta.clustering"
@@ -2595,17 +2565,7 @@ def cluster_by_delta(path: str, columns: Sequence[str]) -> int:
             f"CLUSTER BY on partition columns: {sorted(overlap)} "
             "(a clustered table cannot also partition on the key)"
         )
-    now = int(time.time() * 1000)
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                **commit_time_fields(path, snap.configuration, now),
-                "operation": "CLUSTER BY",
-                "operationParameters": {
-                    "clusterBy": json.dumps(list(columns))
-                },
-            }
-        },
         {
             "domainMetadata": {
                 "domain": CLUSTERING_DOMAIN,
@@ -2634,10 +2594,16 @@ def cluster_by_delta(path: str, columns: Sequence[str]) -> int:
             new_proto["readerFeatures"] = sorted(
                 set(proto.get("readerFeatures") or [])
             )
-        actions.insert(1, {"protocol": new_proto})
-    v = snap.version + 1
-    _claim_commit(path, v, actions)
-    return v
+        actions.insert(0, {"protocol": new_proto})
+    return commit_delta(
+        path,
+        snap.version + 1,
+        actions,
+        "CLUSTER BY",
+        {"clusterBy": json.dumps(list(columns))},
+        None,
+        snap.configuration,
+    )
 
 
 def clustering_columns(snap: DeltaSnapshot) -> list[str]:
@@ -2668,8 +2634,6 @@ def _rt_materialized_names(
     generating uuid-suffixed names — upstream's collision guard against
     user columns — when the config doesn't name them yet. Returns
     (row_id_col, row_commit_version_col, {config keys to record})."""
-    import uuid as _uuid
-
     mat_id = configuration.get(
         "delta.rowTracking.materializedRowIdColumnName"
     )
@@ -2678,10 +2642,10 @@ def _rt_materialized_names(
     )
     new: dict[str, str] = {}
     if not mat_id:
-        mat_id = f"_row-id-col-{_uuid.uuid4().hex[:12]}"
+        mat_id = f"_row-id-col-{uuid.uuid4().hex[:12]}"
         new["delta.rowTracking.materializedRowIdColumnName"] = mat_id
     if not mat_ver:
-        mat_ver = f"_row-commit-version-col-{_uuid.uuid4().hex[:12]}"
+        mat_ver = f"_row-commit-version-col-{uuid.uuid4().hex[:12]}"
         new[
             "delta.rowTracking.materializedRowCommitVersionColumnName"
         ] = mat_ver
@@ -2721,7 +2685,6 @@ def optimize_delta(
     (executors stream the bytes; the driver handles only file NAMES),
     and groups are independent — the commit is one JSON append."""
     import math
-    import uuid as _uuid
 
     snap = DeltaSnapshot(path)
     # column-mapped tables compact fine: the rewrite scans and writes
@@ -2899,13 +2862,13 @@ def optimize_delta(
             df = df.repartition(n_out)
         # stage executor-side, then adopt the files by rename (same
         # volume): Spark writes the bytes, the driver moves names only
-        stage = os.path.join(path, f"_optimize_tmp_{_uuid.uuid4().hex}")
+        stage = os.path.join(path, f"_optimize_tmp_{uuid.uuid4().hex}")
         df.write.parquet(stage)
         pdir = os.path.dirname(cands[0])
         for fn in sorted(os.listdir(stage)):
             if not fn.endswith(".parquet"):
                 continue
-            rel = os.path.join(pdir, f"part-{_uuid.uuid4().hex}.parquet")
+            rel = os.path.join(pdir, f"part-{uuid.uuid4().hex}.parquet")
             os.replace(os.path.join(stage, fn), os.path.join(path, rel))
             new_adds.append(
                 (
@@ -2967,40 +2930,25 @@ def optimize_delta(
             },
         )
     stamp_row_tracking(path, snap, actions, snap.version + 1)
-    actions.append(
+    v = commit_delta(
+        path,
+        snap.version + 1,
+        actions,
+        "OPTIMIZE",
         {
-            "commitInfo": {
-                **commit_time_fields(path, snap.configuration, now),
-                "operation": "OPTIMIZE",
-                "operationMetrics": {
-                    "numRemovedFiles": str(len(rewritten)),
-                    "numAddedFiles": str(len(new_adds)),
-                },
-                "operationParameters": {
-                    "targetSize": str(target_file_bytes),
-                    **(
-                        {"zOrderBy": json.dumps(list(zorder_by))}
-                        if zorder_by
-                        else {}
-                    ),
-                },
-            }
-        }
+            "targetSize": str(target_file_bytes),
+            **(
+                {"zOrderBy": json.dumps(list(zorder_by))}
+                if zorder_by
+                else {}
+            ),
+        },
+        {
+            "numRemovedFiles": len(rewritten),
+            "numAddedFiles": len(new_adds),
+        },
+        snap.configuration,
     )
-    v = snap.version + 1
-    target = _commit_file(path, v)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent commit at version {v}; re-run optimize_delta"
-        ) from None
-    finally:
-        os.remove(tmp)
     return {
         "version": v,
         "rewritten": len(rewritten),
@@ -3181,8 +3129,6 @@ def convert_delta(spark: SparkSession, path: str) -> LakeTable:
         # the recorded fp matches the scan-time raw URI byte-for-byte
         # (constructing URIs driver-side would have to re-implement
         # Hadoop's percent-escaping). Cost ∝ DV-bearing files, not table.
-        import uuid as _uuid
-
         deleted, total_card = _deleted_pairs_df(spark, snap.path, snap.dvs)
         if deleted is not None:
             dv_abs = [
@@ -3215,7 +3161,7 @@ def convert_delta(spark: SparkSession, path: str) -> LakeTable:
             ).select("fp", "ri")
             from real_time_e_commerce_analytics_lakehouse_spark.tables import _DV_DIR
 
-            dirname = os.path.join(path, _DV_DIR, _uuid.uuid4().hex)
+            dirname = os.path.join(path, _DV_DIR, uuid.uuid4().hex)
             tomb.write.parquet(dirname)
             dv_rel = [os.path.relpath(dirname, path)]
     t._commit(units, op=f"convert_delta(v{snap.version})", dv=dv_rel)
@@ -3357,18 +3303,7 @@ def convert_parquet_to_delta(
         + (list(partition_schema.fields) if partition_schema else [])
     )
 
-    now = int(time.time() * 1000)
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "CONVERT",
-                "operationParameters": {
-                    "numFiles": len(files),
-                    "partitionedBy": json.dumps(pcols),
-                },
-            }
-        },
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {
             "metaData": {
@@ -3377,7 +3312,7 @@ def convert_parquet_to_delta(
                 "schemaString": json.dumps(full.jsonValue()),
                 "partitionColumns": pcols,
                 "configuration": {},
-                "createdTime": now,
+                "createdTime": int(time.time() * 1000),
             }
         },
     ]
@@ -3397,21 +3332,15 @@ def convert_parquet_to_delta(
                 }
             }
         )
-    os.makedirs(log, exist_ok=True)
-    target = _commit_file(path, 0)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise FileExistsError(
-            f"{path}: a concurrent CONVERT committed version 0"
-        ) from None
-    finally:
-        os.remove(tmp)
-    return 0
+    return commit_delta(
+        path,
+        0,
+        actions,
+        "CONVERT",
+        {"numFiles": len(files), "partitionedBy": json.dumps(pcols)},
+        None,
+        {},
+    )
 
 
 def restore_delta_to_timestamp(path: str, ts_ms: int) -> int:
@@ -3465,21 +3394,6 @@ def generate_symlink_manifest(path: str) -> list[str]:
     return written
 
 
-def _claim_commit(path: str, version: int, actions: list[dict]) -> None:
-    """Atomically claim one commit version (exclusive hard-link, the
-    same recipe every writer here uses); raises FileExistsError to the
-    caller on a concurrent commit."""
-    target = _commit_file(path, version)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    finally:
-        os.remove(tmp)
-
-
 def upgrade_delta_protocol(
     path: str,
     min_reader: int,
@@ -3527,28 +3441,15 @@ def upgrade_delta_protocol(
             | _legacy_writer_features(cw)
             | set(add_writer_features)
         )
-    v = snap.version + 1
-    _claim_commit(
+    return commit_delta(
         path,
-        v,
-        [
-            {
-                "commitInfo": {
-                    **commit_time_fields(
-                        path,
-                        snap.configuration,
-                        int(time.time() * 1000),
-                    ),
-                    "operation": "UPGRADE PROTOCOL",
-                    "operationParameters": {
-                        "newProtocol": json.dumps(proto)
-                    },
-                }
-            },
-            {"protocol": proto},
-        ],
+        snap.version + 1,
+        [{"protocol": proto}],
+        "UPGRADE PROTOCOL",
+        {"newProtocol": json.dumps(proto)},
+        None,
+        snap.configuration,
     )
-    return v
 
 
 def _legacy_writer_features(min_writer: int) -> set[str]:
@@ -3730,23 +3631,10 @@ def alter_delta_schema(
     if mapped and counter[0] - 1 > max_column_id(snap.schema_json, cfg):
         cfg["delta.columnMapping.maxColumnId"] = str(counter[0] - 1)
     pcols = [rename.get(c, c) for c in snap.partition_cols]
-    now = int(time.time() * 1000)
-    v = snap.version + 1
-    _claim_commit(
+    return commit_delta(
         path,
-        v,
+        snap.version + 1,
         [
-            {
-                "commitInfo": {
-                    **commit_time_fields(path, cfg, now),
-                    "operation": "ALTER TABLE",
-                    "operationParameters": {
-                        "add": json.dumps(added),
-                        "rename": json.dumps(rename),
-                        "drop": json.dumps(drop),
-                    },
-                }
-            },
             {
                 "metaData": {
                     "id": getattr(snap, "meta_id", None)
@@ -3760,8 +3648,15 @@ def alter_delta_schema(
                 }
             },
         ],
+        "ALTER TABLE",
+        {
+            "add": json.dumps(added),
+            "rename": json.dumps(rename),
+            "drop": json.dumps(drop),
+        },
+        None,
+        cfg,
     )
-    return v
 
 
 # --------------------------------------------------------------------------
@@ -4145,26 +4040,13 @@ def alter_delta_properties(
         # OPTIMIZE/rewrite can preserve ids without a metaData re-emit
         cfg.update(_rt_materialized_names(cfg)[2])
     v = snap.version + 1
-    time_fields = commit_time_fields(path, cfg, int(time.time() * 1000))
     if ict_newly_on:
         # spec provenance: record WHERE the ICT clock starts, so
         # timestamp resolution knows versions below this one use
-        # file/commitInfo timestamps
+        # file/commitInfo timestamps (commit_delta adds the matching
+        # enablement timestamp)
         cfg["delta.inCommitTimestampEnablementVersion"] = str(v)
-        cfg["delta.inCommitTimestampEnablementTimestamp"] = str(
-            time_fields["inCommitTimestamp"]
-        )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                **time_fields,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(set_props)
-                },
-            }
-        }
-    ]
+    actions: list[dict] = []
     if (need_r, need_w) != (
         int(cur.get("minReaderVersion", 1)),
         int(cur.get("minWriterVersion", 2)),
@@ -4222,8 +4104,79 @@ def alter_delta_properties(
                 add["deletionVector"] = dict(snap.dvs[rel])
             actions.append({"add": add})
     stamp_row_tracking(path, snap, actions, v)
-    _claim_commit(path, v, actions)
-    return v
+    return commit_delta(
+        path,
+        v,
+        actions,
+        "SET TBLPROPERTIES",
+        {"properties": json.dumps(set_props)},
+        None,
+        cfg,
+    )
+
+
+class DeltaCommitConflict(FileExistsError, RuntimeError):
+    """Another writer already claimed the log version a commit
+    targeted: a FileExistsError (the version file exists) and a
+    RuntimeError (the statement must be re-run on the new snapshot)."""
+
+
+def commit_delta(
+    path: str,
+    version: int,
+    actions: list[dict],
+    operation: str,
+    params: dict | None = None,
+    metrics: dict | None = None,
+    configuration: dict | None = None,
+) -> int:
+    """The one way a Delta version is committed: writes
+    ``_delta_log/<version>.json`` holding ``commitInfo`` (first, as
+    PROTOCOL.md requires once in-commit timestamps are on) and then
+    ``actions``. ``configuration`` is the table configuration that
+    decides the commit clock (``commit_time_fields``; None reads it from
+    the log). A metaData action that makes ``version`` the
+    in-commit-timestamp enablement version gets the matching enablement
+    timestamp. ``metrics`` values serialize as strings (delta-spark's
+    ``history()`` contract).
+
+    The claim is exclusive: the file is written under a temp name
+    unique to this writer and hard-linked into place, so a racing
+    writer of the same version gets ``DeltaCommitConflict`` and the
+    winner's file is never touched. Returns ``version``."""
+    info = {
+        **commit_time_fields(
+            path, configuration, int(time.time() * 1000)
+        ),
+        "operation": operation,
+        "operationParameters": dict(params or {}),
+    }
+    if metrics is not None:
+        info["operationMetrics"] = {k: str(v) for k, v in metrics.items()}
+    for a in actions:
+        cfg = (a.get("metaData") or {}).get("configuration") or {}
+        if cfg.get("delta.inCommitTimestampEnablementVersion") == str(
+            version
+        ):
+            cfg["delta.inCommitTimestampEnablementTimestamp"] = str(
+                info["inCommitTimestamp"]
+            )
+    os.makedirs(os.path.join(path, _DELTA_DIR), exist_ok=True)
+    target = _commit_file(path, version)
+    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        for a in [{"commitInfo": info}, *actions]:
+            f.write(json.dumps(a) + "\n")
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
+        raise DeltaCommitConflict(
+            f"{path}: version {version} already committed by another "
+            f"writer; re-run the {operation}"
+        ) from None
+    finally:
+        os.remove(tmp)
+    return version
 
 
 def commit_time_fields(

@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 from datetime import date
 from typing import Any, Iterator
@@ -72,10 +73,12 @@ from pyspark.sql.types import StructType
 
 from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
     _DELTA_DIR,
+    DeltaCommitConflict,
     DeltaSnapshot,
     _commit_file,
     _encode_path,
     classify_commit_changes,
+    commit_delta,
 )
 from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_stream import (
     _dv_indexes,
@@ -885,30 +888,6 @@ class _AddedFile(WriterCommitMessage):
     ident_obs: tuple = ()
 
 
-class _CommitConflict(Exception):
-    pass
-
-
-def _write_commit_lines(path: str, version: int, actions: list[dict]) -> None:
-    """Exclusive-create claim of one log version (os.link is atomic on
-    POSIX): a racing writer gets _CommitConflict, never a clobber."""
-    from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import uuid_hex
-
-    log = os.path.join(path, _DELTA_DIR)
-    os.makedirs(log, exist_ok=True)
-    target = _commit_file(path, version)
-    tmp = target + f".tmp-{uuid_hex()}"
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        raise _CommitConflict(version) from None
-    finally:
-        os.remove(tmp)
-
-
 def _schema_fields(schema: StructType) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in schema.fields}
 
@@ -1462,7 +1441,6 @@ def _commit_table_change(
                 }
             )
         from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
-            commit_time_fields,
             stamp_row_tracking,
         )
 
@@ -1470,35 +1448,25 @@ def _commit_table_change(
         # every add + high-water-mark domainMetadata when the table
         # property enables it
         stamp_row_tracking(path, snap, actions, base + 1)
-        actions.append(
-            {
-                "commitInfo": {
-                    **commit_time_fields(
-                        path,
-                        snap.configuration if snap is not None else None,
-                        now,
-                    ),
-                    "operation": (
-                        "STREAMING UPDATE"
-                        if txn is not None
-                        else ("WRITE" if not overwrite else "OVERWRITE")
-                    ),
-                    "operationParameters": {
-                        "mode": "Overwrite" if overwrite else "Append"
-                    },
-                    "operationMetrics": {
-                        "numFiles": str(len(adds)),
-                        "numOutputRows": str(
-                            sum(n for _r, _p, n in adds)
-                        ),
-                    },
-                }
-            }
-        )
         try:
-            _write_commit_lines(path, base + 1, actions)
+            commit_delta(
+                path,
+                base + 1,
+                actions,
+                (
+                    "STREAMING UPDATE"
+                    if txn is not None
+                    else ("WRITE" if not overwrite else "OVERWRITE")
+                ),
+                {"mode": "Overwrite" if overwrite else "Append"},
+                {
+                    "numFiles": len(adds),
+                    "numOutputRows": sum(n for _r, _p, n in adds),
+                },
+                snap.configuration if snap is not None else None,
+            )
             return "committed"
-        except _CommitConflict:
+        except DeltaCommitConflict:
             attempt += 1
             if attempt > retries:
                 raise RuntimeError(
@@ -1591,8 +1559,6 @@ class _DeltaWriteTask:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import uuid_hex
-
         batches = [b for b in iterator if b.num_rows]
         if not batches:
             return _AddedFile(files=(), n_rows=0)
@@ -1610,7 +1576,7 @@ class _DeltaWriteTask:
             )
         if not self.partition_by:
             out = self._to_physical(t) if self._inv_fields else t
-            rel = f"part-{uuid_hex()}.parquet"
+            rel = f"part-{uuid.uuid4().hex}.parquet"
             pq.write_table(out, os.path.join(self.path, rel))
             return _AddedFile(
                 files=((rel, (), t.num_rows),),
@@ -1636,7 +1602,7 @@ class _DeltaWriteTask:
         for combo, idx in groups.items():
             segs = [_pdir_segment(c, v) for c, v in combo]
             os.makedirs(os.path.join(self.path, *segs), exist_ok=True)
-            rel = os.path.join(*segs, f"part-{uuid_hex()}.parquet")
+            rel = os.path.join(*segs, f"part-{uuid.uuid4().hex}.parquet")
             pq.write_table(
                 data.take(pa.array(idx, type=pa.int64())),
                 os.path.join(self.path, rel),
@@ -2007,8 +1973,6 @@ class DeltaStreamWriter(_DeltaWriteTask, DataSourceStreamArrowWriter):
         colmap_counter: list[int] | None = None
         if snap is not None:
             if snap.column_mapping_mode != "none":
-                import uuid as _uuid
-
                 from real_time_e_commerce_analytics_lakehouse_spark.sources.colmap import (
                     max_column_id,
                 )
@@ -2028,8 +1992,8 @@ class DeltaStreamWriter(_DeltaWriteTask, DataSourceStreamArrowWriter):
                     logical: str, fid: int, _abs=abs_path, _app=txn_app
                 ) -> str:
                     return "col-" + str(
-                        _uuid.uuid5(
-                            _uuid.NAMESPACE_URL,
+                        uuid.uuid5(
+                            uuid.NAMESPACE_URL,
                             f"pyds-colmap:{_abs}:{_app}:"
                             f"{logical}:{fid}",
                         )

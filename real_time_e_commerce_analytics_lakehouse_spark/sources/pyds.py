@@ -24,6 +24,11 @@ whole-stage codegen, vectorized reader, DV anti-join in the plan. This
 source is the interop path: at 100 TB its per-FILE input partitions
 parallelize across executors like any file source, with batch-level
 Arrow transfer (no per-row Python serde).
+
+Writes (``df.write`` / ``df.writeStream`` with ``format("laketable")``)
+stage parquet on executors; the driver-side commit goes through
+``tables.commit_manifest``, the one function that claims a laketable
+version, imported lazily so executors never load the table layer.
 """
 
 from __future__ import annotations
@@ -55,24 +60,15 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-# mirrored from tables.py (this module stays importable on executors
-# without pulling the Spark-session-coupled table layer)
+# the reader's copy of tables.py's layout constants (this module stays
+# importable on executors without pulling the Spark-session-coupled
+# table layer)
 _LOG_DIR = "_log"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _unescape_hive(raw: str) -> str:
     return raw if raw == _HIVE_NULL else unquote(raw)
-
-
-def _utc_now_iso() -> str:
-    """committed_at for writer manifests — tables.py's TIMESTAMP AS OF
-    resolution and vacuum(retain_hours) index this field on EVERY
-    manifest (r5 review: pyds-written commits used to omit it, making
-    both crash with KeyError on mixed-writer tables)."""
-    from datetime import timezone
-
-    return datetime.now(timezone.utc).isoformat()
 
 
 def _fs_path(path: str) -> str:
@@ -664,11 +660,11 @@ class _WrittenFile(WriterCommitMessage):
 class LakeTableWriter(DataSourceArrowWriter):
     """``df.write.format("laketable").mode(...).save(path)``: each task
     streams its Arrow batches into one parquet file inside a staged
-    ``data/<uuid>`` unit dir; ``commit`` then publishes the unit with
-    the same exclusive-create manifest protocol the engine uses, so a
-    racing writer errors instead of clobbering (and a failed job leaves
-    only an unreferenced staging dir for vacuum). Append carries the
-    previous snapshot's units and deletion vectors by reference.
+    ``data/<uuid>`` unit dir; ``commit`` then publishes the unit through
+    ``tables.commit_manifest`` (the engine's own commit), so a racing
+    writer errors instead of clobbering (and a failed job leaves only an
+    unreferenced staging dir for vacuum). Append carries the previous
+    snapshot's units and deletion vectors by reference.
 
     Partitioned writes: pass ``.option("partition_by", "col[,col2]")``
     (or append to an already-partitioned table, whose layout is
@@ -807,27 +803,6 @@ class LakeTableWriter(DataSourceArrowWriter):
                 if f.endswith(".parquet") and p not in keep:
                     os.remove(p)
 
-    def _sticky(self) -> dict:
-        """Manifest fields that must survive any commit (the engine's
-        _commit carries them by default, tables.py:330): the txn ledger
-        (append_once / stream-sink exactly-once watermarks) and the
-        identity high-water mark. Dropping either resets idempotency or
-        re-issues identity values."""
-        if self.base_version <= 0:
-            return {}
-        log = os.path.join(self.path, _LOG_DIR)
-        try:
-            with open(os.path.join(log, f"{self.base_version:08d}.json")) as f:
-                prev = json.load(f)
-        except OSError:
-            return {}
-        out = {}
-        if prev.get("txn"):
-            out["txn"] = dict(prev["txn"])
-        if prev.get("identity_high"):
-            out["identity_high"] = int(prev["identity_high"])
-        return out
-
     def commit(self, messages) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -859,73 +834,48 @@ class LakeTableWriter(DataSourceArrowWriter):
                     "empty overwrite of a partitioned table is not "
                     "supported through the format; use the LakeTable API"
                 )
-            self._publish(self.carry_units + new_units)
-            return
-        out_dir = os.path.join(self.path, self.unit_rel)
-        if n_rows == 0:
-            # an empty relation is still a valid snapshot: one 0-row file
-            os.makedirs(out_dir, exist_ok=True)
-            empty = pa.table(
-                {
-                    f.name: pa.nulls(0, type=to_arrow_type(f.dataType))
-                    for f in self.schema.fields
-                }
-            )
-            pq.write_table(empty, os.path.join(out_dir, "part-empty.parquet"))
-        files = {
-            fname: st
-            for m in messages
-            if m
-            for _segs, fname, st in m.combos
-        }
-        unit = {
-            "path": self.unit_rel,
-            "partition": {},
-            "partition_types": {},
-            "stats": _merge_stats(files),
-            "file_stats": files,
-        }
-        doc = {
-            "version": self.base_version + 1,
-            "operation": "pyds-overwrite" if self.overwrite else "pyds-append",
-            "committed_at": _utc_now_iso(),
-            "partition_by": [],
-            "units": self.carry_units + [unit],
-            "dv": self.carry_dv,
-            **self._sticky(),
-        }
-        self._write_manifest(doc)
-
-    def _publish(self, units: list[dict]) -> None:
-        self._write_manifest(
-            {
-                "version": self.base_version + 1,
-                "operation": (
-                    "pyds-overwrite" if self.overwrite else "pyds-append"
-                ),
-                "partition_by": list(self.partition_by),
-                "units": units,
-                "dv": self.carry_dv,
-                **self._sticky(),
+        else:
+            out_dir = os.path.join(self.path, self.unit_rel)
+            if n_rows == 0:
+                # an empty relation is still a valid snapshot: one 0-row
+                # file
+                os.makedirs(out_dir, exist_ok=True)
+                empty = pa.table(
+                    {
+                        f.name: pa.nulls(0, type=to_arrow_type(f.dataType))
+                        for f in self.schema.fields
+                    }
+                )
+                pq.write_table(
+                    empty, os.path.join(out_dir, "part-empty.parquet")
+                )
+            files = {
+                fname: st
+                for m in messages
+                if m
+                for _segs, fname, st in m.combos
             }
+            new_units = [
+                {
+                    "path": self.unit_rel,
+                    "partition": {},
+                    "partition_types": {},
+                    "stats": _merge_stats(files),
+                    "file_stats": files,
+                }
+            ]
+        from real_time_e_commerce_analytics_lakehouse_spark.tables import (
+            commit_manifest,
         )
 
-    def _write_manifest(self, doc: dict) -> None:
-        log = os.path.join(self.path, _LOG_DIR)
-        os.makedirs(log, exist_ok=True)
-        target = os.path.join(log, f"{self.base_version + 1:08d}.json")
-        tmp = target + f".tmp-{uuid_hex()}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1)
-        try:
-            os.link(tmp, target)  # atomic-exclusive: racing writer errors
-        except FileExistsError:
-            raise RuntimeError(
-                f"version {self.base_version + 1} already committed by "
-                "another writer (optimistic concurrency)"
-            ) from None
-        finally:
-            os.remove(tmp)
+        commit_manifest(
+            self.path,
+            self.carry_units + new_units,
+            "pyds-overwrite" if self.overwrite else "pyds-append",
+            self.partition_by,
+            base_version=self.base_version,
+            dv=self.carry_dv,
+        )
 
     def abort(self, messages) -> None:
         import shutil
@@ -952,7 +902,7 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
     restart). The default txn app is derived from checkpointLocation so
     independent queries never collide by default. Concurrent writers are handled by rebase-retry:
     the snapshot (units, dv, txn) is re-read at commit time and the
-    manifest is claimed with the exclusive-create protocol; a lost race
+    manifest is claimed through ``tables.commit_manifest``; a lost race
     re-reads and retries, carrying the winner's units forward.
 
     Partitioned streaming: pass ``.option("partition_by", "col[,col2]")``
@@ -1081,17 +1031,20 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
             ]
         if not new_units:
             return  # empty batch: nothing to publish, nothing to replay
-        log = os.path.join(self.path, _LOG_DIR)
-        os.makedirs(log, exist_ok=True)
+        from real_time_e_commerce_analytics_lakehouse_spark.tables import (
+            ConcurrentWriteError,
+            _log_versions,
+            commit_manifest,
+            manifest_doc,
+        )
+
         for _attempt in range(50):  # rebase-retry against racing writers
-            versions = sorted(
-                int(f.split(".")[0])
-                for f in os.listdir(log)
-                if f.endswith(".json")
-            )
+            versions = _log_versions(self.path)
+            base = versions[-1] if versions else 0
+            txns: dict[str, int] = {}
+            units = new_units
             if versions:
-                with open(os.path.join(log, f"{versions[-1]:08d}.json")) as f:
-                    prev = json.load(f)
+                prev = manifest_doc(self.path, base)
                 if prev.get("column_map") or prev.get("column_dropped"):
                     self._drop_staged(messages)  # no leak per retry
                     raise ValueError(
@@ -1138,34 +1091,20 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
                         "(or keep the default, which derives the id from "
                         "checkpointLocation)."
                     )
-                base = versions[-1]
                 units = list(prev["units"]) + new_units
-                dv = list(prev.get("dv", []))
-            else:
-                base, txns, units, dv = 0, {}, new_units, []
             txns[self.txn_app] = int(batchId)
-            doc = {
-                "version": base + 1,
-                "operation": "pyds-stream-append",
-                "committed_at": _utc_now_iso(),
-                "partition_by": list(self.partition_by),
-                "units": units,
-                "dv": dv,
-                "txn": txns,
-            }
-            if versions and prev.get("identity_high"):
-                doc["identity_high"] = int(prev["identity_high"])
-            target = os.path.join(log, f"{base + 1:08d}.json")
-            tmp = target + f".tmp-{uuid_hex()}"
-            with open(tmp, "w") as f:
-                json.dump(doc, f, indent=1)
             try:
-                os.link(tmp, target)  # atomic-exclusive claim
+                commit_manifest(
+                    self.path,
+                    units,
+                    "pyds-stream-append",
+                    self.partition_by,
+                    base_version=base,
+                    txn=txns,
+                )
                 return
-            except FileExistsError:
+            except ConcurrentWriteError:
                 continue  # lost the race: re-read and rebase
-            finally:
-                os.remove(tmp)
         raise RuntimeError(
             f"could not commit batch {batchId} after 50 rebase attempts"
         )

@@ -16,7 +16,8 @@ implemented from scratch:
 - Readers resolve the highest manifest and read exactly the files it
   lists — writers never mutate visible data, so reads are snapshot-
   isolated; old manifests give time travel (`read(version=N)`).
-- Commits are atomic: write the new manifest to a temp name, then
+- Commits are atomic, and every one goes through `commit_manifest`:
+  write the new manifest to a temp name unique to the writer, then
   os.link into place (exclusive-create on POSIX); link failure detects a
   concurrent writer (single-writer optimistic model, like Delta's
   protocol but without retry logic).
@@ -192,6 +193,117 @@ class ConcurrentWriteError(RuntimeError):
     pass
 
 
+def _manifest_file(path: str, version: int) -> str:
+    return os.path.join(path, _LOG_DIR, f"{version:08d}.json")
+
+
+def _log_versions(path: str) -> list[int]:
+    log = os.path.join(path, _LOG_DIR)
+    if not os.path.isdir(log):
+        return []
+    return sorted(
+        int(f.split(".")[0]) for f in os.listdir(log) if f.endswith(".json")
+    )
+
+
+def manifest_doc(path: str, version: int) -> dict:
+    """Parsed manifest `version` of the table at `path`, via a
+    process-wide cache. Manifests are immutable once committed
+    (exclusive-create link), so caching by path is sound; the existence
+    re-check keeps vacuum semantics (a reclaimed manifest must raise,
+    not serve a stale cached copy). Without this, ops that consult the
+    manifest several times per commit (units + dv + column mapping)
+    re-parse a potentially multi-MB JSON — measured 4x on the
+    silver->gold mart bench, where per-file stats dominate the manifest
+    size."""
+    mf = _manifest_file(path, version)
+    doc = _MANIFEST_CACHE.get(mf)
+    if doc is not None and os.path.exists(mf):
+        return doc
+    with open(mf) as f:
+        doc = json.load(f)
+    if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
+        _MANIFEST_CACHE.clear()
+    _MANIFEST_CACHE[mf] = doc
+    return doc
+
+
+def commit_manifest(
+    path: str,
+    units: list[dict],
+    op: str,
+    partition_by: Sequence[str],
+    base_version: int,
+    dv: list[str] | str = "carry",
+    colmap: object = "carry",
+    identity_high: int | str = "carry",
+    txn: dict | str = "carry",
+) -> int:
+    """The one way a laketable version is committed (LakeTable and the
+    ``laketable`` format's batch and stream writers all call it; no
+    SparkSession needed). `units` are manifest unit documents.
+    `base_version` = the snapshot version the caller's decision was READ
+    at (0 for an empty table); the commit targets base+1, so a
+    concurrent commit in between makes the exclusive create fail
+    (lost-update detection, Delta's optimistic protocol).
+
+    Every "carry" field is copied from the base snapshot: `dv` (the
+    deletion-vector dirs — append/merge commits keep old rows deleted;
+    rewriting commits pass [] because the rewrite materialized the
+    deletions), `colmap` (({logical: physical}, [dropped physical])),
+    `identity_high` (the identity high-water mark) and `txn` (the
+    exactly-once ledger). Every manifest records `committed_at`, which
+    TIMESTAMP AS OF and vacuum(retain_hours) index.
+
+    The manifest is written under a temp name unique to this writer and
+    hard-linked into place (exclusive-create on POSIX, unlike rename);
+    the losing writer of a race gets ConcurrentWriteError. Returns the
+    committed version."""
+    os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
+    prev = manifest_doc(path, base_version) if base_version else {}
+    new_version = base_version + 1
+    doc = {
+        "version": new_version,
+        "operation": op,
+        "committed_at": datetime.now(timezone.utc).isoformat(),
+        "partition_by": list(partition_by),
+        "units": units,
+        "dv": sorted(prev.get("dv", []) if dv == "carry" else dv),
+    }
+    cm, dropped = (
+        (prev.get("column_map", {}), prev.get("column_dropped", []))
+        if colmap == "carry"
+        else colmap  # type: ignore[misc]
+    )
+    if cm:
+        doc["column_map"] = dict(cm)
+    if dropped:
+        doc["column_dropped"] = list(dropped)
+    ih = (
+        int(prev.get("identity_high", 0))
+        if identity_high == "carry"
+        else int(identity_high)  # type: ignore[arg-type]
+    )
+    if ih:
+        doc["identity_high"] = ih
+    tx = dict(prev.get("txn", {}) if txn == "carry" else txn)  # type: ignore[arg-type]
+    if tx:
+        doc["txn"] = tx
+    target = _manifest_file(path, new_version)
+    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(doc, f, indent=1)
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
+        raise ConcurrentWriteError(
+            f"version {new_version} already committed by another writer"
+        ) from None
+    finally:
+        os.remove(tmp)
+    return new_version
+
+
 class LakeTable:
     """A manifest-logged parquet table. All operations are atomic commits."""
 
@@ -284,15 +396,10 @@ class LakeTable:
         return os.path.join(self.path, _LOG_DIR)
 
     def _manifest_file(self, version: int) -> str:
-        return os.path.join(self._log_path(), f"{version:08d}.json")
+        return _manifest_file(self.path, version)
 
     def _versions(self) -> list[int]:
-        log = self._log_path()
-        if not os.path.isdir(log):
-            return []
-        return sorted(
-            int(f.split(".")[0]) for f in os.listdir(log) if f.endswith(".json")
-        )
+        return _log_versions(self.path)
 
     def latest_version(self) -> int | None:
         versions = self._versions()
@@ -323,24 +430,7 @@ class LakeTable:
         return int(m) if m is not None else None
 
     def _manifest_doc(self, version: int) -> dict:
-        """Parsed manifest for `version`, via a process-wide cache.
-        Manifests are immutable once committed (exclusive-create link),
-        so caching by path is sound; the existence re-check keeps
-        vacuum semantics (a reclaimed manifest must raise, not serve a
-        stale cached copy). Without this, ops that consult the manifest
-        several times per commit (units + dv + column mapping) re-parse
-        a potentially multi-MB JSON — measured 4x on the silver->gold
-        mart bench, where per-file stats dominate the manifest size."""
-        path = self._manifest_file(version)
-        doc = _MANIFEST_CACHE.get(path)
-        if doc is not None and os.path.exists(path):
-            return doc
-        with open(path) as f:
-            doc = json.load(f)
-        if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
-            _MANIFEST_CACHE.clear()
-        _MANIFEST_CACHE[path] = doc
-        return doc
+        return manifest_doc(self.path, version)
 
     def _read_manifest(self, version: int) -> list[_Unit]:
         return [_Unit.from_json(u) for u in self._manifest_doc(version)["units"]]
@@ -368,65 +458,22 @@ class LakeTable:
         identity_high: int | str = "carry",
         txn: dict | str = "carry",
     ) -> int:
-        """Atomic manifest commit. `base_version` = the snapshot version
-        the caller's decision was READ at; the commit targets base+1, so
-        a concurrent commit in between makes the exclusive create fail
-        (lost-update detection, Delta's optimistic protocol). Without a
-        base (overwrite — no read dependency), targets latest+1.
-
-        `dv`: deletion-vector dirs for the new snapshot. The default
-        "carry" keeps the previous snapshot's tombstones active (append/
-        merge commits: old rows stay deleted); rewriting commits
-        (overwrite/compact/cow-delete) pass [] because the rewrite
-        materialized the deletions."""
-        os.makedirs(self._log_path(), exist_ok=True)
-        current = base_version if base_version is not None else self.latest_version()
-        new_version = (current or 0) + 1
-        if dv == "carry":
-            dv = self._read_dv(current) if current else []
-        cm, dropped = (
-            (self._colmap(current) if current else ({}, []))
-            if colmap == "carry"
-            else colmap  # type: ignore[misc]
+        """Atomic manifest commit of `units` in this table's layout; see
+        commit_manifest for the base-version and carry rules. Without a
+        base (overwrite — no read dependency), targets latest+1."""
+        return commit_manifest(
+            self.path,
+            [u.to_json() for u in units],
+            op,
+            self.partition_by,
+            base_version
+            if base_version is not None
+            else (self.latest_version() or 0),
+            dv,
+            colmap,
+            identity_high,
+            txn,
         )
-        doc = {
-            "version": new_version,
-            "operation": op,
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            "partition_by": self.partition_by,
-            "units": [u.to_json() for u in units],
-            "dv": sorted(dv),
-        }
-        if cm:
-            doc["column_map"] = cm
-        if dropped:
-            doc["column_dropped"] = dropped
-        ih = (
-            (self._identity_high(current) if current else 0)
-            if identity_high == "carry"
-            else int(identity_high)  # type: ignore[arg-type]
-        )
-        if ih:
-            doc["identity_high"] = ih
-        tx = self._txns(current) if txn == "carry" else dict(txn)  # type: ignore[arg-type]
-        if tx:
-            doc["txn"] = tx
-        tmp = self._manifest_file(new_version) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1)
-        target = self._manifest_file(new_version)
-        try:
-            # os.link is atomic-exclusive: it FAILS if target exists,
-            # unlike os.rename which silently replaces it — the losing
-            # writer of a race must error, not clobber the winner.
-            os.link(tmp, target)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"version {new_version} already committed by another writer"
-            ) from None
-        finally:
-            os.remove(tmp)
-        return new_version
 
     # ----------------------------------------------------------------- data
 

@@ -451,7 +451,11 @@ def test_incremental_dv_export_and_version_travel(spark, tmp_path):
     )
     export_delta_log(t)  # v0: plain tier (no DVs yet)
     log0 = os.path.join(t.path, "_delta_log", f"{0:020d}.json")
-    p0 = [json.loads(l) for l in open(log0) if l.strip()][0]["protocol"]
+    p0 = next(
+        a["protocol"]
+        for a in (json.loads(l) for l in open(log0) if l.strip())
+        if "protocol" in a
+    )
     assert p0 == {"minReaderVersion": 1, "minWriterVersion": 2}
 
     t.delete(F.col("id") < 5, mode="mor")
@@ -2343,6 +2347,14 @@ def test_in_commit_timestamps_written_and_monotonic(spark, tmp_path):
     assert all(t is not None for _v, t in with_ict)
     ts = [t for _v, t in with_ict]
     assert ts == sorted(ts) and len(set(ts)) == len(ts)
+    # and commitInfo is the first action of each of those commits, as
+    # PROTOCOL.md requires once in-commit timestamps are enabled
+    assert all(
+        "commitInfo" in json.loads(
+            open(os.path.join(p, "_delta_log", f"{v:020d}.json")).readline()
+        )
+        for v, _t in with_ict
+    )
     # the table still reads and time travel uses the ICT clock
     assert sorted(
         (r.id, r.v) for r in read_delta_log(spark, p).collect()

@@ -359,13 +359,13 @@ def test_batch_writer_concurrency(spark, tmp_path):
     assert _rows(spark.read.format("delta").load(p)) == [(0,), (1,), (2,)]
     assert DeltaSnapshot(p).version == 2
 
-    from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_table import (
-        _CommitConflict,
-        _write_commit_lines,
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
+        DeltaCommitConflict,
+        commit_delta,
     )
 
-    with pytest.raises(_CommitConflict):
-        _write_commit_lines(p, 2, [{"commitInfo": {"timestamp": 0}}])
+    with pytest.raises(DeltaCommitConflict):
+        commit_delta(p, 2, [], "WRITE")
 
 
 def test_optimize_delta_compacts_small_files(spark, tmp_path):

@@ -177,6 +177,23 @@ def test_writer_partitioned_layout(spark, tmp_path):
         ).save(p)
 
 
+def test_partitioned_format_write_records_committed_at(spark, tmp_path):
+    """A partitioned format write records committed_at like every other
+    manifest: TIMESTAMP AS OF resolution and vacuum(retain_hours) index
+    that field on each manifest they walk."""
+    p = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "x"), (2, "y")], "id long, p string"
+    ).write.format("laketable").option("partition_by", "p").mode(
+        "overwrite"
+    ).save(p)
+    t = LakeTable(spark, p, partition_by=["p"])
+    v = t.latest_version()
+    assert t.version_at_timestamp("2999-01-01T00:00:00") == v
+    t.vacuum(retain_hours=0.0)
+    assert _rows(t.read().select("id", "p")) == [(1, "x"), (2, "y")]
+
+
 def test_stream_rate_limit_bounds_batches(spark, tmp_path):
     """maxVersionsPerTrigger: after the first commit, each batch
     advances at most N manifest versions (bounded backlog drain); the
