@@ -16,11 +16,14 @@ first amortizes JVM/codegen startup so numbers reflect steady-state
 engine throughput, not JIT warmup.
 
 Regression tracking (VERDICT r1 #9): per-query steady-state times are
-compared against the newest recorded BENCH_r*.json; anything >1.25x
-slower lands in "regressions". The table layer is timed separately via
-the silver->gold mart round-trip (pipelines/mart_bench) under
-"table_layer" — kept OUT of the headline total so `value` stays
-comparable across rounds.
+compared against the newest recorded BENCH_r*.json made at the SAME
+core count; anything >1.25x slower lands in "regressions". With no
+recorded run at this core count the line says "no like-for-like
+baseline" and flags nothing: a 4-core run read against a 32-core record
+flags the queries that scale best, not the ones that got slower. The
+table layer is timed separately via the silver->gold mart round-trip
+(pipelines/mart_bench) under "table_layer" — kept OUT of the headline
+total so `value` stays comparable across rounds.
 
 Environment calibration: the shared VM's effective speed drifts
 between rounds (measured: the IDENTICAL r1 commit re-benched 1.7x
@@ -160,38 +163,57 @@ def _recover_from_tail(doc: dict) -> dict | None:
     return out
 
 
-def _latest_recorded() -> tuple[str, dict] | None:
-    """Newest parseable record of a COMPLETED round, by round number.
+# Rounds recorded before bench.py stated its core count ran on 32 cores;
+# the 8-core runs of that era are the `_c8`-suffixed archives.
+_LEGACY_CPUS = 32
 
-    For each driver-recorded round N (a BENCH_r{N}.json exists), prefer
-    the full-fidelity archive bench.py wrote during that round
-    (BENCH_DETAIL_r{N}.json) over the driver's bounded ~2,000-char
-    stdout capture — the r6->r7 prev comparison covered only 13 shared
-    queries because it had to read a truncated tail (VERDICT r7
-    procedural note). Falls back to the driver file's parsed envelope,
-    then tail recovery, then earlier rounds. Rounds without a driver
-    BENCH_r{N}.json are NOT candidates: a mid-round local archive must
-    never become its own round's baseline."""
-    here = Path(__file__).resolve().parent
+
+def _latest_recorded(
+    cpus: int, here: Path = Path(__file__).resolve().parent
+) -> tuple[str, dict] | None:
+    """Newest parseable record of a COMPLETED round run at `cpus` cores,
+    by round number.
+
+    A record's core count is its `_c{N}` archive suffix, else the
+    `cpus` the record or its "parsed" envelope states, else
+    _LEGACY_CPUS. For each recorded round N (a BENCH_r{N}.json or
+    BENCH_r{N}_c{cpus}.json exists), prefer the full-fidelity archive
+    bench.py wrote during that round (BENCH_DETAIL_r{N}.json, unless it
+    states another core count) over the round file's bounded
+    ~2,000-char stdout capture — the r6->r7 prev comparison covered
+    only 13 shared queries because it had to read a truncated tail
+    (VERDICT r7 procedural note). Falls back to the round file's
+    parsed envelope, then tail recovery, then earlier rounds. Rounds
+    without a BENCH_r{N}.json are NOT candidates: a mid-round local
+    archive must never become its own round's baseline."""
     cands = []
     for p in glob.glob(str(here / "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
+        m = re.search(r"BENCH_r(\d+)(_c(\d+))?\.json$", p)
         if m:
-            cands.append((int(m.group(1)), p))
-    for n, path in sorted(cands, reverse=True):
-        detail_path = here / f"BENCH_DETAIL_r{n:02d}.json"
-        try:
-            with open(detail_path) as f:
-                doc = json.load(f)
-            if doc.get("queries"):
-                return detail_path.name, doc
-        except (OSError, json.JSONDecodeError):
-            pass
+            cands.append((int(m.group(1)), m.group(2) or "", p))
+    for n, suffix, path in sorted(cands, reverse=True):
         try:
             with open(path) as f:
                 doc = json.load(f)
         except (OSError, json.JSONDecodeError):
             continue
+        if suffix:
+            rec_cpus = int(suffix[2:])
+        else:
+            parsed = doc.get("parsed")
+            rec_cpus = doc.get("cpus") or (
+                parsed.get("cpus") if isinstance(parsed, dict) else None
+            ) or _LEGACY_CPUS
+        if rec_cpus != cpus:
+            continue
+        detail_path = here / f"BENCH_DETAIL_r{n:02d}{suffix}.json"
+        try:
+            with open(detail_path) as f:
+                detail = json.load(f)
+            if detail.get("queries") and detail.get("cpus", cpus) == cpus:
+                return detail_path.name, detail
+        except (OSError, json.JSONDecodeError):
+            pass
         # the driver wraps bench.py's JSON line under "parsed"
         if "parsed" in doc and isinstance(doc["parsed"], dict):
             doc = doc["parsed"]
@@ -382,9 +404,13 @@ def main() -> None:
         if ab_stale is not None:
             ab_paired = {}
 
-    # regression check vs the newest recorded round
-    prev = _latest_recorded()
+    # regression check vs the newest round recorded at this core count
+    cpus = spark.sparkContext.defaultParallelism
+    prev = _latest_recorded(cpus)
     prev_info: dict = {}
+    baseline = prev[0] if prev else "no like-for-like baseline"
+    if prev is None:
+        print(f"bench: {baseline} (no recorded run at {cpus} cpus)", file=sys.stderr)
     regressions: dict[str, float] = {}
     workload_changes: dict[str, str] = {}
     ab_cleared: dict[str, dict] = {}
@@ -458,6 +484,8 @@ def main() -> None:
         "ab_paired": ab_paired,
         "ab_stale": ab_stale,
         "sf": sf_val,
+        "cpus": cpus,
+        "baseline": baseline,
     }
     here = Path(__file__).resolve().parent
     with open(here / "BENCH_DETAIL.json", "w") as f:
@@ -507,6 +535,8 @@ def main() -> None:
             "median_query_ratio": prev_info.get("median_query_ratio"),
             "ab_median_paired_ratio": ab_paired.get("median_paired_ratio"),
             "sf": sf_val,
+            "cpus": cpus,
+            "baseline": baseline,
         },
         separators=(",", ":"),
     )

@@ -61,30 +61,3 @@ def modal_value(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def exact_dedup(
-    df: DataFrame,
-    cols: str | Sequence[str],
-    keep_col: str | None = None,
-    tie_breakers: Sequence[str] = (),
-) -> DataFrame:
-    """Exact duplicate removal on ``cols``. With ``keep_col``, keeps the
-    row with the MINIMUM value of that column per duplicate group;
-    ``tie_breakers`` (ascending) pin the survivor when keep_col TIES
-    within a group — without them the survivor's payload would vary
-    with partition arrival order (r5 review; the SURVEY §7 risk-1
-    nondeterminism this module exists to prevent — dedup_latest has the
-    same parameter for the same reason). Without keep_col: a plain
-    dropDuplicates (hash agg, arbitrary survivor, documented as such).
-    """
-    if keep_col is None:
-        return df.dropDuplicates(_as_list(cols))
-    w = W.partitionBy(*_as_list(cols)).orderBy(
-        F.asc(keep_col), *[F.asc(c) for c in tie_breakers]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

@@ -54,7 +54,6 @@ import math
 import struct
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -1549,15 +1548,6 @@ def decode_pixel_stats(
             )
 
     return df.mapInPandas(kernel, schema=f"{id_col} long, {PIXEL_STATS_SCHEMA}")
-
-
-@dataclass
-class ImageMeta:
-    """Typed metadata accompanying an image payload column."""
-
-    width: int
-    height: int
-    format: str  # e.g. "jpeg", "png"
 
 
 IMAGE_FEATURE_SCHEMA = (

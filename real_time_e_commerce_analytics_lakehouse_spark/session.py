@@ -93,11 +93,3 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver testdata parquet tables as DataFrames keyed by name."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in TESTDATA_TABLES
-    }

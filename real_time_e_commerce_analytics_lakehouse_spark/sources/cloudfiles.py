@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -136,7 +137,7 @@ class _SchemaTracker:
             return best[0], StructType.fromJson(json.load(f))
 
     def write(self, n: int, schema: StructType) -> None:
-        tmp = os.path.join(self.loc, f".schema_{n}.tmp")
+        tmp = os.path.join(self.loc, f".schema_{n}.tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(schema.jsonValue(), f)
         os.replace(tmp, os.path.join(self.loc, f"schema_{n}.json"))

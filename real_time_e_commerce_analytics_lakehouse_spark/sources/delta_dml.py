@@ -185,30 +185,6 @@ def _drop_mat(df: DataFrame, snap: DeltaSnapshot) -> DataFrame:
     return df.drop(*mat) if mat else df
 
 
-def _with_mat(
-    df: DataFrame,
-    snap: DeltaSnapshot,
-    row_id_from: str | None = None,
-) -> DataFrame:
-    """Align a branch frame with the scan's materialized row-tracking
-    columns so unionByName composes: ``row_id_from`` names a column
-    (a qualified expr is fine) holding the row's PRESERVED id (updates
-    keep their id per the spec); the commit-version column is NULL —
-    readers fall back to the new add's defaultRowCommitVersion, which
-    IS this commit. Inserted rows pass None for both (fresh ids)."""
-    mat = _rt_mat_names(snap)
-    if not mat:
-        return df
-    rid = (
-        F.expr(row_id_from)
-        if row_id_from is not None
-        else F.lit(None).cast("long")
-    )
-    return df.withColumn(mat[0], rid.cast("long")).withColumn(
-        mat[1], F.lit(None).cast("long")
-    )
-
-
 def _scan_with_file(
     spark: SparkSession, path: str, snap: DeltaSnapshot
 ) -> DataFrame:

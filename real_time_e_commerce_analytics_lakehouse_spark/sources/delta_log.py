@@ -2119,7 +2119,7 @@ def compact_delta_log(
                 adds.pop(rel, None)
                 removes[rel] = a["remove"]
     out = os.path.join(log, f"{start:020d}.{end:020d}.compacted.json")
-    tmp = out + ".tmp"
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         if proto is not None:
             f.write(json.dumps({"protocol": proto}) + "\n")
@@ -2181,7 +2181,7 @@ def write_delta_crc(path: str, version: int | None = None) -> str:
         version = DeltaSnapshot(path).version
     payload = _version_checksum(path, version)
     out = os.path.join(path, _DELTA_DIR, f"{version:020d}.crc")
-    tmp = out + ".tmp"
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(payload, f)
     os.replace(tmp, out)
@@ -3201,7 +3201,7 @@ def delta_ack(cursor_file: str, version: int) -> None:
     """Advance a delta_changes_since cursor after the batch is safely
     materialized (atomic rename, same recipe as laketable commits)."""
     os.makedirs(os.path.dirname(cursor_file) or ".", exist_ok=True)
-    tmp = cursor_file + ".tmp"
+    tmp = f"{cursor_file}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump({"version": int(version)}, f)
     os.replace(tmp, cursor_file)

@@ -594,7 +594,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
 
 def _footer_stats(path: str) -> dict[str, list]:
     """Per-column [min, max] from the parquet footer of a file the task
-    just wrote — the engine's _harvest_stats discipline (tables.py:417):
+    just wrote — the engine's LakeTable._harvest_footers discipline:
     int/float/str only (bool and binary excluded; parquet writers adjust
     truncated string bounds so footer min/max are valid bounds), and a
     column whose stats are missing in any row group is omitted (no

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -76,7 +77,7 @@ class IncrementalRunner:
             return json.load(f)["version"]
 
     def _save(self, consumer: str, version: int) -> None:
-        tmp = self._state_file(consumer) + ".tmp"
+        tmp = f"{self._state_file(consumer)}.tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump({"version": version}, f)
         os.replace(tmp, self._state_file(consumer))

@@ -27,6 +27,12 @@ implemented from scratch:
   proportional to the update, not the table (SURVEY §7 risk 4; at
   100 TB facts are date-partitioned and a daily batch rewrites a few
   partitions out of thousands).
+- Each manifest unit records its Spark schema (the JSON that Spark's
+  parquet footers carry), as Delta's log records `metaData.schemaString`.
+  A read folds the units' schemas with Spark's mergeSchema rule and
+  hands the result to the scan, so building a read runs no Spark job;
+  only units that record no schema (older manifests, `convert_parquet`,
+  format-written units) fall back to footer inference, which is a job.
 - Snapshot reads are ONE multi-path parquet scan regardless of how many
   units the snapshot holds (thousands under streaming append) — not a
   per-unit union loop, which would make driver-side planning O(units)
@@ -59,12 +65,13 @@ import shutil
 import uuid
 from datetime import datetime, timezone
 from collections.abc import Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import StructType
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -81,6 +88,12 @@ _MANIFEST_CACHE_MAX = 256
 # marker string embedded in the in-plan duplicate-source-key guard's
 # raise_error message; merge_upsert converts it back into a ValueError
 _DUP_KEY_MARK = "MERGE_DUPLICATE_SOURCE_KEYS"
+
+# parquet footer key under which Spark records the written frame's schema
+# (JSON) — what footer schema inference reads back
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+_DECIMAL = re.compile(r"decimal\((\d+),\s*(\d+)\)")
 
 # marker for CHECK-constraint violations (same in-plan raise_error
 # pattern; _write_units converts it back into a ValueError)
@@ -162,6 +175,9 @@ class _Unit:
     # useless (Delta's BLOOMFILTER INDEX analog)
     bloom: dict[str, str] = field(default_factory=dict)
     file_bloom: dict[str, dict[str, str]] = field(default_factory=dict)
+    # Spark schema JSON of the unit's files (footer row metadata); None
+    # for units written before schemas were recorded or by other writers
+    schema: str | None = None
 
     def to_json(self) -> dict:
         d = {
@@ -174,6 +190,8 @@ class _Unit:
         if self.bloom:
             d["bloom"] = self.bloom
             d["file_bloom"] = self.file_bloom
+        if self.schema:
+            d["schema"] = self.schema
         return d
 
     @staticmethod
@@ -186,7 +204,73 @@ class _Unit:
             file_stats=dict(d.get("file_stats", {})),
             bloom=dict(d.get("bloom", {})),
             file_bloom=dict(d.get("file_bloom", {})),
+            schema=d.get("schema"),
         )
+
+
+def _merge_types(a: object, b: object, case_sensitive: bool) -> object:
+    """Spark's mergeSchema rule on schema-JSON types: structs merge
+    field by field, keeping the left's order and metadata and appending
+    new fields at the end; arrays and maps merge element-wise; decimals
+    of one scale widen to the larger precision; anything else must be
+    equal."""
+    if a == b:
+        return a
+    if isinstance(a, dict) and isinstance(b, dict) and a["type"] == b["type"]:
+        if a["type"] == "struct":
+            key = (lambda n: n) if case_sensitive else str.lower
+            fields = list(a["fields"])
+            at = {key(f_["name"]): i for i, f_ in enumerate(fields)}
+            for f_ in b["fields"]:
+                i = at.get(key(f_["name"]))
+                if i is None:
+                    at[key(f_["name"])] = len(fields)
+                    fields.append(f_)
+                else:
+                    g = fields[i]
+                    fields[i] = {
+                        **g,
+                        "type": _merge_types(g["type"], f_["type"], case_sensitive),
+                        "nullable": g["nullable"] or f_["nullable"],
+                    }
+            return {**a, "fields": fields}
+        if a["type"] == "array":
+            return {
+                **a,
+                "elementType": _merge_types(
+                    a["elementType"], b["elementType"], case_sensitive
+                ),
+                "containsNull": a["containsNull"] or b["containsNull"],
+            }
+        if a["type"] == "map":
+            return {
+                **a,
+                "keyType": _merge_types(a["keyType"], b["keyType"], case_sensitive),
+                "valueType": _merge_types(
+                    a["valueType"], b["valueType"], case_sensitive
+                ),
+                "valueContainsNull": a["valueContainsNull"]
+                or b["valueContainsNull"],
+            }
+    da = _DECIMAL.fullmatch(a) if isinstance(a, str) else None
+    db = _DECIMAL.fullmatch(b) if isinstance(b, str) else None
+    if da and db and da[2] == db[2]:
+        return f"decimal({max(int(da[1]), int(db[1]))},{da[2]})"
+    raise ValueError(f"cannot merge incompatible data types {a} and {b}")
+
+
+def _merged_schema(spark: SparkSession, schemas: list[str]) -> StructType:
+    """The schema a mergeSchema read infers from files with these
+    recorded schemas, given in the order inference folds them (by file
+    path), computed with no Spark job. Folding a schema twice changes
+    nothing, so each distinct one is folded once."""
+    distinct = list(dict.fromkeys(schemas))
+    merged = json.loads(distinct[0])
+    if len(distinct) > 1:
+        cs = spark.conf.get("spark.sql.caseSensitive") == "true"
+        for s in distinct[1:]:
+            merged = _merge_types(merged, json.loads(s), cs)
+    return StructType.fromJson(merged)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -477,28 +561,39 @@ class LakeTable:
 
     # ----------------------------------------------------------------- data
 
-    def _harvest_stats(
+    def _harvest_footers(
         self, abs_dir: str
-    ) -> tuple[dict[str, list], dict[str, dict[str, list]]]:
-        """[min, max] for `stats_cols`, read from the parquet footers the
-        write just produced (row-group statistics — no extra Spark job).
-        Returns (unit_stats, per_file_stats); the per-file granularity is
+    ) -> tuple[str | None, dict[str, list], dict[str, dict[str, list]]]:
+        """The unit's schema and [min, max] for `stats_cols`, read from
+        the parquet footers the write just produced (no Spark job).
+        Returns (schema, unit_stats, per_file_stats).
+
+        The schema is the Spark schema JSON that Spark-written footers
+        record under `_SPARK_SCHEMA_KEY` — exactly what footer schema
+        inference returns. One write records the same schema in every
+        file, so without `stats_cols` only the first footer is opened.
+
+        The stats are row-group statistics; the per-file granularity is
         the Delta file-stats analog that makes skipping effective INSIDE
         a compacted unit (one clustered unit holds many narrow-range
         files). A column whose stats are missing/untrustworthy in any
         file is omitted everywhere (skipping stays safe: no stats, no
         pruning). Parquet writers adjust truncated string bounds, so
         footer min/max are always valid bounds."""
-        if not self.stats_cols:
-            return {}, {}
         import pyarrow.parquet as pq
 
+        schema = None
         per_file: dict[str, dict[str, list]] = {}
         bad: set[str] = set()
         for fn in sorted(os.listdir(abs_dir)):
             if not fn.endswith(".parquet"):
                 continue
             md = pq.ParquetFile(os.path.join(abs_dir, fn)).metadata
+            if schema is None:
+                raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+                schema = raw.decode() if raw else None
+            if not self.stats_cols:
+                break
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
             facc: dict[str, list] = {}
             for c in self.stats_cols:
@@ -530,7 +625,7 @@ class LakeTable:
                     unit[c] = [min(unit[c][0], v[0]), max(unit[c][1], v[1])]
                 else:
                     unit[c] = list(v)
-        return unit, per_file
+        return schema, unit, per_file
 
     def _bloom_hash_cols(self, col: str) -> list:
         """The k position expressions for one column (shared by harvest
@@ -789,7 +884,7 @@ class LakeTable:
     def _write_units_at(self, df: DataFrame, dirname: str) -> list[_Unit]:
         if not self.partition_by:
             df.write.mode("errorifexists").parquet(dirname)
-            ustats, fstats = self._harvest_stats(dirname)
+            schema, ustats, fstats = self._harvest_footers(dirname)
             ubloom, fbloom = self._harvest_bloom(dirname)
             return [
                 _Unit(
@@ -798,6 +893,7 @@ class LakeTable:
                     file_stats=fstats,
                     bloom=ubloom,
                     file_bloom=fbloom,
+                    schema=schema,
                 )
             ]
         # optimized-write analog (Delta adaptive shuffle before write):
@@ -826,7 +922,7 @@ class LakeTable:
                     if "=" in seg:
                         k, v = seg.split("=", 1)
                         partition[k] = v
-                ustats, fstats = self._harvest_stats(root)
+                schema, ustats, fstats = self._harvest_footers(root)
                 ubloom, fbloom = self._harvest_bloom(root)
                 units.append(
                     _Unit(
@@ -837,8 +933,12 @@ class LakeTable:
                         file_stats=fstats,
                         bloom=ubloom,
                         file_bloom=fbloom,
+                        schema=schema,
                     )
                 )
+        if not units:
+            # no rows, so no partition dir and nothing to commit
+            shutil.rmtree(dirname)
         return units
 
     def _unit_key(self, u: _Unit) -> tuple[str, ...]:
@@ -903,8 +1003,16 @@ class LakeTable:
         dv_paths: list[str] | None = None,
         with_row_index: str | None = None,
     ) -> DataFrame:
-        """ONE multi-path parquet scan over all units (mergeSchema covers
-        additive evolution across commits). Partition columns are restored
+        """ONE multi-path parquet scan over all units. Its schema is
+        folded from the schemas the manifest records per unit (as Delta
+        readers take `metaData.schemaString` from the log), with Spark's
+        mergeSchema rule, so additive evolution across commits reads as
+        before and building the read runs no Spark job: no footer
+        inference. Units that record no schema (older manifests,
+        `convert_parquet`, format-written units) make the scan infer it
+        from the footers instead, which costs one job per read.
+
+        Partition columns are restored
         by joining a broadcast unit-metadata frame keyed on the trailing
         dir segments of `_metadata.file_path` — O(1) scans in the plan no
         matter how many units the snapshot holds, vs the O(units) union
@@ -944,7 +1052,19 @@ class LakeTable:
                 paths.append(base)
             else:
                 paths.extend(os.path.join(base, f) for f in sel)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # footer inference folds the files in path order, not manifest
+        # order; folding in the same order gives the same column order
+        schemas = [
+            u.schema
+            for u in sorted(
+                units, key=lambda u: os.path.abspath(os.path.join(self.path, u.path))
+            )
+        ]
+        if all(schemas):
+            reader = self.spark.read.schema(_merged_schema(self.spark, schemas))
+        else:
+            reader = self.spark.read.option("mergeSchema", "true")
+        df = reader.parquet(*paths)
         # capture metadata into real columns ONCE, at the scan — hidden
         # _metadata is not resolvable after a join, and the DV anti-join
         # below is a join
@@ -2102,17 +2222,12 @@ class LakeTable:
         if dest.exists():
             raise FileExistsError(f"table already exists at {dest_path}")
         rebased = [
-            _Unit(
+            replace(
+                u,
                 path=os.path.relpath(
                     os.path.join(os.path.abspath(self.path), u.path),
                     os.path.abspath(dest_path),
                 ),
-                partition=dict(u.partition),
-                partition_types=dict(u.partition_types),
-                stats=dict(u.stats),
-                file_stats=dict(u.file_stats),
-                bloom=dict(u.bloom),
-                file_bloom=dict(u.file_bloom),
             )
             for u in self._read_manifest(v)
         ]
@@ -2517,11 +2632,15 @@ class LakeTable:
             return self.overwrite(source)
         v = self.latest_version()
         current = self._read_manifest(v)
-        fresh = self._insert_only_fresh(source, ks, current)
-        if fresh.isEmpty():
+        # written without a separate emptiness check (which would run
+        # the anti-join twice); the footers tell whether anything was new
+        new_units = self._write_units(self._insert_only_fresh(source, ks, current))
+        if not sum(self._unit_nrows(u) for u in new_units):
+            for u in new_units:
+                shutil.rmtree(os.path.join(self.path, u.path))
             return v  # nothing new: no commit needed
         return self._commit(
-            current + self._write_units(fresh), op="merge_insert_only", base_version=v
+            current + new_units, op="merge_insert_only", base_version=v
         )
 
     def _insert_only_fresh(

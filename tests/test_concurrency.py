@@ -358,3 +358,23 @@ def test_each_log_format_has_one_commit_function():
         ("tables.py", "commit_manifest"),
         (os.path.join("sources", "delta_log.py"), "commit_delta"),
     }
+
+
+def test_log_files_stage_through_temp_names_unique_per_writer():
+    """A fixed `<file>.tmp` staging name lets two writers of one file
+    truncate each other's half-written temp; every staged write in the
+    engine uses a `.tmp-<uuid>` name, as commit_delta does."""
+    import ast
+    import glob
+
+    pkg = os.path.join(REPO, "real_time_e_commerce_analytics_lakehouse_spark")
+    fixed = []
+    for fn in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        for node in ast.walk(ast.parse(open(fn).read())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.endswith(".tmp")
+            ):
+                fixed.append((os.path.relpath(fn, pkg), node.lineno))
+    assert fixed == []

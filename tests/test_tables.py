@@ -314,6 +314,151 @@ def test_snapshot_read_one_scan_unpartitioned_appends(spark, tmp_table):
     assert snap.count() == 11
 
 
+def _jobs_under_group(spark, group, fn):
+    """(fn's result, ids of the Spark jobs fn launched on this thread)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_takes_its_schema_from_the_manifest_without_a_job(spark, tmp_table):
+    """Every unit records its schema, so building a read (and asking for
+    its schema) launches no Spark job — no footer schema inference."""
+    t = LakeTable(spark, tmp_table, partition_by=["p"])
+    t.overwrite(spark.createDataFrame([(1, "a", "x")], "id long, v string, p string"))
+    t.append(spark.createDataFrame([(2, "b", "y", 5)], "id long, v string, p string, n int"))
+    snap, jobs = _jobs_under_group(
+        spark, "laketable_read_schema", lambda: t.read()
+    )
+    assert jobs == []
+    assert snap.columns == ["id", "v", "n", "p"]
+    assert sorted(snap.collect()) == sorted(
+        [(1, "a", None, "x"), (2, "b", 5, "y")]
+    )
+
+
+def test_replayed_merge_insert_only_leaves_no_commit_and_no_data_dir(spark, tmp_path):
+    """A replay writes the (empty) anti-join result once and finds it
+    empty from the footers: no commit, and the uncommitted dir is gone."""
+    for part in ([], ["v"]):
+        t = LakeTable(spark, str(tmp_path / f"t{len(part)}"), partition_by=part)
+        batch = _df(spark, [(1, "a", 1), (2, "b", 1)])
+        t.merge_insert_only(batch, keys="id")
+        version = t.latest_version()
+        data = os.path.join(t.path, "data")
+        dirs = sorted(os.listdir(data))
+        assert t.merge_insert_only(batch, keys="id") == version
+        assert t.latest_version() == version
+        assert sorted(os.listdir(data)) == dirs
+        assert t.read().count() == 2
+
+
+def _evolved_table(spark, path):
+    """An unpartitioned table whose units add columns over time: an
+    append adds a decimal and a struct, a later append widens the
+    decimal and the struct, and an insert-only merge adds a trailing
+    column."""
+    t = LakeTable(spark, path)
+    t.overwrite(_df(spark, [(1, "a", 1), (2, "b", 1)]))
+    t.append(
+        spark.sql(
+            "SELECT 3L AS id, 'c' AS v, 1L AS ver, "
+            "CAST(1.25 AS DECIMAL(10,2)) AS amt, named_struct('x', 1) AS s"
+        )
+    )
+    t.append(
+        spark.sql(
+            "SELECT 4L AS id, 'd' AS v, 1L AS ver, "
+            "CAST(12345678.5 AS DECIMAL(12,2)) AS amt, "
+            "named_struct('x', 2, 'y', 'q') AS s"
+        )
+    )
+    t.merge_insert_only(
+        spark.createDataFrame(
+            [(2, "B", 2, "dup"), (5, "e", 1, "new")],
+            "id long, v string, ver long, note string",
+        ),
+        keys="id",
+    )
+    return t
+
+
+def _footer_inferred(spark, t):
+    """A plain mergeSchema parquet read of the files the snapshot lists,
+    in manifest order."""
+    units = t._read_manifest(t.latest_version())
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(t.path, u.path) for u in units]
+    )
+
+
+def test_recorded_schemas_read_like_footer_inference(spark, tmp_table):
+    t = _evolved_table(spark, tmp_table)
+    units = t._read_manifest(t.latest_version())
+    assert all(u.schema for u in units)
+    assert len({u.schema for u in units}) > 2
+    got, want = t.read(), _footer_inferred(spark, t)
+    assert got.schema == want.schema
+    assert set(got.columns) == {"id", "v", "ver", "amt", "s", "note"}
+    assert dict(got.dtypes)["amt"] == "decimal(12,2)"
+    assert dict(got.dtypes)["s"] == "struct<x:int,y:string>"
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_recorded_schemas_fold_in_footer_inference_order(spark, tmp_table):
+    """Footer inference folds files by path, not in manifest order; the
+    recorded-schema fold must yield the same column order."""
+    t = LakeTable(spark, tmp_table)
+    units = []
+    for name, col in (("b", "zz"), ("a", "aa"), ("c", "mm")):
+        units += t._write_units_at(
+            spark.sql(f"SELECT 1L AS id, 'x' AS {col}"),
+            os.path.join(tmp_table, "data", name),
+        )
+    t._commit(units, op="overwrite")
+    assert t.read().columns == ["id", "aa", "zz", "mm"]
+    assert t.read().schema == _footer_inferred(spark, t).schema
+
+
+def test_units_without_a_schema_fall_back_to_footer_inference(spark, tmp_table):
+    """Manifests written before units recorded their schema still read
+    the same, through footer inference."""
+    import json as _json
+
+    from real_time_e_commerce_analytics_lakehouse_spark import tables
+
+    t = _evolved_table(spark, tmp_table)
+    recorded = t.read()
+    mf = os.path.join(t.path, "_log", f"{t.latest_version():08d}.json")
+    with open(mf) as f:
+        doc = _json.load(f)
+    for u in doc["units"]:
+        u.pop("schema")
+    with open(mf, "w") as f:
+        _json.dump(doc, f)
+    tables._MANIFEST_CACHE.clear()
+    assert not any(u.schema for u in t._read_manifest(t.latest_version()))
+    inferred, jobs = _jobs_under_group(
+        spark, "laketable_read_fallback", lambda: t.read()
+    )
+    assert jobs  # footer inference runs a job
+    assert inferred.schema == recorded.schema == _footer_inferred(spark, t).schema
+    assert sorted(inferred.collect()) == sorted(recorded.collect())
+
+
+def test_merged_schema_rejects_a_type_conflict(spark):
+    from real_time_e_commerce_analytics_lakehouse_spark.tables import _merged_schema
+
+    a = '{"type":"struct","fields":[{"name":"id","type":"long","nullable":true,"metadata":{}}]}'
+    b = a.replace('"long"', '"string"')
+    with pytest.raises(ValueError, match="incompatible"):
+        _merged_schema(spark, [a, b])
+
+
 def test_merge_insert_only_does_not_broadcast_target(spark, tmp_table):
     """VERDICT r1 wrong #1: the anti-join target must carry no forced
     broadcast hint — AQE decides, so a billion-key target cannot OOM."""
