@@ -81,6 +81,14 @@ def cosine(a: str, b: str, dialect: str) -> str:
     )
 
 
+def vec_sum(members: str, field: str) -> str:
+    """Spark: componentwise sum of the `field` arrays of an array of
+    structs, left-folded from 0.0 in array order — per position, the
+    same sum as folding that position's values as a sorted list."""
+    zero = f"transform({members}[0].{field}, x -> cast(0 as double))"
+    return f"aggregate({members}, {zero}, (acc, s) -> zip_with(acc, s.{field}, (a, b) -> a + b))"
+
+
 def literal_vector(values: list[float], dialect: str) -> str:
     """Embed a constant vector as a SQL literal (double elements)."""
     if dialect == "spark":

@@ -19,6 +19,11 @@ uncorrelated with position (r9, the sf0.1 levenshtein name graph's
 ~190-vertex chains: 26 rounds and 32.5 s vs 6.5 s for star rounds).
 
 Scale notes:
+- Each star step is ONE exchange: m is a min over a window
+  partitioned by u, not a groupBy joined back to the edges, and both
+  orientations of an edge come from one scan. A round is three
+  exchanges (two star windows, the canonical distinct) plus the
+  digest's one-row aggregate.
 - Each round's edge set is lineage-truncated (localCheckpoint) —
   without this the plan doubles every iteration and the driver dies
   planning round ~15 — and persisted, so later plans see its real
@@ -44,7 +49,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
@@ -73,6 +78,16 @@ def _edge_digest(df: DataFrame) -> tuple:
             F.count(F.lit(1)),
         ).collect()[0]
     )
+
+
+def _uv(u: str, v: str):
+    """Columns u, v as one (u, v) struct, for inline(array(...))."""
+    return F.struct(F.col(u).alias("u"), F.col(v).alias("v"))
+
+
+def _star_min():
+    """m = min(G(u) ∪ {u}), windowed per u: one exchange per step."""
+    return F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
 
 
 def connected_components(
@@ -135,11 +150,6 @@ def connected_components(
         held.append(cp)
         return cp
 
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.select("u", "v").union(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
     try:
         # r12 (guide §2.4/§5): persist the normalized edge input — it is
         # read THREE times (the vertex set unions both endpoint columns,
@@ -170,42 +180,32 @@ def connected_components(
         prev: tuple | None = None
         for rnd in range(1, max_rounds + 1):
             t0 = time.perf_counter()
-            # ---- large-star ---------------------------------------------
-            sym = _sym(e)
-            m = sym.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
+            # ---- large-star: ONE exchange (the window's, on u) ---------
+            sym = e.select(F.inline(F.array(_uv("u", "v"), _uv("v", "u"))))
+            ls = sym.withColumn("m", _star_min()).where(
+                (F.col("v") > F.col("u")) & (F.col("v") != F.col("m"))
             )
             # every edge is processed exactly once, at its SMALLER
             # endpoint's star: (u, v) with v > u becomes (v, m(u)) — the
             # original edge is REPLACED, not kept (the paper's
             # operation; connectivity is preserved because u's own link
-            # to m(u) is an existing edge processed at m(u)'s star)
-            ls = (
-                sym.join(m, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
+            # to m(u) is an existing edge processed at m(u)'s star).
             # r12 (guide §2.4): NO mid-round distinct — the large-star
-            # output flows into small-star as a multiset. m2 is a MIN, so
+            # output flows into small-star as a multiset. m is a MIN, so
             # duplicate rows cannot change it, and the round's final
             # distinct collapses duplicate emissions.
-            e1 = ls.where(F.col("u") != F.col("v"))
-            # ---- small-star ---------------------------------------------
-            canon = e1.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            # ---- small-star: ONE exchange (the window's, on u) ---------
+            canon = ls.select(
+                F.greatest("v", "m").alias("u"), F.least("v", "m").alias("v")
             )
-            m2 = canon.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            joined = canon.join(m2, "u")
             # r11 (guide §2.4): ONE distinct. Every small-star output is
             # already canonically ordered — (v, m) has m <= v and (u, m)
             # has m <= v < u — so the greatest/least projection below is
             # free and pins the invariant the digest relies on; the
             # dedup runs once, on the canonical form.
             ss = (
-                joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(joined.select(F.col("u"), F.col("m").alias("v")))
+                canon.withColumn("m", _star_min())
+                .select(F.inline(F.array(_uv("v", "m"), _uv("u", "m"))))
                 .where(F.col("u") != F.col("v"))
             )
             prev_e = e

@@ -9,6 +9,7 @@ lifecycle the way a real system does (FAISS/Milvus, Spark-style):
   corpus. Spherical trick: centroids are componentwise SUMS of member
   vectors folded in id order (cosine is scale-invariant, so no
   division) — the same cross-engine-exact recipe the gate oracle uses.
+  Centroids stay in the JVM, as a local checkpoint leased to the caller.
 - ``build_ivf_index``: persists the trained centroids AND the corpus
   cell assignments as two LakeTables. Index build cost (train +
   assign: the only full-corpus passes) is paid once; the assignment
@@ -26,6 +27,7 @@ Equivalence-tested against the inline gate query
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from real_time_e_commerce_analytics_lakehouse_spark.functions import vecexpr as vx
+from real_time_e_commerce_analytics_lakehouse_spark.operators.simsearch import (
+    release_cached,
+)
 from real_time_e_commerce_analytics_lakehouse_spark.tables import LakeTable
 
 _COS = vx.cosine("emb", "c_emb", "spark")
@@ -77,8 +82,8 @@ def train_spherical_kmeans(
     """Deterministic spherical k-means: seeds = first `n_cells` ids;
     each round = one broadcast-assign + one recombine (centroid =
     componentwise sum of members, folded in id order). Returns the
-    materialized (cell_id, c_emb) frame — n_cells rows, the same
-    bounded driver roundtrip MLlib's KMeans does per iteration."""
+    (cell_id, c_emb) frame — n_cells rows, a JVM-side local checkpoint
+    leased to the caller (`_cached_deps`: release_cached it after use)."""
     e = e.select(F.col(id_col).alias("vec_id"), "emb")
     # seeds = the n_cells SMALLEST ids (sort-limit), not ids with value
     # < n_cells: the latter silently yields an empty seed set — and an
@@ -89,24 +94,24 @@ def train_spherical_kmeans(
         .limit(n_cells)
         .select(F.col("vec_id").alias("cell_id"), F.col("emb").alias("c_emb"))
     )
-    for _ in range(rounds):
-        assigned = assign_cells(e, cents, "vec_id", 1)
-        comp = assigned.join(e, "vec_id").select(
-            "cell_id", "vec_id", F.posexplode("emb").alias("pos", "x")
-        )
-        per_pos = comp.groupBy("cell_id", "pos").agg(
-            F.expr(
-                "aggregate(transform(sort_array(collect_list(struct(vec_id, x))),"
-                " s -> s.x), cast(0 as double), (a, v) -> a + v)"
-            ).alias("sx")
-        )
-        updated = per_pos.groupBy("cell_id").agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, sx))), s -> s.sx)"
-            ).alias("c_emb")
-        )
-        rows = [(r["cell_id"], list(r["c_emb"])) for r in updated.collect()]
-        cents = spark.createDataFrame(rows, "cell_id long, c_emb array<double>")
+    try:
+        for _ in range(rounds):
+            prev, cents = cents, (
+                assign_cells(e, cents, "vec_id", 1)
+                .join(e, "vec_id")
+                .groupBy("cell_id")  # ONE recombine, members in vec_id order
+                .agg(F.sort_array(F.collect_list(F.struct("vec_id", "emb"))).alias("m"))
+                .select(
+                    F.col("cell_id").cast("long").alias("cell_id"),
+                    F.expr(vx.vec_sum("m", "emb")).alias("c_emb"),
+                )
+                .localCheckpoint()
+            )
+            cents._cached_deps = [cents]
+            release_cached(prev)
+    except BaseException:
+        release_cached(cents)
+        raise
     return cents
 
 
@@ -142,19 +147,25 @@ def build_ivf_index(
     par = spark.sparkContext.defaultParallelism
     if e.rdd.getNumPartitions() < par:
         e = e.repartition(par)
-    if n_cells is None:
-        import math
-
-        n = e.count()
-        n_cells = max(16, min(65536, 1 << math.isqrt(max(n, 1)).bit_length()))
-    cents = train_spherical_kmeans(spark, e, n_cells, rounds)
-    ct = LakeTable(spark, os.path.join(index_path, "centroids"))
-    ct.overwrite(cents)
-    at = LakeTable(
-        spark, os.path.join(index_path, "assignments"),
-        partition_by=["cell_id"],
-    )
-    at.overwrite(assign_cells(e, cents, "vec_id", 1))
+    # every round and the final assignment re-read it: persisted once
+    e = e.persist()
+    cents = None
+    try:
+        if n_cells is None:
+            n = e.count()
+            n_cells = max(16, min(65536, 1 << math.isqrt(max(n, 1)).bit_length()))
+        cents = train_spherical_kmeans(spark, e, n_cells, rounds)
+        ct = LakeTable(spark, os.path.join(index_path, "centroids"))
+        ct.overwrite(cents)
+        at = LakeTable(
+            spark, os.path.join(index_path, "assignments"),
+            partition_by=["cell_id"],
+        )
+        at.overwrite(assign_cells(e, cents, "vec_id", 1))
+    finally:
+        e.unpersist()
+        if cents is not None:
+            release_cached(cents)
     return ct, at
 
 

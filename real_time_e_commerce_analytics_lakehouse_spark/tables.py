@@ -1127,10 +1127,13 @@ class LakeTable:
             )
             for u in units
         ]
-        meta_schema = "__unit_key string, " + ", ".join(
-            f"`{c}` string" for c in self.partition_by
-        )
-        meta = self.spark.createDataFrame(meta_rows, meta_schema)
+        # literals, not createDataFrame: that is a Python RDD, and every
+        # scan of it starts a Python worker
+        cols = ["__unit_key", *self.partition_by]
+        meta = self.spark.range(1).select(F.inline(F.array(*(
+            F.struct(*(F.lit(v).cast("string").alias(c) for c, v in zip(cols, row)))
+            for row in meta_rows
+        ))))
         # the file path is a URI (space -> %20, '%' -> %25, ...);
         # url_decode after protecting literal '+' (URLDecoder would read
         # it as an encoded space) recovers the raw on-disk dir name that

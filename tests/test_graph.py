@@ -206,3 +206,30 @@ def test_star_cc_multiround_with_multiedges(spark):
     assert len(stats) > 2
     # a star forest has one edge per non-root vertex: 81 - 3
     assert stats[-1]["edges"] == len(got) - 3
+
+
+def test_star_rounds_run_one_exchange_per_step(spark):
+    """Each star step is one windowed exchange, not a groupBy plus a
+    join back: CC over six shuffled 50-vertex paths (6 rounds) runs at
+    most 50 Spark jobs in all, building the result included."""
+    import random
+
+    rnd = random.Random(3)
+    ids = list(range(300))
+    rnd.shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(299) if (i + 1) % 50]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    df.collect()  # the input's own jobs stay out of the count
+    sc = spark.sparkContext
+    stats: list[dict] = []
+    sc.setJobGroup("cc-job-guard", "cc-job-guard")
+    try:
+        out = connected_components(df, round_stats=stats)
+        got = {r.vertex: r.component for r in out.collect()}
+    finally:
+        sc._jsc.clearJobGroup()
+    release_cached(out)
+    assert got == _union_find_components(edges)
+    assert len(set(got.values())) == 6 and len(stats) == 6
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-job-guard")
+    assert len(jobs) <= 50, len(jobs)

@@ -1034,3 +1034,65 @@ def test_ivf_index_default_cell_count_is_corpus_adaptive(
     expect = max(16, min(65536, 1 << math.isqrt(n).bit_length()))
     assert ct.read().count() == expect
     assert at.read().count() == n
+
+
+def _clear_cache_layers(spark) -> None:
+    """Empty both layers: cached frames and persistent RDDs."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
+def test_ivf_build_releases_corpus_and_centroids(
+    spark, sf_dir, tmp_path, cache_held
+) -> None:
+    """build_ivf_index persists the corpus and checkpoints the
+    centroids each round; once it returns, the CacheManager is empty
+    and the persistent-RDD map is what it was before the build."""
+    from real_time_e_commerce_analytics_lakehouse_spark.operators.vecindex import (
+        build_ivf_index,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    _clear_cache_layers(spark)
+    before = cache_held()
+    ct, _ = build_ivf_index(spark, emb, str(tmp_path / "idx"), n_cells=16, rounds=2)
+    assert cache_held() == (0, before[1])
+    assert ct.read().count() == 16
+
+
+def test_kmeans_round_failure_releases_everything(
+    spark, sf_dir, tmp_path, cache_held, monkeypatch
+) -> None:
+    """A Python UDF on the corpus raising in round 2 of the k-means
+    (after round 1's centroid checkpoint exists, with the corpus
+    persisted) leaves no cached frame and no persistent RDD."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+
+    from real_time_e_commerce_analytics_lakehouse_spark.operators import vecindex
+
+    @F.udf("array<double>")
+    def fail(x):
+        raise ValueError("corpus failed in round 2")
+
+    real_assign = vecindex.assign_cells
+    calls: list[int] = []
+
+    def assign_failing_in_round_2(vecs, cents, id_out, keep):
+        calls.append(1)
+        if len(calls) == 2:
+            vecs = vecs.withColumn("emb", fail("emb"))
+        return real_assign(vecs, cents, id_out, keep)
+
+    monkeypatch.setattr(vecindex, "assign_cells", assign_failing_in_round_2)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    _clear_cache_layers(spark)
+    with pytest.raises(
+        (PythonException, Py4JJavaError), match="corpus failed in round 2"
+    ):
+        vecindex.build_ivf_index(
+            spark, emb, str(tmp_path / "idx"), n_cells=16, rounds=3
+        )
+    assert len(calls) == 2
+    assert cache_held() == (0, set())

@@ -283,6 +283,23 @@ def test_partition_values_hive_escaping_and_null(spark, tmp_table):
     assert kept_plain and all(p in units_before for p in kept_plain)
 
 
+def test_partitioned_read_restores_values_without_a_python_rdd(spark, tmp_table):
+    """Partition values needing escaping (space, '%', '+') and NULL read
+    back exactly, and the unit-key -> partition-value frame is built
+    from literals: the read's optimized plan holds no LogicalRDD, so no
+    Python worker scans it."""
+    t = LakeTable(spark, tmp_table, partition_by=["p"])
+    vals = ["a b", "50%off", "x+y", None, "plain"]
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, v) for i, v in enumerate(vals)], "id long, p string"
+        )
+    )
+    snap = t.read()
+    assert {r.id: r.p for r in snap.collect()} == dict(enumerate(vals))
+    assert "LogicalRDD" not in snap._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_snapshot_read_is_one_scan_for_many_units(spark, tmp_table):
     """VERDICT r1 wrong #2: hundreds of units must not become hundreds of
     scans in the plan (driver planning bottleneck at 100 TB)."""
