@@ -13,9 +13,9 @@ into the aggregate table (|groups| rows, small by construction). Groups
 whose maintained row count reaches zero disappear, exactly as a full
 recompute would drop them. AVG derives as sum/count downstream;
 non-invertible aggregates (MIN/MAX under deletes, DISTINCT) need either
-a sketch (see weekly_uniques_hll_rollup) or a partition-scoped
-recompute (see OlistPipeline.metrics_revenue_incremental) — this
-operator is the exact-delta tier of that hierarchy.
+a sketch (see weekly_uniques_hll_rollup) or a group-scoped recompute
+(see incremental_minmax_refresh) — this operator is the exact-delta tier
+of that hierarchy.
 """
 
 from __future__ import annotations

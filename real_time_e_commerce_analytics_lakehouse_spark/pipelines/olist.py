@@ -13,9 +13,7 @@ and the operator library. Layer semantics preserved exactly (SURVEY §2):
 - gold: 4 dims + 3 facts (03-06). Surrogate keys are xxhash64(business
   key) instead of monotonically_increasing_id — deterministic across
   runs, no single-reducer bottleneck (SURVEY §7 risk 1).
-- metrics: 3 marts, full-refresh overwrite (07-09) — with the noted
-  100 TB path being partition-scoped refresh via LakeTable's
-  partitioned merge.
+- metrics: 3 marts, full-refresh overwrite (07-09).
 
 Known reference quirks intentionally FIXED (SURVEY §2.10): facts merge
 their deduped frames on first write too (06:96-103 uses the pre-dedup
@@ -25,12 +23,11 @@ time (09:30).
 Concurrency contract. Each layer method is a barrier: it returns only
 after all of its work is done, and `run()` calls the four layers in
 order. Within a layer, the per-table units that do not depend on each
-other (the 8 bronze streams, the 8 silver conforms, the 4 dims beside the
-mirror-then-3-facts chain, the 3 marts) run concurrently on driver
-threads, so their small Spark jobs overlap instead of queueing behind one
-another. Every unit runs with the caller's Spark local properties and
-session tags (job group, description, scheduler pool), each unit with its
-own copy. A failing unit does not cancel the others: the layer waits for
+other (the 8 bronze streams, the 8 silver conforms, the 4 dims and the
+3 facts, the 3 marts) run concurrently on driver threads, so their small
+Spark jobs overlap instead of queueing behind one another. Every unit
+runs with the caller's Spark local properties and session tags (job
+group, description, scheduler pool), each unit with its own copy. A failing unit does not cancel the others: the layer waits for
 every unit, then raises the first failure in submission order, and no
 thread outlives the call. Re-running after a failure is idempotent: the
 units that finished committed their progress, and the failed one
@@ -50,10 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from real_time_e_commerce_analytics_lakehouse_spark.operators.bucketing import (
-    read_bucketed,
-    write_bucketed,
-)
 from real_time_e_commerce_analytics_lakehouse_spark.operators.cleaning import clean
 from real_time_e_commerce_analytics_lakehouse_spark.operators.dedup import (
     dedup_latest,
@@ -153,26 +146,6 @@ class OlistPipeline:
 
         self._run_concurrently(*(partial(conform, n) for n in self._bronze_present()))
 
-    def silver_conform_stream(self) -> None:
-        """True streaming silver (reference S6 parity,
-        02_bronze_to_silver.py:20-24): each bronze table is consumed as a
-        Structured Streaming source (LakeTable.read_stream) under
-        trigger(availableNow) with a per-table checkpoint — silver runs
-        as a StreamingQuery, not a batch poll. The conform body is the
-        same as the batch-incremental tier; the downstream guarded merge
-        makes redelivery idempotent either way."""
-
-        def conform(name: str) -> None:
-            run_available_now(
-                self.table("bronze", name).read_stream(),
-                checkpoint_dir=os.path.join(
-                    self.lake_root, "_checkpoints", f"silver_{name}"
-                ),
-                batch_fn=lambda batch, _epoch: self._conform_batch(batch, name),
-            )
-
-        self._run_concurrently(*(partial(conform, n) for n in self._bronze_present()))
-
     def _conform_batch(self, batch: DataFrame, name: str) -> None:
         """One micro-batch of bronze rows -> silver (clean / type / dedup
         / guarded upsert; 02_bronze_to_silver.py per-table semantics)."""
@@ -258,53 +231,16 @@ class OlistPipeline:
         return F.xxhash64(*[F.col(c) for c in cols])
 
     def gold_build(self) -> None:
-        """The 4 dims beside one chain: the bucketed orders mirror, then
-        the 3 facts that join it."""
+        """The 4 dims and the 3 facts, all 7 from silver."""
         self._run_concurrently(
             self._build_dim_customers,
             self._build_dim_products,
             self._build_dim_sellers,
             self._build_dim_geolocation,
-            self._build_facts,
+            self._build_fact_orders,
+            self._build_fact_payments,
+            self._build_fact_reviews,
         )
-
-    def _build_facts(self) -> None:
-        self._mirror_orders_bucketed()
-        self._run_concurrently(
-            self._build_fact_orders, self._build_fact_payments, self._build_fact_reviews
-        )
-
-    # The one table EVERY fact refresh joins on order_id is silver
-    # orders (04_gold_fact_orders.py:55-59, 05:43-46, 06:54-90 — the
-    # reference re-shuffles it three times per gold run). Bucketing
-    # pays that shuffle ONCE: the mirror is written hash-distributed on
-    # order_id into n_buckets == spark.sql.shuffle.partitions, so every
-    # fact join consumes the storage layout as its distribution — the
-    # orders side needs no Exchange, and the other side's groupBy
-    # (order_id) pre-agg shuffle doubles as its join distribution.
-    # Pinned zero-orders-side-Exchange by
-    # tests/test_olist_pipeline.py::test_fact_orders_join_reuses_bucketed_layout.
-
-    def _bucket_table_name(self) -> str:
-        import hashlib
-
-        h = hashlib.md5(self.lake_root.encode()).hexdigest()[:10]
-        return f"olist_orders_bucketed_{h}"
-
-    def _mirror_orders_bucketed(self) -> None:
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        # NOT an underscore-prefixed dir: Spark's file index treats
-        # `_*`/`.*` paths as hidden and would silently scan zero files
-        write_bucketed(
-            self.table("silver", "orders").read(),
-            self._bucket_table_name(),
-            os.path.join(self.lake_root, "bucketed", "orders"),
-            keys=["order_id"],
-            n_buckets=n,
-        )
-
-    def _silver_orders(self) -> DataFrame:
-        return read_bucketed(self.spark, self._bucket_table_name())
 
     def _build_dim_customers(self) -> None:
         customers = self.table("silver", "customers").read()
@@ -378,16 +314,14 @@ class OlistPipeline:
 
     def _fact_orders_frame(self) -> DataFrame:
         """fact_orders: pre-agg items per order + 3-way left join + the
-        datediff measure triplet (04_gold_fact_orders.py:42-91). Orders
-        come from the bucketed mirror, and the order_id join runs FIRST
-        (the reference joins customers first, 04:55-59, which would
-        re-shuffle orders on customer_id and discard the layout): the
-        bucketed layout IS the join distribution, so the orders side is
-        Exchange-free and the item pre-agg's own shuffle doubles as its
-        distribution. The customers dim joins after — broadcast-sized
-        relative to the fact at any scale. The two left joins commute
-        (distinct keys; neither depends on the other's columns)."""
-        orders = self._silver_orders()
+        datediff measure triplet (04_gold_fact_orders.py:42-91). The
+        order_id join runs first and customers join after as a broadcast
+        (the reference joins customers first, 04:55-59): the customers
+        side is broadcast-sized relative to the fact at any scale, so
+        orders are shuffled at most once, on order_id. The two left joins
+        commute (distinct keys; neither depends on the other's
+        columns)."""
+        orders = self.table("silver", "orders").read()
         customers = self.table("silver", "customers").read().select(
             "customer_id", "customer_state"
         )
@@ -443,7 +377,7 @@ class OlistPipeline:
         """fact_payments: payments pre-agg per order + order attrs
         (05_gold_fact_payments.py:31-55)."""
         payments = self.table("silver", "order_payments").read()
-        orders = self._silver_orders().select(
+        orders = self.table("silver", "orders").read().select(
             "order_id", "order_status", "order_purchase_timestamp"
         )
         pay_agg = payments.groupBy("order_id").agg(
@@ -461,7 +395,7 @@ class OlistPipeline:
         (06_gold_fact_reviews.py:54-90). Unlike the reference (06:96-103
         first-write bug), the DEDUPED frame is written on every path."""
         reviews = self.table("silver", "order_reviews").read()
-        orders = self._silver_orders().select(
+        orders = self.table("silver", "orders").read().select(
             "order_id", "customer_id", "order_status"
         )
         enriched = reviews.join(orders, "order_id", "left").select(
@@ -490,52 +424,14 @@ class OlistPipeline:
             self._metrics_revenue, self._metrics_orders, self._metrics_customers
         )
 
-    def metrics_revenue_incremental(self) -> bool:
-        """The 100 TB path for the revenue mart (the reference full-
-        refreshes, 07:72-78 — fine at mart cardinality, wasteful when
-        the FACTS are huge): consume the fact_orders change feed
-        (rewritten partitions/units surface as new units), recompute the
-        mart rows for the AFFECTED order dates only, and merge them by
-        the mart's grain. Work is proportional to the changed dates,
-        not the fact table. Returns True if anything was refreshed.
-
-        Grain note: a (date, state, status) group that disappears
-        entirely from a changed date would linger; full `metrics_build`
-        remains the periodic ground-truth rebuild (same answer —
-        equivalence-tested)."""
-        fo_table = self.table("gold", "fact_orders")
-        changes_seen = False
-
-        def _refresh(changed: DataFrame) -> None:
-            nonlocal changes_seen
-            changes_seen = True
-            dates = [
-                r.d
-                for r in changed.select(
-                    F.to_date("order_purchase_timestamp").alias("d")
-                ).distinct().collect()
-            ]
-            # Column.isin treats NULL as no-match, so a changed fact row
-            # with a NULL purchase timestamp would never be refreshed
-            # (r4 review) — carry the NULL-date group explicitly
-            cond = F.to_date("order_purchase_timestamp").isin(
-                [d for d in dates if d is not None]
-            )
-            if any(d is None for d in dates):
-                cond = cond | F.col("order_purchase_timestamp").isNull()
-            fo = fo_table.read().filter(cond)
-            mart = self._revenue_mart_frame(fo)
-            self.table("metrics", "metrics_revenue").merge_upsert(
-                mart, keys=["order_date", "customer_state", "order_status"]
-            )
-
-        return self.runner.process("metrics_revenue", fo_table, _refresh) and changes_seen
-
-    def _revenue_mart_frame(self, fo: DataFrame) -> DataFrame:
+    def _metrics_revenue(self) -> None:
+        """Revenue by (order_date, customer_state, order_status): facts
+        inner-joined to payments — unpaid orders excluded (07:26-65)."""
+        fo = self.table("gold", "fact_orders").read()
         fp = self.table("gold", "fact_payments").read().select(
             "order_id", "total_payment_value"
         )
-        return (
+        mart = (
             fo.join(fp, "order_id", "inner")  # 07:31: only paid orders
             .groupBy(
                 F.to_date("order_purchase_timestamp").alias("order_date"),  # 07:39
@@ -548,12 +444,6 @@ class OlistPipeline:
             )
             .withColumn("gold_processed_ts", self._now())
         )
-
-    def _metrics_revenue(self) -> None:
-        """Revenue by (order_date, customer_state, order_status): facts
-        inner-joined to payments — unpaid orders excluded (07:26-65)."""
-        fo = self.table("gold", "fact_orders").read()
-        mart = self._revenue_mart_frame(fo)
         self.table("metrics", "metrics_revenue").overwrite(mart)  # 07:72-78
 
     def _metrics_orders(self) -> None:

@@ -17,8 +17,9 @@ Scale notes (100 TB / 1000-executor design intent):
   coalesces small shuffle partitions, and splits skewed ones at runtime —
   the single most important knob for plans written declaratively.
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
-  coalesces. Locally we match core count; on a cluster this would be set
-  to ~2-3x total cores and AQE right-sizes per stage.
+  coalesces. Locally we match core count (``default_cpus``); on a
+  cluster this would be set to ~2-3x total cores and AQE right-sizes per
+  stage.
 - Arrow enabled so any pandas_udf path is vectorized.
 """
 
@@ -28,7 +29,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Local cores for the session: ``$SPARK_GRAFT_CPUS`` when set (the
+    deployment override), else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
 
 
 def get_spark(
@@ -44,10 +53,9 @@ def get_spark(
     ``__spark_entry__.entry``), its configs win; the engine works with
     whatever it is given.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{default_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

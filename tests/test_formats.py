@@ -61,7 +61,8 @@ def test_partitioned_write_prunes(spark, sample, tmp_path):
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Co-located join: two tables bucketed the same way on the join key
     join WITHOUT any Exchange (shuffle) or per-bucket Sort in the plan —
-    the 100 TB fact-to-fact join pattern (shuffle paid once at write)."""
+    the 100 TB fact-to-fact join pattern (shuffle paid once at write) —
+    and match the plain join row for row."""
     from real_time_e_commerce_analytics_lakehouse_spark.sources.bucketed import (
         colocated_join,
         write_bucketed,
@@ -78,10 +79,14 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan, plan
         assert joined.count() == 1000
-        # control: the same join on plain (unbucketed) frames shuffles
+        # control: the same join on plain (unbucketed) frames shuffles,
+        # and gives the same rows
         ctrl = left.join(right, "k")
         ctrl_plan = ctrl._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" in ctrl_plan
+        assert sorted(map(tuple, joined.collect())) == sorted(
+            map(tuple, ctrl.collect())
+        )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS bkt_left")

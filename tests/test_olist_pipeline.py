@@ -216,49 +216,6 @@ def test_fresh_update_wins(pipeline):
     assert len(after) == 1 and after[0].order_status == "canceled"
 
 
-def test_metrics_revenue_incremental_matches_full(pipeline, spark):
-    """The 100 TB mart path: change-feed-driven partial refresh produces
-    the same mart as the reference's full overwrite rebuild."""
-    p = pipeline
-    p.metrics_revenue_incremental()  # bootstrap: consume current facts
-
-    # mutate one delivered order's status through the guarded fact merge
-    fo_t = p.table("gold", "fact_orders")
-    schema = fo_t.read().schema
-    row = (
-        fo_t.read()
-        .filter(F.col("order_status") == "delivered")
-        .limit(1)
-        .collect()[0]
-    )
-    changed = (
-        spark.createDataFrame([row], schema)
-        .withColumn("order_status", F.lit("canceled"))
-        .withColumn("orders_silver_ts", F.col("orders_silver_ts") + F.expr("INTERVAL 1 DAY"))
-    )
-    fo_t.merge_upsert(changed, keys="order_id", guard_col="orders_silver_ts")
-
-    assert p.metrics_revenue_incremental() is True
-
-    def canon(df):
-        return {
-            (str(r.order_date), r.customer_state, r.order_status): (
-                round(float(r.total_revenue), 6),
-                r.order_count,
-            )
-            for r in df.collect()
-        }
-
-    mart = canon(p.table("metrics", "metrics_revenue").read())
-    full = canon(p._revenue_mart_frame(fo_t.read()))
-    # every group of the full rebuild is present and equal; the merge
-    # path may additionally retain stale groups only if a (date,state,
-    # status) combination vanished — assert it did not diverge here
-    assert {k: v for k, v in mart.items() if k in full} == full
-    vanished = set(mart) - set(full)
-    assert all(k[2] == "delivered" for k in vanished)  # the flipped group only
-
-
 def test_geolocation_consolidation_spans_batches(pipeline, spark):
     """A later micro-batch's points must RE-aggregate with the zip's
     earlier points (group-scoped recompute): the consolidated centroid
@@ -315,55 +272,11 @@ def test_geolocation_consolidation_spans_batches(pipeline, spark):
     assert after[other].n_points == geo_before[other].n_points
 
 
-def test_fact_orders_join_reuses_bucketed_layout(pipeline):
-    """VERDICT r4 next #4: the reference re-joins orders on every gold
-    refresh (04:55-59, 05:43-46, 06:54-90); the pipeline now mirrors
-    silver orders ONCE per refresh into a bucketed layout on order_id,
-    and every fact join consumes that layout as its distribution. Pin:
-    the fact_orders plan scans orders Bucketed (no orders-side
-    Exchange); the only plain Exchange left is the item pre-agg's own
-    shuffle (which doubles as its join distribution)."""
-    import re
-
-    spark = pipeline.spark
-    jvm = spark._jvm
-    # fixture tables are tiny, so Catalyst would broadcast everything
-    # and never exercise the bucketed distribution; force the at-scale
-    # join strategy (sort-merge) for the plan pin
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = pipeline._fact_orders_frame()
-        plan = df._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Bucketed: true" in plan
-    # orders side: zero Exchange (layout == distribution); the ONLY
-    # plain exchange is the item pre-agg's own shuffle, which then
-    # joins exchange-free against the bucketed layout; customers is an
-    # explicit broadcast (no plain exchange).
-    exchanges = re.findall(r"\(\d+\) Exchange", plan)
-    assert len(exchanges) <= 1, plan[:4000]
-    # and the mirror itself exists as a catalog bucketed table
-    name = pipeline._bucket_table_name()
-    desc = pipeline.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-    info = {r.col_name: r.data_type for r in desc}
-    assert "Num Buckets" in info
-    assert "order_id" in info.get("Bucket Columns", "")
-
-
-def test_golden_facts_unchanged_by_bucketed_mirror(pipeline):
-    """The bucketed mirror is a pure layout change: the fact_orders
-    frame built through it must row-equal the same 3-way join computed
-    directly off silver (reference join order, plain parquet reads).
-    The mirror is refreshed first because earlier tests in this module
-    mutate silver after the fixture's gold_build."""
+def test_fact_orders_frame_matches_reference_join_order(pipeline):
+    """fact_orders joins orders to the item pre-agg first and broadcasts
+    customers after; the reference joins customers first (04:55-59).
+    Both orders of the two left joins give the same rows."""
     p = pipeline
-    p._mirror_orders_bucketed()
     orders = p.table("silver", "orders").read()
     items = p.table("silver", "order_items").read()
     customers = p.table("silver", "customers").read().select(
@@ -423,6 +336,18 @@ def test_mirror_delta_opens_marts_with_a_delta_reader(pipeline):
 
     # idempotent: nothing changed, no new delta commit
     assert pipeline.mirror_delta() == versions
+
+
+def test_run_leaves_no_catalog_table_or_side_copy(spark, tmp_path):
+    """A cycle writes only the lake's layer tables: it registers nothing
+    in the session catalog (which nothing would drop for the life of the
+    session) and keeps no bucketed copy of a silver table."""
+    landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
+    make_fixtures(landing, seed=42)
+    before = {t.name for t in spark.catalog.listTables()}
+    OlistPipeline(spark, lake, landing, clock=CLOCK).run()
+    assert {t.name for t in spark.catalog.listTables()} - before == set()
+    assert not os.path.exists(os.path.join(lake, "bucketed"))
 
 
 def _threads_besides_py4j_callbacks() -> set[threading.Thread]:

@@ -617,20 +617,20 @@ def test_trending_tokens_sketch_exact_below_capacity(spark, sf_dir):
         assert cnt >= kth
 
 
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
+def test_bucketed_join_is_shuffle_free(spark, sf_dir):
     """Bucketed layout pays the shuffle at write time, then never again:
     joining orders x lineitem both bucketed into 4 on the order key
     plans ZERO Exchange operators (and matches the plain-parquet join
     row-for-row), while the same join over unbucketed parquet shuffles.
     This is the repeated-join amortization a 100 TB gold refresh relies
-    on (operators/bucketing.py)."""
+    on (sources/bucketed.py)."""
     import uuid
 
-    from real_time_e_commerce_analytics_lakehouse_spark.operators.bucketing import (
-        bucketed_join,
+    from real_time_e_commerce_analytics_lakehouse_spark.plans.registry import table
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.bucketed import (
+        colocated_join,
         write_bucketed,
     )
-    from real_time_e_commerce_analytics_lakehouse_spark.plans.registry import table
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -641,12 +641,12 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
 
     tag = uuid.uuid4().hex[:8]
     to_name, tl_name = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    write_bucketed(orders, to_name, str(tmp_path / "o"), ["o_orderkey"], 4)
-    write_bucketed(lineitem, tl_name, str(tmp_path / "l"), ["o_orderkey"], 4)
+    write_bucketed(orders, to_name, 4, ["o_orderkey"])
+    write_bucketed(lineitem, tl_name, 4, ["o_orderkey"])
     try:
         # force SMJ so the assertion is about Exchange, not broadcast
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, to_name, tl_name, ["o_orderkey"])
+        joined = colocated_join(spark, to_name, tl_name, ["o_orderkey"])
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan, plan

@@ -4,10 +4,9 @@ miss #4): a later CSV batch gains a trailing nullable column, the
 contract registry evolves additively, and every layer copes:
 
 - bronze: new units carry the column; old units read NULL (mergeSchema).
-- silver: the guarded upsert preserves the new column; pre-evolution
-  rows read NULL.
-- the streaming-silver tier (LakeTable.read_stream) is exercised too —
-  silver runs as a StreamingQuery, not a batch poll (VERDICT r1 miss #2).
+- silver: the batch-incremental tier (bronze change feed + per-table
+  version state) carries the new column through the guarded upsert;
+  pre-evolution rows read NULL.
 """
 
 from __future__ import annotations
@@ -84,7 +83,7 @@ def test_additive_column_mid_stream(spark, tmp_path, monkeypatch):
     )
     p1 = OlistPipeline(spark, lake, landing, clock=CLOCK)
     p1.bronze_ingest()
-    p1.silver_conform_stream()  # streaming tier from the start
+    p1.silver_conform()
     assert "order_channel" not in p1.table("silver", "orders").read().columns
 
     # --- the contract evolves; a new file carries the extra column
@@ -111,7 +110,7 @@ def test_additive_column_mid_stream(spark, tmp_path, monkeypatch):
     assert by_file["o3"] == "Mobile_App"
     assert by_file["o2"] is None  # pre-evolution unit reads NULL
 
-    p2.silver_conform_stream()
+    p2.silver_conform()
     silver = p2.table("silver", "orders").read()
     got = {r.order_id: r.order_channel for r in silver.collect()}
     # new row has the (cleaned) value; updated row evolved; old row NULL
@@ -121,8 +120,9 @@ def test_additive_column_mid_stream(spark, tmp_path, monkeypatch):
 
 
 def test_streaming_silver_checkpoint_no_reprocess(spark, tmp_path):
-    """The streaming-silver checkpoint must not redeliver old bronze
-    units on a second run (S15 semantics through the new source)."""
+    """Silver's consumed-version state must not redeliver old bronze
+    units on a second run (S15 semantics): an empty second call commits
+    nothing, and a new landing file brings exactly its rows."""
     landing = str(tmp_path / "landing")
     lake = str(tmp_path / "lake")
     _write_orders(
@@ -133,11 +133,11 @@ def test_streaming_silver_checkpoint_no_reprocess(spark, tmp_path):
     )
     p = OlistPipeline(spark, lake, landing, clock=CLOCK)
     p.bronze_ingest()
-    p.silver_conform_stream()
+    p.silver_conform()
     v_after_first = p.table("silver", "orders").latest_version()
 
-    # nothing new: the stream drains zero batches, silver version unchanged
-    p.silver_conform_stream()
+    # nothing new: no bronze version to consume, silver version unchanged
+    p.silver_conform()
     assert p.table("silver", "orders").latest_version() == v_after_first
 
     # one more landing file -> exactly the delta flows through
@@ -149,6 +149,6 @@ def test_streaming_silver_checkpoint_no_reprocess(spark, tmp_path):
     )
     p2 = OlistPipeline(spark, lake, landing, clock=CLOCK + timedelta(hours=2))
     p2.bronze_ingest()
-    p2.silver_conform_stream()
+    p2.silver_conform()
     silver = p2.table("silver", "orders").read()
     assert sorted(r.order_id for r in silver.collect()) == ["o1", "o9"]
