@@ -37,6 +37,37 @@ def default_cpus() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+# the driver heap's share of the memory this process may use; the rest
+# is left to the JVM's off-heap use (code cache, metaspace, buffers), the
+# Python workers and the OS
+_DRIVER_MEM_SHARE = 3
+
+
+def _default_driver_memory() -> str:
+    """Driver heap for the session: ``$SPARK_GRAFT_DRIVER_MEM`` when set
+    (the deployment override), else a third of the memory this process
+    may use — the cgroup limit when one is set, else the host's
+    ``MemTotal``. In local mode the driver JVM is the only executor."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        limit = next(int(s.split()[1]) * 1024 for s in f if s.startswith("MemTotal:"))
+    for cg in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(cg) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # v2 writes "max" when no limit is set
+            limit = min(limit, int(raw))
+        break
+    return f"{limit // _DRIVER_MEM_SHARE >> 20}m"
+
+
 DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
 
 
@@ -70,7 +101,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_memory())
         # local mode: driver JVM IS the executor. The default JIT code
         # cache (240 MB) fills after ~a dozen codegen-heavy queries in one
         # session, silently dropping hot loops to the interpreter

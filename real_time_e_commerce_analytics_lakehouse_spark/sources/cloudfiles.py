@@ -282,50 +282,27 @@ class CloudFilesStreamReader(DataSourceStreamReader):
 
     # ------------------------------------------------------------ reading
     def read(self, partition: _FileSlice) -> Iterator:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
+        from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
+            _scan_file,
+        )
 
         path = partition.path
         if self.fmt == "parquet":
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(path)
+            src = path  # the kernel reads only the schema's columns
         elif self.fmt == "json":
             import pyarrow.json as pjson
 
-            t = pjson.read_json(path)
+            src = pjson.read_json(path)
         else:
-            t = _read_csv(path, self.header)
-        n = t.num_rows
+            src = _read_csv(path, self.header)
         st = os.stat(path)
-        arrays, names = [], []
-        for field in self.schema.fields:
-            pa_type = to_arrow_type(field.dataType)
-            if field.name == "_metadata":
-                meta = pa.array(
-                    [
-                        {
-                            "file_path": "file://" + os.path.abspath(path),
-                            "file_name": os.path.basename(path),
-                            "file_size": st.st_size,
-                            "file_modification_time": int(
-                                st.st_mtime * 1_000_000
-                            ),
-                        }
-                    ]
-                    * n,
-                    type=pa_type,
-                )
-                arrays.append(meta)
-            elif field.name in t.column_names:
-                col = t.column(field.name).combine_chunks()
-                if col.type != pa_type:
-                    col = col.cast(pa_type)
-                arrays.append(col)
-            else:  # schema-evolution: column absent from older files
-                arrays.append(pa.nulls(n, type=pa_type))
-            names.append(field.name)
-        yield from pa.Table.from_arrays(arrays, names=names).to_batches()
+        meta = {
+            "file_path": "file://" + os.path.abspath(path),
+            "file_name": os.path.basename(path),
+            "file_size": st.st_size,
+            "file_modification_time": int(st.st_mtime * 1_000_000),
+        }
+        return _scan_file(src, self.schema, consts={"_metadata": meta})
 
 
 class CloudFilesDataSource(DataSource):

@@ -63,7 +63,11 @@ from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_log import (
 from real_time_e_commerce_analytics_lakehouse_spark.sources.delta_table import (
     _delta_pval,
     _guard_writable,
-    _pdir_segment,
+)
+from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
+    _HIVE_NULL,
+    _unescape_hive,
+    _hive_segment,
 )
 
 _FILE = "__dml_file"  # rel-path attribution column during planning
@@ -807,17 +811,12 @@ def _stage_data_files(
         pvals: dict[str, str | None] = {}
         for s in segs_raw:
             col, _, raw = s.partition("=")
-            from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
-                _unescape_hive,
-            )
-
-            v = _unescape_hive(raw)
-            pvals[col] = None if raw == "__HIVE_DEFAULT_PARTITION__" else v
+            pvals[col] = None if raw == _HIVE_NULL else _unescape_hive(raw)
         for fn in files:
             if not fn.endswith(".parquet"):
                 continue
             segs = [
-                _pdir_segment(c, pvals[c]) for c in pcols
+                _hive_segment(c, pvals[c]) for c in pcols
             ]  # canonical escaping
             os.makedirs(os.path.join(path, *segs), exist_ok=True)
             rel = os.path.join(

@@ -82,12 +82,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from real_time_e_commerce_analytics_lakehouse_spark.tables import (
-    LakeTable,
+from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
     _HIVE_NULL,
-    _Unit,
     _unescape_hive,
 )
+from real_time_e_commerce_analytics_lakehouse_spark.tables import LakeTable, _Unit
 
 _DELTA_DIR = "_delta_log"
 

@@ -22,21 +22,23 @@ checkpoint:
   planning time (the descriptors carry exact cardinality; same
   planning-time resolution the laketable stream reader uses for
   tombstones) and ride the slices as index tuples.
-- Reading (executors): plain pyarrow parquet scans — one slice per
-  (file, change kind) — with partition columns restored typed from the
-  add/cdc action's partitionValues, plus ``_change_type`` (stored
-  column for cdc files, literal otherwise) and ``_commit_version``.
+- Reading (executors): one slice per (file, change kind), scanned by
+  the package's one file kernel (``pyds._scan_file``); this reader only
+  supplies the constants — partition columns typed from the add/cdc
+  action's partitionValues, ``_change_type`` (a literal, except for
+  cdc files, which store it), ``_commit_version`` and
+  ``_commit_timestamp`` — and the column-mapping names.
 
 Output schema: the table's logical columns + ``_change_type`` string +
-``_commit_version`` long — identical to ``delta_changes``, and pinned
-row-equal to it in tests/test_delta_stream.py, including after a
-checkpoint restart (availableNow drain twice = second drain empty).
+``_commit_version`` long + ``_commit_timestamp`` — the rows of
+``delta_changes``, and pinned row-equal to it in
+tests/test_delta_stream.py, including after a checkpoint restart
+(availableNow drain twice = second drain empty). Column-mapped tables
+read under their logical names, nested types included.
 
-Protocol-tier limits (loud, not silent): column mapping is refused
-(the executor-side scan restores by physical name only for the
-identity mapping; read through read_delta_log/delta_changes for mapped
-tables), and a version window whose JSON commits were expired raises —
-same retention contract as Delta CDF after VACUUM.
+Protocol-tier limit (loud, not silent): a version window whose JSON
+commits were expired raises — same retention contract as Delta CDF
+after VACUUM.
 """
 
 from __future__ import annotations
@@ -89,6 +91,38 @@ def _dv_indexes(table_path: str, desc: dict | None) -> frozenset[int]:
     return frozenset(int(i) for i in deserialize_rba(dv_payload(table_path, desc)))
 
 
+def _scan_meta(snap: DeltaSnapshot, path: str) -> tuple[dict, dict, list, dict]:
+    """What a Delta reader's scan needs of its snapshot: logical ->
+    physical column names, the nested types to relabel under column
+    mapping (VERDICT r7 next #5; none when the table is unmapped), the
+    logical partition columns, and every column's simpleString type."""
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.colmap import (
+        is_nested,
+    )
+
+    nested = {
+        f["name"]: f["type"]
+        for f in snap.schema_json.get("fields", [])
+        if snap.column_mapping_mode != "none" and is_nested(f.get("type"))
+    }
+    dtypes = {f.name: f.dataType.simpleString() for f in snap.spark_schema().fields}
+    return snap.resolved_physical_names(path), nested, list(snap.partition_cols), dtypes
+
+
+def _partition_consts(partition: tuple, dtypes: dict) -> dict:
+    """A slice's partition values, typed, as scan-kernel constants.
+    Canonical Delta partitionValues are logical strings — no Hive
+    percent-unquote (ADVICE r8 #4)."""
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
+        _parse_partition_value,
+    )
+
+    return {
+        c: _parse_partition_value(raw, dtypes.get(c, "string"), unescape=False)
+        for c, raw in partition
+    }
+
+
 class DeltaCdfStreamReader(DataSourceStreamReader):
     def __init__(
         self,
@@ -101,30 +135,11 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
         self.schema = schema
         self.starting_version = starting_version
         self.max_versions = max_versions
-        snap = DeltaSnapshot(path)
-        from real_time_e_commerce_analytics_lakehouse_spark.sources.colmap import (
-            is_nested,
+        # add.partitionValues key by PHYSICAL partition names
+        self._phys, self._nested, self._pcols, self._dtypes = _scan_meta(
+            DeltaSnapshot(path), path
         )
-
-        # column-mapped parity (VERDICT r7 next #5): physical resolution
-        # as in the batch reader; partitionValues key by PHYSICAL names
-        self._phys = snap.resolved_physical_names(path)
-        self._field_json = (
-            {
-                f["name"]: f
-                for f in snap.schema_json.get("fields", [])
-                if is_nested(f.get("type"))
-            }
-            if snap.column_mapping_mode != "none"
-            else {}
-        )
-        self._pcols = list(snap.partition_cols)
         self._pphys = {c: self._phys.get(c, c) for c in self._pcols}
-        self._ptypes = {
-            f.name: f.dataType.simpleString()
-            for f in snap.spark_schema().fields
-            if f.name in self._pcols
-        }
 
     # ---------------------------------------------------------- offsets
     def _latest_version(self) -> int:
@@ -260,85 +275,27 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
     # ---------------------------------------------------------- reading
     def read(self, partition: _ChangeSlice) -> Iterator:
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_type
 
         from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
-            _parse_partition_value,
+            _scan_file,
         )
 
-        t = pq.read_table(partition.file)
-        if partition.mode == "dv_rows":
-            t = t.take(pa.array(list(partition.include), type=pa.int64()))
-        elif partition.exclude:
-            import numpy as np
-
-            mask = np.ones(t.num_rows, dtype=bool)
-            idx = np.fromiter(partition.exclude, dtype=np.int64)
-            mask[idx[idx < t.num_rows]] = False
-            t = t.filter(pa.array(mask))
-        n = t.num_rows
-        part = dict(partition.partition)
-        arrays, names = [], []
-        for field in self.schema.fields:
-            if field.name == "_change_type":
-                if partition.mode == "cdc":
-                    col = t.column("_change_type").combine_chunks()
-                    arrays.append(col.cast(pa.string()))
-                else:
-                    label = (
-                        partition.label
-                        if partition.mode == "dv_rows"
-                        else partition.mode
-                    )
-                    arrays.append(pa.array([label] * n, type=pa.string()))
-            elif field.name == "_commit_version":
-                arrays.append(
-                    pa.array([partition.version] * n, type=pa.int64())
-                )
-            elif field.name == "_commit_timestamp":
-                pa_type = to_arrow_type(field.dataType)
-                arrays.append(
-                    pa.array(
-                        [partition.ts_ms * 1000] * n, type=pa.int64()
-                    ).cast(pa_type)
-                )
-            else:
-                pa_type = to_arrow_type(field.dataType)
-                if field.name in part:
-                    raw = part[field.name]
-                    v = (
-                        None
-                        if raw is None
-                        # canonical Delta partitionValues: no Hive
-                        # percent-unquote (ADVICE r8 #4)
-                        else _parse_partition_value(
-                            raw,
-                            self._ptypes.get(field.name, "string"),
-                            unescape=False,
-                        )
-                    )
-                    arrays.append(pa.array([v] * n, type=pa_type))
-                elif self._phys.get(field.name, field.name) in t.column_names:
-                    col = t.column(
-                        self._phys.get(field.name, field.name)
-                    ).combine_chunks()
-                    fj = getattr(self, "_field_json", {}).get(field.name)
-                    if fj is not None:
-                        # column-mapped nested rename (colmap.py)
-                        from real_time_e_commerce_analytics_lakehouse_spark.sources.colmap import (
-                            relabel_arrow,
-                        )
-
-                        col = relabel_arrow(col, fj["type"])
-                    if col.type != pa_type:
-                        col = col.cast(pa_type)
-                    arrays.append(col)
-                else:
-                    # additive evolution: column absent from older files
-                    arrays.append(pa.nulls(n, type=pa_type))
-            names.append(field.name)
-        yield from pa.Table.from_arrays(arrays, names=names).to_batches()
+        consts = _partition_consts(partition.partition, self._dtypes)
+        consts["_commit_version"] = partition.version
+        consts["_commit_timestamp"] = pa.scalar(partition.ts_ms * 1000, pa.int64())
+        if partition.mode != "cdc":  # cdc files store _change_type
+            consts["_change_type"] = (
+                partition.label if partition.mode == "dv_rows" else partition.mode
+            )
+        return _scan_file(
+            partition.file,
+            self.schema,
+            consts=consts,
+            phys=self._phys,
+            nested=self._nested,
+            drop=partition.exclude,
+            keep=partition.include if partition.mode == "dv_rows" else None,
+        )
 
 
 class DeltaCdfDataSource(DataSource):

@@ -19,16 +19,29 @@ units. All filters are returned as "still needs Spark" — pruning is a
 strict subset operation, so double-application is safe and exactness is
 never at risk.
 
+The format's schema is the one ``LakeTable.read`` gives: the unit
+schemas the manifest records, folded by the same mergeSchema rule
+(``tables._merged_schema``), so struct, map and widened decimal columns
+read through the format as they do through the engine.
+
 The JVM scan path (``LakeTable.read``) remains the performance path —
 whole-stage codegen, vectorized reader, DV anti-join in the plan. This
 source is the interop path: at 100 TB its per-FILE input partitions
 parallelize across executors like any file source, with batch-level
 Arrow transfer (no per-row Python serde).
 
+This module also holds what the package's four Python-DataSource
+formats (``laketable``, ``delta``, ``delta_cdf``, ``cloudFiles``) share
+on executors: ``_scan_file``, the one kernel that turns a file into
+batches of a declared schema (each reader only builds its per-field
+constants and column map), and ``_split_write``, the one
+split-by-partition-and-write step of the laketable and delta writers.
+
 Writes (``df.write`` / ``df.writeStream`` with ``format("laketable")``)
-stage parquet on executors; the driver-side commit goes through
-``tables.commit_manifest``, the one function that claims a laketable
-version, imported lazily so executors never load the table layer.
+stage parquet on executors and record each unit's data-column schema;
+the driver-side commit goes through ``tables.commit_manifest``, the one
+function that claims a laketable version, imported lazily so executors
+never load the table layer.
 """
 
 from __future__ import annotations
@@ -38,7 +51,7 @@ import os
 from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Any, Iterator
-from urllib.parse import unquote, urlparse
+from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -60,14 +73,16 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-# the reader's copy of tables.py's layout constants (this module stays
-# importable on executors without pulling the Spark-session-coupled
-# table layer)
+# the reader's copy of tables.py's log dir (this module stays importable
+# on executors without pulling the Spark-session-coupled table layer)
 _LOG_DIR = "_log"
+# Hive's NULL partition-value sentinel, shared by both table formats
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _unescape_hive(raw: str) -> str:
+    """Undo Hive's %XX dir-name escaping (':', '%', '=', ... — space is
+    NOT escaped); the NULL sentinel passes through."""
     return raw if raw == _HIVE_NULL else unquote(raw)
 
 
@@ -81,15 +96,16 @@ def _fs_path(path: str) -> str:
 
 
 def _parse_partition_value(
-    raw: str, spark_type: str, *, unescape: bool = True
+    raw: str | None, spark_type: str, *, unescape: bool = True
 ) -> Any:
     """Typed python value of a manifest partition string (None for the
-    Hive NULL sentinel). ``unescape=False`` for CANONICAL Delta
-    ``add.partitionValues`` — those are already logical strings, and
-    percent-unquoting them corrupts any value containing a literal
-    %XX sequence, e.g. '50%2Boff' -> '50+off' (ADVICE r8 #4; this
-    module's Hive-layout manifests DO escape and need the unquote)."""
-    if raw == _HIVE_NULL:
+    Hive NULL sentinel and for a Delta null). ``unescape=False`` for
+    CANONICAL Delta ``add.partitionValues`` — those are already logical
+    strings, and percent-unquoting them corrupts any value containing a
+    literal %XX sequence, e.g. '50%2Boff' -> '50+off' (ADVICE r8 #4;
+    this module's Hive-layout manifests DO escape and need the
+    unquote)."""
+    if raw is None or raw == _HIVE_NULL:
         return None
     if unescape:
         raw = _unescape_hive(raw)
@@ -107,33 +123,81 @@ def _parse_partition_value(
     return raw
 
 
-def _arrow_ddl(t) -> str:
-    """Spark DDL type name for an arrow type (file-schema inference)."""
-    import pyarrow as pa
+def _scan_file(
+    src: Any,
+    schema: StructType,
+    *,
+    consts: dict[str, Any] | None = None,
+    phys: dict[str, str] | None = None,
+    nested: dict[str, Any] | None = None,
+    drop: tuple = (),
+    keep: tuple | None = None,
+    also: tuple = (),
+) -> Iterator:
+    """The one executor-side scan of every Python-DataSource format in
+    this package: one file -> Arrow batches of the declared ``schema``.
 
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_int32(t) or pa.types.is_int16(t) or pa.types.is_int8(t):
-        return "int"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return f"array<{_arrow_ddl(t.value_type)}>"
-    raise ValueError(f"unsupported parquet type for laketable source: {t}")
+    ``src`` is a parquet path (only the columns the schema needs, plus
+    ``also``, are read) or an already-parsed Arrow table. ``drop`` are
+    row indexes to remove (deletion-vector tombstones); ``keep``, when
+    given, are the only row indexes kept (a DV-diff slice). A field in
+    ``consts`` is a value broadcast over the surviving rows, or a
+    callable ``(table, positions) -> array | scalar`` given the
+    survivors' row positions in the file (row tracking). Every other
+    field is the file column ``phys.get(name, name)``, relabelled
+    through ``nested[name]`` (a column-mapped nested Delta type, see
+    colmap.relabel_arrow), null when the file predates the column, and
+    cast wherever its type differs from the schema's."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.colmap import (
+        relabel_arrow,
+    )
+
+    consts, phys, nested = consts or {}, phys or {}, nested or {}
+    if isinstance(src, str):
+        pf = pq.ParquetFile(src)
+        have = set(pf.schema_arrow.names)
+        want = [phys.get(f.name, f.name) for f in schema.fields if f.name not in consts]
+        t = pf.read(columns=[c for c in dict.fromkeys([*want, *also]) if c in have])
+    else:
+        t = src
+    pos = np.arange(t.num_rows, dtype=np.int64)
+    if keep is not None:
+        pos = np.asarray(keep, dtype=np.int64)
+        t = t.take(pa.array(pos))
+    elif drop:
+        # vectorized survivor mask (a Python per-row loop dominates scan
+        # time on multi-million-row files)
+        mask = np.ones(t.num_rows, dtype=bool)
+        idx = np.fromiter(drop, dtype=np.int64)
+        mask[idx[idx < t.num_rows]] = False
+        t, pos = t.filter(pa.array(mask)), pos[mask]
+    arrays = []
+    for f in schema.fields:
+        pa_type = to_arrow_type(f.dataType)
+        name = phys.get(f.name, f.name)
+        if f.name in consts:
+            v = consts[f.name]
+            col = v(t, pos) if callable(v) else v
+            if not isinstance(col, (pa.Array, pa.ChunkedArray)):
+                if not isinstance(col, pa.Scalar):
+                    col = pa.scalar(col, type=pa_type)
+                col = pa.repeat(col, t.num_rows)
+        elif name in t.column_names:
+            col = t.column(name)
+            if f.name in nested:
+                col = relabel_arrow(col.combine_chunks(), nested[f.name])
+        else:
+            # additive evolution: column absent from older files
+            col = pa.nulls(t.num_rows, type=pa_type)
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        arrays.append(col if col.type == pa_type else col.cast(pa_type))
+    yield from pa.Table.from_arrays(arrays, names=schema.fieldNames()).to_batches()
 
 
 class _Snapshot:
@@ -182,36 +246,48 @@ class _Snapshot:
             )
         return sorted(out)
 
-    def file_schema_ddl(self) -> str:
-        """Merged DDL across units (first file per unit; later units win
-        a name collision — additive evolution), with column mapping
-        applied (physical -> logical, dropped removed) and partition
-        columns appended."""
+    def schema_ddl(self) -> str:
+        """The schema ``LakeTable.read`` gives this snapshot: the unit
+        schemas the manifest records, folded in file-path order by the
+        same mergeSchema rule (a unit that records none — older
+        manifests, ``convert_parquet`` — contributes its first footer's
+        Arrow schema), physical names mapped to logical ones, dropped
+        columns removed, partition columns appended. A DECLARED
+        partition column with no data unit yet (partition_by is manifest
+        truth, r3 ADVICE #4) is typed string, the Hive convention, so a
+        zero-unit partitioned table reads as an empty frame with its
+        declared layout."""
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
+        from pyspark.sql.types import StructField
 
-        fields: dict[str, str] = {}
-        for u in self.units:
-            files = self.unit_files(u)
-            if not files:
-                continue
-            for f_ in pq.read_schema(files[0]):
-                fields[f_.name] = _arrow_ddl(f_.type)
+        from real_time_e_commerce_analytics_lakehouse_spark.tables import (
+            _merged_schema,
+        )
+
+        schemas = []
+        for u in sorted(
+            self.units,
+            key=lambda u: os.path.abspath(os.path.join(self.root, u["path"])),
+        ):
+            schema = u.get("schema")
+            if not schema:
+                files = self.unit_files(u)
+                if not files:
+                    continue
+                schema = StructType([
+                    StructField(f.name, from_arrow_type(f.type))
+                    for f in pq.read_schema(files[0])
+                ]).json()
+            schemas.append(schema)
         inv = {p: l for l, p in self.colmap.items()}
         cols = [
-            f"`{inv.get(name, name)}` {ddl}"
-            for name, ddl in fields.items()
-            if name not in self.dropped
+            f"`{inv.get(f.name, f.name)}` {f.dataType.simpleString()}"
+            for f in (_merged_schema(schemas).fields if schemas else [])
+            if f.name not in self.dropped
         ]
-        # partition columns from unit metadata; a DECLARED partition
-        # column with no data unit yet (partition_by is manifest truth,
-        # r3 ADVICE #4) still appears, typed string — the Hive
-        # convention for inferred partitions — so a zero-unit
-        # partitioned table reads as an empty frame with its declared
-        # layout instead of failing on an empty DDL
-        ptypes = dict(self.ptypes)
-        for c in self.partition_by:
-            ptypes.setdefault(c, "string")
-        cols += [f"`{c}` {t}" for c, t in ptypes.items()]
+        pcols = dict.fromkeys([*self.partition_by, *self.ptypes])
+        cols += [f"`{c}` {self.ptypes.get(c, 'string')}" for c in pcols]
         return ", ".join(cols)
 
     def tombstones(self) -> dict[str, set]:
@@ -241,7 +317,7 @@ class _FileSlice(InputPartition):
     tombstoned row indices inside it. Picklable by construction.
 
     `meta` (streaming only): the batch's OWN decode metadata —
-    ((colmap items), (dropped cols), (ptypes items)) — resolved once on
+    ((colmap items), (ptypes items)) — resolved once on
     the driver at planning time, so executors neither re-parse the
     manifest log per partition nor decode an already-planned batch with
     metadata from a commit that landed after planning (e.g. a rename)."""
@@ -307,22 +383,20 @@ class LakeTableReader(DataSourceReader):
         self.filters: list[Filter] = []
 
     def __getstate__(self):
-        """Executors need only the decode metadata (colmap/dropped/
-        ptypes); the full parsed manifest — every unit dict with
+        """Executors need only the decode metadata (colmap, ptypes);
+        the full parsed manifest — every unit dict with
         per-file stats — is multi-MB at large tables and would be
         pickled into EVERY scan task (r5 review). Planning
         (pushFilters/partitions) runs driver-side before serialization,
         so the stripped snapshot is sufficient on the other side; the
-        streaming reader ships the same 3-tuple per slice."""
+        streaming reader ships the same pair per slice."""
         from types import SimpleNamespace
 
         state = self.__dict__.copy()
         snap = state.get("snap")
         if isinstance(snap, _Snapshot):
             state["snap"] = SimpleNamespace(
-                colmap=dict(snap.colmap),
-                dropped=list(snap.dropped),
-                ptypes=dict(snap.ptypes),
+                colmap=dict(snap.colmap), ptypes=dict(snap.ptypes)
             )
         return state
 
@@ -395,47 +469,26 @@ class LakeTableReader(DataSourceReader):
 
     # -------------------------------------------------------------- scan
     def read(self, partition: _FileSlice) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_type
+        return _scan_slice(partition, self.schema, self.snap.colmap, self.snap.ptypes)
 
-        t = pq.read_table(partition.file)
-        if partition.tomb:
-            import numpy as np
 
-            # vectorized survivor mask (a Python per-row loop dominates
-            # scan time on multi-million-row files)
-            mask = np.ones(t.num_rows, dtype=bool)
-            idx = np.fromiter(partition.tomb, dtype=np.int64)
-            mask[idx[idx < t.num_rows]] = False
-            t = t.filter(pa.array(mask))
-        n = t.num_rows
-        part = dict(partition.partition)
-        inv = {p: l for l, p in self.snap.colmap.items()}
-        logical_file_cols = {
-            inv.get(c, c): c for c in t.column_names if c not in self.snap.dropped
-        }
-        arrays, names = [], []
-        for field in self.schema.fields:
-            pa_type = to_arrow_type(field.dataType)
-            if field.name in part or (
-                field.name in self.snap.ptypes and field.name not in logical_file_cols
-            ):
-                v = _parse_partition_value(
-                    part.get(field.name, _HIVE_NULL),
-                    self.snap.ptypes.get(field.name, "string"),
-                )
-                arrays.append(pa.array([v] * n, type=pa_type))
-            elif field.name in logical_file_cols:
-                col = t.column(logical_file_cols[field.name])
-                if col.type != pa_type:
-                    col = col.cast(pa_type)
-                arrays.append(col.combine_chunks())
-            else:
-                # additive evolution: column absent from this older file
-                arrays.append(pa.nulls(n, type=pa_type))
-            names.append(field.name)
-        yield from pa.Table.from_arrays(arrays, names=names).to_batches()
+def _scan_slice(
+    partition: _FileSlice, schema: StructType, colmap: dict, ptypes: dict
+) -> Iterator:
+    """One laketable file through the scan kernel: its tombstones
+    dropped, its unit's partition values restored typed, physical
+    column names read under their logical ones. A partition column the
+    unit has no value for reads from the file, else null."""
+    return _scan_file(
+        partition.file,
+        schema,
+        drop=partition.tomb,
+        phys=colmap,
+        consts={
+            c: _parse_partition_value(raw, ptypes.get(c, "string"))
+            for c, raw in partition.partition
+        },
+    )
 
 
 class LakeTableStreamReader(DataSourceStreamReader):
@@ -553,11 +606,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
                         )
         # the batch's decode metadata rides in every slice (see
         # _FileSlice.meta) — resolved here, on the driver, exactly once
-        meta = (
-            tuple(sorted(new.colmap.items())),
-            tuple(new.dropped),
-            tuple(sorted(new.ptypes.items())),
-        )
+        meta = (tuple(sorted(new.colmap.items())), tuple(sorted(new.ptypes.items())))
         out: list[InputPartition] = []
         for u in new.units:
             if u["path"] in seen:
@@ -571,20 +620,11 @@ class LakeTableStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _FileSlice) -> Iterator:
-        # identical scan kernel to the batch reader, INCLUDING the
-        # slice's tombstones (planning resolved active DVs for new
-        # units). Decode metadata comes from the slice itself — no
-        # manifest access on the executor.
-        from types import SimpleNamespace
-
-        cm, dropped, ptypes = partition.meta
-        reader = LakeTableReader.__new__(LakeTableReader)
-        reader.snap = SimpleNamespace(
-            colmap=dict(cm), dropped=list(dropped), ptypes=dict(ptypes)
-        )
-        reader.schema = self.schema
-        reader.filters = []
-        yield from LakeTableReader.read(reader, partition)
+        # the batch reader's scan, INCLUDING the slice's tombstones
+        # (planning resolved active DVs for new units); decode metadata
+        # comes from the slice itself — no manifest access here
+        cm, ptypes = partition.meta
+        return _scan_slice(partition, self.schema, dict(cm), dict(ptypes))
 
     def commit(self, end: dict) -> None:
         # manifests are immutable — nothing to clean up; track the
@@ -643,6 +683,84 @@ def _merge_stats(per_file: dict[str, dict[str, list]]) -> dict[str, list]:
             else:
                 out[c] = [lo, hi]
     return out
+
+
+def _hive_segment(col: str, canon: str | None) -> str:
+    """Hive ``col=value`` directory segment: the value percent-escaped
+    in the path, the Hive NULL sentinel for None."""
+    return f"{col}={_HIVE_NULL if canon is None else quote(canon, safe='')}"
+
+
+def _arrow_table(iterator) -> Any:
+    """A write task's non-empty Arrow batches as one table (None when
+    the task received no rows)."""
+    import pyarrow as pa
+
+    batches = [b for b in iterator if b.num_rows]
+    return pa.Table.from_batches(batches) if batches else None
+
+
+def _split_write(
+    t, root: str, partition_by: list[str], part_value, transform=None
+) -> list:
+    """Write one task's Arrow table under ``root`` as one parquet file
+    per partition combination — the step every writer of this package
+    shares. ``part_value(col, value)`` gives a row's (key, canonical
+    string or None) for one partition column; the keys name the Hive
+    dirs (``_hive_segment``) and the partition columns leave the data.
+    ``transform`` maps the data before it is written (column mapping's
+    physical names). Returns [(combo, segs, filename, rows), ...] with
+    combo = ((key, canonical), ...)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    groups: dict[tuple, Any] = {(): None}
+    data = t
+    if partition_by:
+        groups = {}
+        for i, row in enumerate(t.select(partition_by).to_pylist()):
+            combo = tuple(part_value(c, row[c]) for c in partition_by)
+            groups.setdefault(combo, []).append(i)
+        data = t.drop_columns(partition_by)
+    if transform is not None:
+        data = transform(data)
+    out = []
+    for combo, idx in groups.items():
+        segs = tuple(_hive_segment(k, v) for k, v in combo)
+        os.makedirs(os.path.join(root, *segs), exist_ok=True)
+        fname = f"part-{uuid_hex()}.parquet"
+        part = data if idx is None else data.take(pa.array(idx, type=pa.int64()))
+        pq.write_table(part, os.path.join(root, *segs, fname))
+        out.append((combo, segs, fname, part.num_rows))
+    return out
+
+
+def _plain_value(col: str, v: Any) -> tuple[str, str | None]:
+    """A laketable format partition value: plain values only (the
+    engine escapes; this interop writer rejects instead)."""
+    s = None if v is None else str(v)
+    if s is not None and quote(s, safe="") != s:
+        raise ValueError(
+            f"partition value {s!r} needs Hive escaping; "
+            "use the LakeTable API for such layouts"
+        )
+    return col, s
+
+
+def _stage_unit(t, root: str, partition_by: list[str]) -> tuple:
+    """Stage one task's rows in a laketable unit dir: ((segs, filename,
+    footer stats), ...) per written file."""
+    return tuple(
+        (segs, fname, _footer_stats(os.path.join(root, *segs, fname)))
+        for _combo, segs, fname, _n in _split_write(t, root, partition_by, _plain_value)
+    )
+
+
+def _data_schema(schema: StructType, partition_by: list[str]) -> str:
+    """Spark schema JSON of the data columns a format-written unit
+    holds, recorded in its manifest entry as the engine's writers
+    record theirs."""
+    return StructType([f for f in schema.fields if f.name not in partition_by]).json()
 
 
 @dataclass
@@ -723,61 +841,16 @@ class LakeTableWriter(DataSourceArrowWriter):
             if f.name in self.partition_by
         }
 
-    @staticmethod
-    def _pdir(col: str, v) -> str:
-        """Hive `col=value` segment; plain values only (the engine
-        escapes, this interop writer rejects instead)."""
-        from urllib.parse import quote
-
-        if v is None:
-            return f"{col}={_HIVE_NULL}"
-        s = str(v)
-        if quote(s, safe="") != s:
-            raise ValueError(
-                f"partition value {s!r} needs Hive escaping; "
-                "use the LakeTable API for such layouts"
-            )
-        return f"{col}={s}"
-
     # executors ------------------------------------------------------------
     def write(self, iterator) -> _WrittenFile:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        batches = [b for b in iterator if b.num_rows]
-        if not batches:
-            return _WrittenFile(filename="", n_rows=0, combos=())
-        t = pa.Table.from_batches(batches)
-        if not self.partition_by:
-            out_dir = os.path.join(self.path, self.unit_rel)
-            os.makedirs(out_dir, exist_ok=True)
-            fname = f"part-{uuid_hex()}.parquet"
-            fpath = os.path.join(out_dir, fname)
-            pq.write_table(t, fpath)
-            return _WrittenFile(
-                filename=fname,
-                n_rows=t.num_rows,
-                combos=(((), fname, _footer_stats(fpath)),),
-            )
-        keys = t.select(self.partition_by).to_pylist()
-        combos: dict[tuple, list[int]] = {}
-        for i, row in enumerate(keys):
-            combos.setdefault(
-                tuple((c, row[c]) for c in self.partition_by), []
-            ).append(i)
-        data = t.drop_columns(self.partition_by)
-        written = []
-        for combo, idx in combos.items():
-            segs = [self._pdir(c, v) for c, v in combo]
-            out_dir = os.path.join(self.path, self.unit_rel, *segs)
-            os.makedirs(out_dir, exist_ok=True)
-            fname = f"part-{uuid_hex()}.parquet"
-            fpath = os.path.join(out_dir, fname)
-            pq.write_table(
-                data.take(pa.array(idx, type=pa.int64())), fpath
-            )
-            written.append((tuple(segs), fname, _footer_stats(fpath)))
-        return _WrittenFile(filename="", n_rows=t.num_rows, combos=tuple(written))
+        t = _arrow_table(iterator)
+        if t is None:
+            return _WrittenFile(filename="", n_rows=0)
+        root = os.path.join(self.path, self.unit_rel)
+        combos = _stage_unit(t, root, self.partition_by)
+        # an unpartitioned task writes one file, named in the message
+        fname = "" if self.partition_by else combos[0][1]
+        return _WrittenFile(filename=fname, n_rows=t.num_rows, combos=combos)
 
     # driver ---------------------------------------------------------------
     def _prune_unlisted(self, messages) -> None:
@@ -826,6 +899,7 @@ class LakeTableWriter(DataSourceArrowWriter):
                     "partition_types": dict(self.ptype_ddl),
                     "stats": _merge_stats(files),
                     "file_stats": files,
+                    "schema": _data_schema(self.schema, self.partition_by),
                 }
                 for segs, files in sorted(by_segs.items())
             ]
@@ -862,6 +936,7 @@ class LakeTableWriter(DataSourceArrowWriter):
                     "partition_types": {},
                     "stats": _merge_stats(files),
                     "file_stats": files,
+                    "schema": _data_schema(self.schema, self.partition_by),
                 }
             ]
         from real_time_e_commerce_analytics_lakehouse_spark.tables import (
@@ -950,44 +1025,12 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
 
     # executors ------------------------------------------------------------
     def write(self, iterator) -> _WrittenFile:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        batches = [b for b in iterator if b.num_rows]
-        if not batches:
-            return _WrittenFile(filename="", n_rows=0, combos=())
-        t = pa.Table.from_batches(batches)
+        t = _arrow_table(iterator)
+        if t is None:
+            return _WrittenFile(filename="", n_rows=0)
         unit_rel = os.path.join("data", uuid_hex())
-        if not self.partition_by:
-            out_dir = os.path.join(self.path, unit_rel)
-            os.makedirs(out_dir, exist_ok=True)
-            fname = f"part-{uuid_hex()}.parquet"
-            fpath = os.path.join(out_dir, fname)
-            pq.write_table(t, fpath)
-            return _WrittenFile(
-                filename=unit_rel,
-                n_rows=t.num_rows,
-                combos=(((), fname, _footer_stats(fpath)),),
-            )
-        keys = t.select(self.partition_by).to_pylist()
-        groups: dict[tuple, list[int]] = {}
-        for i, row in enumerate(keys):
-            groups.setdefault(
-                tuple((c, row[c]) for c in self.partition_by), []
-            ).append(i)
-        data = t.drop_columns(self.partition_by)
-        written = []
-        for combo, idx in groups.items():
-            segs = [LakeTableWriter._pdir(c, v) for c, v in combo]
-            out_dir = os.path.join(self.path, unit_rel, *segs)
-            os.makedirs(out_dir, exist_ok=True)
-            fname = f"part-{uuid_hex()}.parquet"
-            fpath = os.path.join(out_dir, fname)
-            pq.write_table(data.take(pa.array(idx, type=pa.int64())), fpath)
-            written.append((tuple(segs), fname, _footer_stats(fpath)))
-        return _WrittenFile(
-            filename=unit_rel, n_rows=t.num_rows, combos=tuple(written)
-        )
+        combos = _stage_unit(t, os.path.join(self.path, unit_rel), self.partition_by)
+        return _WrittenFile(filename=unit_rel, n_rows=t.num_rows, combos=combos)
 
     # driver ---------------------------------------------------------------
     def _drop_staged(self, messages) -> None:
@@ -1010,6 +1053,7 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
                     "partition_types": dict(self.ptype_ddl),
                     "stats": dict(st),
                     "file_stats": {fname: st},
+                    "schema": _data_schema(self.schema, self.partition_by),
                 }
                 for m in messages
                 if m and m.filename
@@ -1025,6 +1069,7 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
                         {fname: st for _s, fname, st in m.combos}
                     ),
                     "file_stats": {fname: st for _s, fname, st in m.combos},
+                    "schema": _data_schema(self.schema, self.partition_by),
                 }
                 for m in messages
                 if m and m.filename
@@ -1165,7 +1210,7 @@ class LakeTableDataSource(DataSource):
 
     def schema(self) -> str:
         path, version = self._target()
-        return _Snapshot(path, self._pin(path, version)).file_schema_ddl()
+        return _Snapshot(path, self._pin(path, version)).schema_ddl()
 
     def reader(self, schema: StructType) -> LakeTableReader:
         path, version = self._target()

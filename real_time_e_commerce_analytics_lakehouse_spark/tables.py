@@ -73,13 +73,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.types import StructType
 
+from real_time_e_commerce_analytics_lakehouse_spark.sources.pyds import (
+    _HIVE_NULL,
+    _unescape_hive,
+)
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _DV_DIR = "_dv"  # deletion-vector tombstone dirs (separate from data/
              # so the read_stream file glob never ingests them)
 
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # process-wide immutable-manifest parse cache (see _manifest_doc)
 _MANIFEST_CACHE: dict[str, dict] = {}
@@ -109,12 +112,6 @@ def _part_str(v: object) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
-
-
-def _unescape_hive(raw: str) -> str:
-    """Undo Hive's %XX dir-name escaping (':', '%', '=', ... — space is
-    NOT escaped); the NULL sentinel passes through."""
-    return raw if raw == _HIVE_NULL else unquote(raw)
 
 
 def partition_transform(col: str, transform: str, n: int | None = None) -> tuple[str, str]:
@@ -259,17 +256,15 @@ def _merge_types(a: object, b: object, case_sensitive: bool) -> object:
     raise ValueError(f"cannot merge incompatible data types {a} and {b}")
 
 
-def _merged_schema(spark: SparkSession, schemas: list[str]) -> StructType:
+def _merged_schema(schemas: list[str], case_sensitive: bool = False) -> StructType:
     """The schema a mergeSchema read infers from files with these
     recorded schemas, given in the order inference folds them (by file
-    path), computed with no Spark job. Folding a schema twice changes
-    nothing, so each distinct one is folded once."""
+    path), computed with no Spark job and no session. Folding a schema
+    twice changes nothing, so each distinct one is folded once."""
     distinct = list(dict.fromkeys(schemas))
     merged = json.loads(distinct[0])
-    if len(distinct) > 1:
-        cs = spark.conf.get("spark.sql.caseSensitive") == "true"
-        for s in distinct[1:]:
-            merged = _merge_types(merged, json.loads(s), cs)
+    for s in distinct[1:]:
+        merged = _merge_types(merged, json.loads(s), case_sensitive)
     return StructType.fromJson(merged)
 
 
@@ -1061,7 +1056,8 @@ class LakeTable:
             )
         ]
         if all(schemas):
-            reader = self.spark.read.schema(_merged_schema(self.spark, schemas))
+            cs = self.spark.conf.get("spark.sql.caseSensitive") == "true"
+            reader = self.spark.read.schema(_merged_schema(schemas, cs))
         else:
             reader = self.spark.read.option("mergeSchema", "true")
         df = reader.parquet(*paths)

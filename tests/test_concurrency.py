@@ -360,6 +360,46 @@ def test_each_log_format_has_one_commit_function():
     }
 
 
+def test_python_datasource_reads_emit_batches_only_through_the_scan_kernel():
+    """Every Python-DataSource format in sources/ turns a file into
+    batches in one place, pyds._scan_file: no reader's `read` method
+    builds output batches itself (pa.Table.from_arrays / pa.nulls), and
+    each one calls the kernel (laketable through its `_scan_slice`) or
+    delegates to a reader that does, so a private copy of the scan
+    cannot grow back."""
+    import ast
+    import glob
+
+    pkg = os.path.join(REPO, "real_time_e_commerce_analytics_lakehouse_spark")
+    hand_built, readers = [], {}
+    for fn in sorted(glob.glob(os.path.join(pkg, "sources", "*.py"))):
+        for cls in ast.walk(ast.parse(open(fn).read())):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            for fdef in cls.body:
+                if not (isinstance(fdef, ast.FunctionDef) and fdef.name == "read"):
+                    continue
+                names = {
+                    n.attr if isinstance(n, ast.Attribute) else n.id
+                    for n in ast.walk(fdef)
+                    if isinstance(n, (ast.Attribute, ast.Name))
+                }
+                if names & {"from_arrays", "nulls"}:
+                    hand_built.append(cls.name)
+                readers[cls.name] = (
+                    "_scan_file" in names or "_scan_slice" in names or "read" in names
+                )
+    assert hand_built == []
+    assert readers == {
+        "LakeTableReader": True,
+        "LakeTableStreamReader": True,
+        "_SliceScanMixin": True,  # DeltaBatchReader, DeltaTableStreamReader
+        "DeltaCdfBatchReader": True,  # delegates to DeltaCdfStreamReader
+        "DeltaCdfStreamReader": True,
+        "CloudFilesStreamReader": True,
+    }
+
+
 def test_log_files_stage_through_temp_names_unique_per_writer():
     """A fixed `<file>.tmp` staging name lets two writers of one file
     truncate each other's half-written temp; every staged write in the

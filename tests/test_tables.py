@@ -473,7 +473,7 @@ def test_merged_schema_rejects_a_type_conflict(spark):
     a = '{"type":"struct","fields":[{"name":"id","type":"long","nullable":true,"metadata":{}}]}'
     b = a.replace('"long"', '"string"')
     with pytest.raises(ValueError, match="incompatible"):
-        _merged_schema(spark, [a, b])
+        _merged_schema([a, b])
 
 
 def test_merge_insert_only_does_not_broadcast_target(spark, tmp_table):

@@ -54,7 +54,6 @@ from pathlib import Path
 def worker(tree: str, sf_dir: str) -> None:
     sys.path.insert(0, tree)
     os.chdir(tree)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     from real_time_e_commerce_analytics_lakehouse_spark.plans import QUERIES
     from real_time_e_commerce_analytics_lakehouse_spark.session import get_spark
 
