@@ -20,6 +20,19 @@ their deduped frames on first write too (06:96-103 uses the pre-dedup
 frame); metrics derive dates from business events, not warehouse-load
 time (09:30).
 
+Skip contract: a cycle costs what changed.
+- bronze starts no stream for a landing table whose file listing (name,
+  size, mtime) equals the one taken before its last successful drain;
+  the listing lives in the table's checkpoint dir, so deleting the
+  checkpoint resets it.
+- silver conforms only the bronze rows committed since its last run.
+- each gold and metrics unit declares its input tables (GOLD_UNITS,
+  METRICS_UNITS) and records their versions as txn markers in the
+  commit that writes it. A unit whose inputs are all at exactly those
+  versions is skipped, so its table keeps its earlier rows and its
+  earlier `gold_*_ts`. An input that moved either way, a rebuilt one at
+  a lower version included, rebuilds the unit.
+
 Concurrency contract. Each layer method is a barrier: it returns only
 after all of its work is done, and `run()` calls the four layers in
 order. Within a layer, the per-table units that do not depend on each
@@ -27,12 +40,13 @@ other (the 8 bronze streams, the 8 silver conforms, the 4 dims and the
 3 facts, the 3 marts) run concurrently on driver threads, so their small
 Spark jobs overlap instead of queueing behind one another. Every unit
 runs with the caller's Spark local properties and session tags (job
-group, description, scheduler pool), each unit with its own copy. A failing unit does not cancel the others: the layer waits for
-every unit, then raises the first failure in submission order, and no
-thread outlives the call. Re-running after a failure is idempotent: the
-units that finished committed their progress, and the failed one
-re-processes from its last committed version or checkpoint through the
-same guarded merges.
+group, description, scheduler pool), each unit with its own copy. A
+failing unit does not cancel the others: the layer waits for every
+unit, then raises the first failure in submission order, and no thread
+outlives the call. Re-running after a failure is idempotent: the units
+that finished committed their progress, and the failed one re-processes
+from its last committed version or checkpoint through the same guarded
+merges.
 """
 
 from __future__ import annotations
@@ -42,6 +56,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,9 +74,43 @@ from real_time_e_commerce_analytics_lakehouse_spark.sources.csv_stream import (
 )
 from real_time_e_commerce_analytics_lakehouse_spark.streaming.pipeline import (
     IncrementalRunner,
+    record_listing,
     run_available_now,
+    unseen_listing,
 )
 from real_time_e_commerce_analytics_lakehouse_spark.tables import LakeTable
+
+
+class Unit(NamedTuple):
+    """One gold or metrics table: the tables it reads ("layer/table"),
+    and how it is written — a full-refresh overwrite when `keys` is
+    None, else merge_upsert on `keys` guarded by `guard_col`."""
+
+    inputs: tuple[str, ...]
+    keys: str | None = None
+    guard_col: str | None = None
+
+
+GOLD_UNITS: dict[str, Unit] = {
+    "dim_customers": Unit(("silver/customers",)),
+    "dim_products": Unit(("silver/products",)),
+    "dim_sellers": Unit(("silver/sellers",)),
+    "dim_geolocation": Unit(("silver/geolocation",)),
+    "fact_orders": Unit(
+        ("silver/orders", "silver/order_items", "silver/customers"),
+        "order_id",
+        "orders_silver_ts",  # 04:117
+    ),
+    "fact_payments": Unit(("silver/order_payments", "silver/orders"), "order_id"),
+    "fact_reviews": Unit(
+        ("silver/order_reviews", "silver/orders"), "review_id", "ingestion_ts"
+    ),
+}
+METRICS_UNITS: dict[str, Unit] = {
+    "metrics_revenue": Unit(("gold/fact_orders", "gold/fact_payments")),  # 07:72-78
+    "metrics_orders": Unit(("gold/fact_orders",)),
+    "metrics_customers": Unit(("gold/dim_customers", "gold/fact_orders")),
+}
 
 
 class OlistPipeline:
@@ -109,19 +158,26 @@ class OlistPipeline:
 
     def bronze_ingest(self) -> list[str]:
         """Stream new landing CSVs into bronze tables; idempotent per
-        source file (replayed/duplicated files insert nothing)."""
+        source file (replayed/duplicated files insert nothing). A table
+        whose landing files are unchanged since its last drain starts no
+        stream."""
 
         def ingest(name: str) -> None:
             target = self.table("bronze", name)
+            checkpoint = os.path.join(self.lake_root, "_checkpoints", name)
+            listing = unseen_listing(os.path.join(self.landing_dir, name), checkpoint)
+            if listing is None:
+                return  # no file landed or changed since the last drain
             run_available_now(
                 bronze_csv_stream(
                     self.spark, self.landing_dir, name, CONTRACTS[name].raw_schema, self.clock
                 ),
-                checkpoint_dir=os.path.join(self.lake_root, "_checkpoints", name),
+                checkpoint_dir=checkpoint,
                 batch_fn=lambda batch_df, _epoch: target.merge_insert_only(
                     batch_df, keys="source_file"
                 ),
             )
+            record_listing(checkpoint, listing)
 
         tables = [t for t in discover_tables(self.landing_dir) if t in CONTRACTS]
         self._run_concurrently(*(partial(ingest, t) for t in tables))
@@ -233,16 +289,31 @@ class OlistPipeline:
     def gold_build(self) -> None:
         """The 4 dims and the 3 facts, all 7 from silver."""
         self._run_concurrently(
-            self._build_dim_customers,
-            self._build_dim_products,
-            self._build_dim_sellers,
-            self._build_dim_geolocation,
-            self._build_fact_orders,
-            self._build_fact_payments,
-            self._build_fact_reviews,
+            *(partial(self._unit, "gold", *unit) for unit in GOLD_UNITS.items())
         )
 
-    def _build_dim_customers(self) -> None:
+    def _unit(self, layer: str, name: str, unit: Unit) -> None:
+        """Write `_<name>_frame()` to the table `layer/name` unless each
+        of the unit's inputs is at exactly the version its last commit
+        recorded. The write records the versions it read with
+        `replay=False`: an input rebuilt at a lower version must lower
+        its marker, not be taken for a replay. The layer barrier keeps
+        the inputs still while the unit reads them."""
+        target = self.table(layer, name)
+        versions = {i: self.table(*i.split("/")).latest_version() for i in unit.inputs}
+        if target.exists() and all(
+            target.last_txn_version(i) == v for i, v in versions.items()
+        ):
+            return
+        frame = getattr(self, f"_{name}_frame")()
+        if unit.keys is None:
+            target.overwrite(frame, txn=versions, replay=False)
+        else:
+            target.merge_upsert(
+                frame, unit.keys, unit.guard_col, txn=versions, replay=False
+            )
+
+    def _dim_customers_frame(self) -> DataFrame:
         customers = self.table("silver", "customers").read()
         dim_customers = (
             dedup_latest(customers, "customer_id", "ingestion_ts", ("source_file",))
@@ -256,9 +327,9 @@ class OlistPipeline:
                 self._now().alias("gold_created_ts"),
             )
         )
-        self.table("gold", "dim_customers").overwrite(dim_customers)
+        return dim_customers
 
-    def _build_dim_products(self) -> None:
+    def _dim_products_frame(self) -> DataFrame:
         products = self.table("silver", "products").read()
         dim_products = (
             dedup_latest(products, "product_id", "ingestion_ts", ("source_file",))
@@ -275,9 +346,9 @@ class OlistPipeline:
                 self._now().alias("gold_created_ts"),
             )
         )
-        self.table("gold", "dim_products").overwrite(dim_products)
+        return dim_products
 
-    def _build_dim_sellers(self) -> None:
+    def _dim_sellers_frame(self) -> DataFrame:
         sellers = self.table("silver", "sellers").read()
         dim_sellers = (
             dedup_latest(sellers, "seller_id", "ingestion_ts", ("source_file",))
@@ -290,9 +361,9 @@ class OlistPipeline:
                 self._now().alias("gold_created_ts"),
             )
         )
-        self.table("gold", "dim_sellers").overwrite(dim_sellers)
+        return dim_sellers
 
-    def _build_dim_geolocation(self) -> None:
+    def _dim_geolocation_frame(self) -> DataFrame:
         geo = self.table("silver", "geolocation").read()
         dim_geolocation = geo.select(
             self._sk("zip_code_prefix").alias("geolocation_sk"),
@@ -303,14 +374,7 @@ class OlistPipeline:
             "modal_state",
             self._now().alias("gold_created_ts"),
         )
-        self.table("gold", "dim_geolocation").overwrite(dim_geolocation)
-
-    def _build_fact_orders(self) -> None:
-        self.table("gold", "fact_orders").merge_upsert(
-            self._fact_orders_frame(),
-            keys="order_id",
-            guard_col="orders_silver_ts",  # 04:117
-        )
+        return dim_geolocation
 
     def _fact_orders_frame(self) -> DataFrame:
         """fact_orders: pre-agg items per order + 3-way left join + the
@@ -373,7 +437,7 @@ class OlistPipeline:
         )
         return fact
 
-    def _build_fact_payments(self) -> None:
+    def _fact_payments_frame(self) -> DataFrame:
         """fact_payments: payments pre-agg per order + order attrs
         (05_gold_fact_payments.py:31-55)."""
         payments = self.table("silver", "order_payments").read()
@@ -385,12 +449,11 @@ class OlistPipeline:
             F.count("*").alias("payment_count"),  # 05:35
             F.max("payment_installments").alias("max_installments"),
         )
-        fact = pay_agg.join(orders, "order_id", "left").withColumn(  # 05:43-46
+        return pay_agg.join(orders, "order_id", "left").withColumn(  # 05:43-46
             "gold_processed_ts", self._now()
         )
-        self.table("gold", "fact_payments").merge_upsert(fact, keys="order_id")
 
-    def _build_fact_reviews(self) -> None:
+    def _fact_reviews_frame(self) -> DataFrame:
         """fact_reviews: reviews ⋈ orders + post-join dedup by review_id
         (06_gold_fact_reviews.py:54-90). Unlike the reference (06:96-103
         first-write bug), the DEDUPED frame is written on every path."""
@@ -412,19 +475,17 @@ class OlistPipeline:
             F.col("ingestion_ts"),
             self._now().alias("gold_processed_ts"),
         )
-        deduped = dedup_latest(enriched, "review_id", "ingestion_ts", ("order_id",))
-        self.table("gold", "fact_reviews").merge_upsert(
-            deduped, keys="review_id", guard_col="ingestion_ts"
-        )
+        return dedup_latest(enriched, "review_id", "ingestion_ts", ("order_id",))
 
     # ------------------------------------------------------------- metrics
 
     def metrics_build(self) -> None:
+        """The 3 marts, full refresh, from gold."""
         self._run_concurrently(
-            self._metrics_revenue, self._metrics_orders, self._metrics_customers
+            *(partial(self._unit, "metrics", *unit) for unit in METRICS_UNITS.items())
         )
 
-    def _metrics_revenue(self) -> None:
+    def _metrics_revenue_frame(self) -> DataFrame:
         """Revenue by (order_date, customer_state, order_status): facts
         inner-joined to payments — unpaid orders excluded (07:26-65)."""
         fo = self.table("gold", "fact_orders").read()
@@ -444,9 +505,9 @@ class OlistPipeline:
             )
             .withColumn("gold_processed_ts", self._now())
         )
-        self.table("metrics", "metrics_revenue").overwrite(mart)  # 07:72-78
+        return mart
 
-    def _metrics_orders(self) -> None:
+    def _metrics_orders_frame(self) -> DataFrame:
         """Order status pivots + delivery-lag averages per day/state (08)."""
         fo = self.table("gold", "fact_orders").read()
 
@@ -470,9 +531,9 @@ class OlistPipeline:
             )
             .withColumn("gold_processed_ts", self._now())
         )
-        self.table("metrics", "metrics_orders").overwrite(mart)
+        return mart
 
-    def _metrics_customers(self) -> None:
+    def _metrics_customers_frame(self) -> DataFrame:
         """Customer metrics per state (09) — signup date FIXED to derive
         from the first order event, not warehouse-load time (09:30 quirk)."""
         dc = self.table("gold", "dim_customers").read()
@@ -497,7 +558,7 @@ class OlistPipeline:
             )
             .withColumn("gold_processed_ts", self._now())
         )
-        self.table("metrics", "metrics_customers").overwrite(mart)
+        return mart
 
     # ----------------------------------------------------------------- all
 

@@ -7,7 +7,10 @@ Two freshness tiers, mirroring the reference (SURVEY §2.8):
    drain whatever is available, then stop; scheduling is external. The
    checkpoint tracks source offsets (exactly-once progress), and the
    batch function writes through LakeTable merges, which are idempotent —
-   together: effectively-exactly-once.
+   together: effectively-exactly-once. A file source need not start a
+   stream at all: `unseen_listing` compares its files (name, size,
+   mtime) with the listing `record_listing` kept in the checkpoint dir
+   at the last successful drain, and returns None when nothing landed.
 
 2. `IncrementalRunner` — batch-incremental over LakeTable change feeds
    (S6 analog): consumers remember the last table version they processed
@@ -59,6 +62,51 @@ def run_available_now(
     )
 
 
+def _file_listing(source_dir: str) -> list[list]:
+    """[relative path, size, mtime in ns] of every file under `source_dir`."""
+    out = []
+    for root, _, files in os.walk(source_dir):
+        for name in files:
+            path = os.path.join(root, name)
+            st = os.stat(path)
+            out.append([os.path.relpath(path, source_dir), st.st_size, st.st_mtime_ns])
+    return sorted(out)
+
+
+def _write_json(path: str, doc: object) -> None:
+    """Atomic JSON write: a temp file renamed over `path`."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(doc, f)
+    os.replace(tmp, path)
+
+
+def _listing_file(checkpoint_dir: str) -> str:
+    return os.path.join(checkpoint_dir, "source_listing.json")
+
+
+def unseen_listing(source_dir: str, checkpoint_dir: str) -> list[list] | None:
+    """The listing (name, size, mtime) of the files under `source_dir`,
+    or None when it equals the one `record_listing` kept in
+    `checkpoint_dir` at the last successful drain: a file stream over
+    `source_dir` would find nothing new, so none need start. Take it
+    BEFORE the stream starts, so that a file landing mid-drain is not
+    recorded as seen."""
+    listing = _file_listing(source_dir)
+    path = _listing_file(checkpoint_dir)
+    if os.path.exists(path):
+        with open(path) as f:
+            if json.load(f) == listing:
+                return None
+    return listing
+
+
+def record_listing(checkpoint_dir: str, listing: list[list]) -> None:
+    """Keep `listing` inside the checkpoint dir, after the drain it
+    preceded succeeded: deleting the checkpoint resets it too."""
+    _write_json(_listing_file(checkpoint_dir), listing)
+
+
 class IncrementalRunner:
     """Tracks per-consumer progress against LakeTable versions."""
 
@@ -77,10 +125,7 @@ class IncrementalRunner:
             return json.load(f)["version"]
 
     def _save(self, consumer: str, version: int) -> None:
-        tmp = f"{self._state_file(consumer)}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, self._state_file(consumer))
+        _write_json(self._state_file(consumer), {"version": version})
 
     def process(
         self,

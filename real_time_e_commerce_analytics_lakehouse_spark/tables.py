@@ -490,11 +490,22 @@ class LakeTable:
 
     def _txns(self, version: int | None) -> dict:
         """Copy of the txn ledger at `version` ({} for an empty table) —
-        the one spelling shared by _commit's carry, append_once, and
-        overwrite(txn=...)."""
+        the one spelling shared by _commit's carry and _txn_ledger."""
         return (
             dict(self._manifest_doc(version).get("txn", {})) if version else {}
         )
+
+    def _txn_ledger(
+        self, version: int | None, txn: dict, replay: bool = True
+    ) -> dict | None:
+        """The txn ledger at `version` with the `txn` markers folded in;
+        None when `replay` and a marker is at or below its recorded
+        watermark (the write already happened: skip it)."""
+        tx = self._txns(version)
+        if replay and any(int(v) <= int(tx.get(k, -1)) for k, v in txn.items()):
+            return None
+        tx.update({k: int(v) for k, v in txn.items()})
+        return tx
 
     def last_txn_version(self, txn_app: str) -> int | None:
         """Watermark the txn ledger records for `txn_app`, or None —
@@ -1602,7 +1613,8 @@ class LakeTable:
         df: DataFrame,
         where: object | None = None,
         txn: dict | None = None,
-    ) -> int:
+        replay: bool = True,
+    ) -> int | None:
         """Full-refresh write (S7; reference metrics marts 07:72-78).
         Resets deletion vectors AND column mapping — the new data
         defines the schema, so its names become the physical names.
@@ -1630,7 +1642,11 @@ class LakeTable:
         recorded watermark means this write already happened — skipped,
         returns None — and the ledger decision is pinned to the version
         it was read at (a concurrent commit surfaces as a conflict,
-        never a silently dropped ledger entry)."""
+        never a silently dropped ledger entry). `replay=False` records
+        the markers as given, lower ones included: for a caller that
+        decided to write by its own test, such as a pipeline unit
+        recording the versions of the inputs it read (an input rebuilt
+        at a lower version must lower its marker)."""
         if where is not None:
             if txn is not None:
                 raise ValueError("txn markers support full overwrite only")
@@ -1642,12 +1658,9 @@ class LakeTable:
             ih = start + n - 1 if n else "carry"
         if txn is not None:
             cur = self.latest_version()
-            tx = self._txns(cur)
-            if any(
-                int(v) <= int(tx.get(k, -1)) for k, v in txn.items()
-            ):
+            tx = self._txn_ledger(cur, txn, replay)
+            if tx is None:
                 return None  # stale marker: idempotent replay, skip
-            tx.update({k: int(v) for k, v in txn.items()})
             # strict base: the ledger snapshot was read at `cur`, so a
             # commit landing in between must conflict, not be dropped
             # from the merged ledger (same discipline as append_once)
@@ -1822,8 +1835,9 @@ class LakeTable:
         2. keys whose final change is insert/update -> upserted;
            keys whose final change is delete -> removed.
 
-        One merge rewrite commit; partition-scoped on partitioned
-        tables like merge_upsert. Chaining `replica.apply_changes(
+        One merge rewrite commit, one join: the final deletes ride the
+        merge as tombstones; partition-scoped on partitioned tables like
+        merge_upsert. Chaining `replica.apply_changes(
         source.read_cdf(v, keys=...), keys=...)` replicates a table
         exactly (tested round-trip), which is the cross-system CDC
         mirror pattern Delta+DLT users run."""
@@ -1843,56 +1857,20 @@ class LakeTable:
             .drop("__rn")
         )
         meta = ["_change_type", "_commit_version"]
-        upserts = latest.filter(F.col("_change_type") != "delete").drop(*meta)
         if self.generated:
-            upserts = self._apply_generated(upserts)  # hidden partitions
-        deletes = latest.filter(F.col("_change_type") == "delete").select(*ks)
+            latest = self._apply_generated(latest)  # hidden partitions
         if not self.exists():
-            return self.overwrite(upserts)
-
-        base_v = self.latest_version()
-        current_units = self._read_manifest(base_v)
-        if self.partition_by:
-            # partitions touched by EITHER flavor of change
-            src_parts = self._source_partitions(
-                latest.drop(*meta).select(*self.partition_by)
+            return self.overwrite(
+                latest.filter(F.col("_change_type") != "delete").drop(*meta)
             )
-            touched = [
-                u for u in current_units if self._unit_key(u) in src_parts
-            ]
-            touched_paths = {u.path for u in touched}
-            untouched = [
-                u for u in current_units if u.path not in touched_paths
-            ]
-            target = (
-                self._read_units(touched, dv_paths=self._read_dv(base_v))
-                if touched
-                else self.read().limit(0)
-            )
-        else:
-            untouched = []
-            touched_paths = {u.path for u in current_units}
-            target = self._read_units(
-                current_units, dv_paths=self._read_dv(base_v)
-            )
-
-        merged = _merge_dataframes(target, upserts, ks, None)
-        # remove keys whose final change is a delete — one anti-join in
-        # the same rewrite (no second commit, no driver-side key list)
-        cond = None
-        for k in ks:
-            e = merged[k].eqNullSafe(deletes[k])
-            cond = e if cond is None else (cond & e)
-        merged = merged.join(deletes, cond, "left_anti")
-        new_units = self._write_units(merged)
-        return self._commit(
-            untouched + new_units,
-            op="apply_changes",
-            base_version=base_v,
-            dv=self._dv_minus_units(
-                self._read_dv(base_v),
-                touched_paths if self.partition_by else None,
-            ),
+        return self._merge(
+            latest.withColumn(
+                "__tombstone", F.col("_change_type") == "delete"
+            ).drop(*meta),
+            ks,
+            latest.select(*self.partition_by),
+            "apply_changes",
+            tombstone="__tombstone",
         )
 
     def append_once(self, df: DataFrame, txn_app: str, txn_version: int) -> int | None:
@@ -1911,11 +1889,9 @@ class LakeTable:
         tool when the batch has no natural key or the caller already
         has exactly-once offsets (Structured Streaming's batchId)."""
         v = self.latest_version()
-        txns = self._txns(v)
-        last = int(txns.get(txn_app, -1))
-        if txn_version <= last:
+        txns = self._txn_ledger(v, {txn_app: txn_version})
+        if txns is None:
             return None
-        txns[txn_app] = int(txn_version)
         ih: int | str = "carry"
         if self.identity and self.identity not in df.columns:
             start = self._identity_high(v) + 1
@@ -2709,7 +2685,9 @@ class LakeTable:
         guard_col: str | None = None,
         delete_unmatched: bool = False,
         delete_condition: object | None = None,
-    ) -> int:
+        txn: dict | None = None,
+        replay: bool = True,
+    ) -> int | None:
         """Keyed upsert (S10-S12).
 
         - matched & (no guard, or source.guard > target.guard): source wins
@@ -2731,13 +2709,19 @@ class LakeTable:
           untouched partitions are carried verbatim, making this the
           partition-scoped sync pattern (sync one day's partition from
           a full re-extract without scanning the other 3,000 days)
+        - `txn` / `replay`: ledger markers committed with the merge, as
+          in `overwrite`.
+
+        The whole merge is ONE full-outer join of target and source
+        (`_merge_dataframes`): the target is scanned once, the source
+        evaluated once, and the commit adds one file set.
 
         Correctness invariant (SURVEY §7 risk 3): multiple source rows per
         key are an error (Delta throws DELTA_MULTIPLE_SOURCE_ROW_MATCHES);
         callers dedup first (operators.dedup.dedup_latest). Enforced
-        INSIDE the merge plan (a window count + raise_error folded into
-        the join key) so the check costs no extra Spark job — the r1
-        version ran a separate full-scan isEmpty() per merge.
+        INSIDE the write plan (a window count + raise_error folded into
+        the join key) so the check costs no extra Spark job, and on the
+        first write into a table that does not exist yet too.
 
         Partitioned tables rewrite ONLY partitions present in the source
         (incremental MERGE at scale); untouched partitions' units carry
@@ -2751,36 +2735,17 @@ class LakeTable:
             # them (inserted rows would otherwise carry NULL and fail
             # write-time validation, r5 review)
             source = self._apply_generated(source)
-        if not self.exists():
-            return self.overwrite(source)
-
-        base_v = self.latest_version()
-        current_units = self._read_manifest(base_v)
-        if self.partition_by:
-            # restrict the rewrite to partitions present in the source
-            src_parts = self._source_partitions(source)
-            touched = [
-                u for u in current_units if self._unit_key(u) in src_parts
-            ]
-            touched_paths = {u.path for u in touched}
-            untouched = [u for u in current_units if u.path not in touched_paths]
-            target = (
-                self._read_units(touched, dv_paths=self._read_dv(base_v))
-                if touched
-                else self.read().limit(0)
-            )
-        else:
-            untouched = []
-            touched_paths = {u.path for u in current_units}
-            target = self._read_units(current_units, dv_paths=self._read_dv(base_v))
-
-        merged = _merge_dataframes(
-            target, source, ks, guard_col,
-            delete_unmatched=delete_unmatched,
-            delete_condition=delete_condition,
-        )
         try:
-            new_units = self._write_units(merged)
+            if not self.exists():
+                return self.overwrite(
+                    _dup_key_guard(source, ks), txn=txn, replay=replay
+                )
+            return self._merge(
+                source, ks, source, "merge_upsert", txn, replay,
+                guard_col=guard_col,
+                delete_unmatched=delete_unmatched,
+                delete_condition=delete_condition,
+            )
         except Exception as e:  # surface the in-plan dup guard as ValueError
             if _DUP_KEY_MARK in str(e):
                 raise ValueError(
@@ -2788,14 +2753,50 @@ class LakeTable:
                     "dedup first (operators.dedup.dedup_latest)"
                 ) from None
             raise
+
+    def _merge(
+        self,
+        source: DataFrame,
+        ks: list[str],
+        scope: DataFrame,
+        op: str,
+        txn: dict | None = None,
+        replay: bool = True,
+        **clauses: object,
+    ) -> int | None:
+        """The MERGE commit under merge_upsert and apply_changes: rewrite
+        the target units in `scope`'s partitions (all of them when
+        unpartitioned) as one `_merge_dataframes` join with `source`,
+        and commit them with the `txn` markers."""
+        base_v = self.latest_version()
+        tx: dict | str = "carry"
+        if txn is not None:
+            tx = self._txn_ledger(base_v, txn, replay)
+            if tx is None:
+                return None  # stale marker: idempotent replay, skip
+        current_units = self._read_manifest(base_v)
+        if self.partition_by:
+            src_parts = self._source_partitions(scope)
+            touched = [u for u in current_units if self._unit_key(u) in src_parts]
+        else:
+            touched = current_units
+        touched_paths = {u.path for u in touched}
+        untouched = [u for u in current_units if u.path not in touched_paths]
+        target = (
+            self._read_units(touched, dv_paths=self._read_dv(base_v))
+            if touched
+            else self.read().limit(0)
+        )
+        merged = _merge_dataframes(target, source, ks, **clauses)
         return self._commit(
-            untouched + new_units,
-            op="merge_upsert",
+            untouched + self._write_units(merged),
+            op=op,
             base_version=base_v,
             dv=self._dv_minus_units(
                 self._read_dv(base_v),
                 touched_paths if self.partition_by else None,
             ),
+            txn=tx,
         )
 
     def merge_scd2(
@@ -2946,40 +2947,18 @@ class LakeTable:
         )
 
 
-def _merge_dataframes(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    guard_col: str | None,
-    delete_unmatched: bool = False,
-    delete_condition: object | None = None,
-) -> DataFrame:
-    """Join-based MERGE: per-column conditional select. Runs as one
-    shuffle join on the keys (sort-merge or broadcast per Catalyst/AQE).
-
-    Two embedded guards:
-    - duplicate-source-keys: a window count over the keys, folded into
-      the first join key via raise_error, so evaluating the join
-      condition for ANY source row with a duplicated key aborts the job
-      before the commit (atomicity: no manifest is written).
-    - match detection uses an explicit constant marker column, not
-      `keys[0] IS NOT NULL`, so NULL-key source rows merge correctly
-      through the eqNullSafe join (ADVICE r1 #3).
-
-    Additive schema evolution (reference 01_bronze_csv_to_delta.py:40):
-    output columns are the UNION of target and source columns — a column
-    new in the source survives the merge, reading NULL for rows the
-    source didn't update."""
-    src_cols = source.columns
-    cols = target.columns + [c for c in src_cols if c not in target.columns]
-
+def _dup_key_guard(source: DataFrame, keys: list[str]) -> DataFrame:
+    """`source` with a window count over the keys folded into its first
+    key column via raise_error: evaluating that column for ANY row whose
+    key is duplicated aborts the job before the commit (atomicity: no
+    manifest is written). Costs no extra Spark job."""
     kcnt = F.count(F.lit(1)).over(W.partitionBy(*keys))
     dup_msg = F.concat(
         F.lit(f"{_DUP_KEY_MARK}: key ("),
         F.concat_ws(", ", *[F.col(k).cast("string") for k in keys]),
         F.lit(")"),
     )
-    s_checked = (
+    return (
         source.withColumn("__kcnt", kcnt)
         .withColumn(
             keys[0],
@@ -2988,40 +2967,84 @@ def _merge_dataframes(
             ),
         )
         .drop("__kcnt")
-        .withColumn("__src_marker", F.lit(True))
     )
 
-    t = target.alias("t")
-    s = s_checked.alias("s")
+
+def _merge_dataframes(
+    target: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    guard_col: str | None = None,
+    delete_unmatched: bool = False,
+    delete_condition: object | None = None,
+    tombstone: str | None = None,
+) -> DataFrame:
+    """Join-based MERGE: ONE full-outer join of target and source on the
+    keys (sort-merge or shuffled hash per Catalyst/AQE), then a
+    per-column conditional select. Each side is scanned once and the
+    result is one frame, so the write produces one file set.
+
+    Each side carries a constant marker column; a row is matched when
+    both markers are set, target-only when only the target's is, and an
+    insert when only the source's is. Markers, not `keys[0] IS NOT
+    NULL`, so NULL-key source rows merge correctly through the
+    eqNullSafe join (ADVICE r1 #3).
+
+    The duplicate-source-keys guard is `_dup_key_guard`, folded into
+    the first join key.
+
+    `tombstone` names a boolean source column marking deletes (a CDC
+    feed's final delete per key): a matched tombstone drops its target
+    row, an unmatched one inserts nothing, and the column is not
+    written.
+
+    Additive schema evolution (reference 01_bronze_csv_to_delta.py:40):
+    output columns are the UNION of target and source columns — a column
+    new in the source survives the merge, reading NULL for rows the
+    source didn't update."""
+    src_cols = [c for c in source.columns if c != tombstone]
+    tgt_cols = set(target.columns)
+    cols = target.columns + [c for c in src_cols if c not in tgt_cols]
+
+    t = target.withColumn("__tgt_marker", F.lit(True)).alias("t")
+    s = (
+        _dup_key_guard(source, keys)
+        .withColumn("__src_marker", F.lit(True))
+        .alias("s")
+    )
     cond = None
     for k in keys:
         c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
         cond = c if cond is None else (cond & c)
 
-    matched = F.col("s.__src_marker").isNotNull()
+    in_t = F.col("t.__tgt_marker").isNotNull()
+    in_s = F.col("s.__src_marker").isNotNull()
+    matched = in_t & in_s
+    # an insert, or a match the guard lets through (a NULL comparison
+    # keeps the target row: the stale update is dropped)
+    source_wins = in_s
     if guard_col is not None:
-        source_wins = matched & (
-            F.col(f"s.{guard_col}") > F.col(f"t.{guard_col}")
+        source_wins = in_s & (
+            ~in_t
+            | F.coalesce(
+                F.col(f"s.{guard_col}") > F.col(f"t.{guard_col}"), F.lit(False)
+            )
         )
-    else:
-        source_wins = matched
-
-    tgt_cols = set(target.columns)
 
     def _t_val(c: str):  # target-side value (NULL for source-new columns)
         if c in tgt_cols:
             return F.col(f"t.{c}")
         return F.lit(None).cast(source.schema[c].dataType)
 
-    joined = t.join(s, cond, "left")
+    joined = t.join(s, cond, "full_outer")
     if delete_condition is not None:
         # WHEN MATCHED AND <cond> THEN DELETE (Delta's matched-delete
         # clause): the predicate may reference both sides as `s.col` /
         # `t.col` (e.g. "s._op = 'D'" for a CDC tombstone marker).
-        # Deleting is a filter on the SAME join — no extra job; a
-        # deleted key's source row is matched, so the anti-join insert
-        # branch never resurrects it. NULL predicate keeps the row
-        # (SQL three-valued logic, as in DELETE).
+        # Deleting is a filter on the SAME join — no extra job; the
+        # deleted key's source row is the matched row, so nothing
+        # resurrects it. NULL predicate keeps the row (SQL three-valued
+        # logic, as in DELETE).
         dc = (
             F.expr(delete_condition)
             if isinstance(delete_condition, str)
@@ -3031,8 +3054,10 @@ def _merge_dataframes(
     if delete_unmatched:
         # WHEN NOT MATCHED BY SOURCE THEN DELETE: drop target rows with
         # no source match — same join, one extra filter, no extra job
-        joined = joined.filter(F.col("s.__src_marker").isNotNull())
-    updated = joined.select(
+        joined = joined.filter(in_s)
+    if tombstone is not None:
+        joined = joined.filter(~(in_s & F.col(f"s.{tombstone}")))
+    return joined.select(
         *[
             F.when(source_wins, F.col(f"s.{c}") if c in src_cols else _t_val(c))
             .otherwise(_t_val(c))
@@ -3040,14 +3065,3 @@ def _merge_dataframes(
             for c in cols
         ]
     )
-    inserts = s.join(t, cond, "left_anti").select(
-        *[
-            (
-                F.col(c)
-                if c in src_cols
-                else F.lit(None).cast(target.schema[c].dataType)
-            ).alias(c)
-            for c in cols
-        ]
-    )
-    return updated.unionByName(inserts)

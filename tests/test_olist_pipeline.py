@@ -396,7 +396,10 @@ def test_failed_unit_lets_its_layer_finish_then_rerun_recovers(
 
 def test_layer_units_run_under_the_callers_job_group(pipeline):
     """The units' jobs carry the caller's local properties, so a job
-    group set around a layer covers the work its threads launch."""
+    group set around a layer covers the work its threads launch. The
+    marts are dropped first: with their gold inputs unchanged, the
+    layer would skip all three units and launch no job."""
+    shutil.rmtree(os.path.join(pipeline.lake_root, "metrics"))
     sc = pipeline.spark.sparkContext
     group = "olist_metrics_build_group"
     sc.setJobGroup(group, "metrics_build under a job group")
@@ -405,3 +408,154 @@ def test_layer_units_run_under_the_callers_job_group(pipeline):
     finally:
         sc._jsc.clearJobGroup()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+
+
+DIMS = ("dim_customers", "dim_products", "dim_sellers", "dim_geolocation")
+MARTS = ("metrics_revenue", "metrics_orders", "metrics_customers")
+ORDERS_HEADER = [
+    "order_id", "customer_id", "order_status", "order_purchase_timestamp",
+    "order_approved_at", "order_delivered_carrier_date",
+    "order_delivered_customer_date", "order_estimated_delivery_date",
+]
+
+
+def _backfilled(spark, tmp_path) -> tuple[str, str]:
+    landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
+    make_fixtures(landing, seed=42)
+    OlistPipeline(spark, lake, landing, clock=CLOCK).run()
+    return landing, lake
+
+
+def _write_csv(path: str, rows: list[list[str]]) -> None:
+    import csv
+
+    with open(path, "w", newline="") as f:
+        csv.writer(f).writerows(rows)
+
+
+def _versions(p: OlistPipeline, layer: str, names) -> dict[str, int]:
+    return {n: p.table(layer, n).latest_version() for n in names}
+
+
+def _mart_rows(p: OlistPipeline, name: str) -> list[str]:
+    df = p.table("metrics", name).read().drop("gold_processed_ts")
+    return sorted(
+        repr(tuple(round(v, 6) if isinstance(v, float) else v for v in r))
+        for r in df.select(*sorted(df.columns)).collect()
+    )
+
+
+def _spy_streams(monkeypatch, after=None) -> list[str]:
+    """Record the landing table of every bronze stream `run()` starts;
+    `after(table)` runs once that stream has drained."""
+    from real_time_e_commerce_analytics_lakehouse_spark.pipelines import olist
+
+    started: list[str] = []
+    drain = olist.run_available_now
+
+    def spy(stream_df, checkpoint_dir, batch_fn):
+        table = os.path.basename(checkpoint_dir)
+        started.append(table)
+        drain(stream_df, checkpoint_dir, batch_fn)
+        if after is not None:
+            after(table)
+
+    monkeypatch.setattr(olist, "run_available_now", spy)
+    return started
+
+
+def test_delivery_runs_only_the_streams_and_units_its_files_reach(
+    spark, tmp_path, monkeypatch, assert_golden_revenue
+):
+    """A delivery of orders, items and payments starts those three
+    bronze streams only, leaves the four dims at their versions, and
+    still yields the golden revenue mart and the marts a full build of
+    the same landing zone gives."""
+    landing, lake = _backfilled(spark, tmp_path)
+    p = OlistPipeline(spark, lake, landing, clock=CLOCK + timedelta(hours=1))
+    dims = _versions(p, "gold", DIMS)
+    facts = ("fact_orders", "fact_payments")
+    fact_versions = _versions(p, "gold", facts)
+    for table in ("orders", "order_items", "order_payments"):
+        shutil.copyfile(
+            os.path.join(landing, table, f"{table}_part1.csv"),
+            os.path.join(landing, table, f"{table}_part2.csv"),
+        )
+    started = _spy_streams(monkeypatch)
+    p.run()
+    assert sorted(started) == ["order_items", "order_payments", "orders"]
+    assert _versions(p, "gold", DIMS) == dims
+    assert all(v > fact_versions[n] for n, v in _versions(p, "gold", facts).items())
+    assert_golden_revenue(p)
+
+    full = OlistPipeline(spark, str(tmp_path / "full"), landing, clock=p.clock)
+    full.run()
+    for mart in MARTS:
+        assert _mart_rows(p, mart) == _mart_rows(full, mart), mart
+
+
+def test_delivery_of_items_alone_rebuilds_fact_orders(spark, tmp_path):
+    """fact_orders reads orders, items and customers: a delivery that
+    moves only its items input must still rebuild it, while the facts
+    and dims none of whose inputs moved keep their versions."""
+    landing, lake = _backfilled(spark, tmp_path)
+    p = OlistPipeline(spark, lake, landing, clock=CLOCK + timedelta(hours=1))
+    order = p.table("gold", "fact_orders").read().filter(
+        F.col("order_item_count") > 0
+    ).orderBy("order_id").first()
+    untouched = _versions(p, "gold", (*DIMS, "fact_payments", "fact_reviews"))
+    fact_v = p.table("gold", "fact_orders").latest_version()
+    _write_csv(
+        os.path.join(landing, "order_items", "order_items_part2.csv"),
+        [
+            ["order_id", "order_item_id", "product_id", "seller_id",
+             "shipping_limit_date", "price", "freight_value"],
+            [order.order_id, "99", "prod_006", "sell_19", "2018-09-17 07:29:49",
+             "10.00", "1.00"],
+        ],
+    )
+    p.run()
+    assert p.table("gold", "fact_orders").latest_version() > fact_v
+    after = p.table("gold", "fact_orders").read().filter(
+        F.col("order_id") == order.order_id
+    ).first()
+    assert after.order_item_count == order.order_item_count + 1
+    assert abs(after.total_order_value - order.total_order_value - 10.0) < 1e-6
+    assert _versions(p, "gold", untouched) == untouched
+
+
+def test_file_landing_after_the_listing_is_ingested_next_run(
+    spark, tmp_path, monkeypatch
+):
+    """The landing listing a drain records is the one taken before its
+    stream started: a file that lands while the stream drains is not
+    marked seen, and the next run ingests it."""
+    landing, lake = _backfilled(spark, tmp_path)
+    orders = os.path.join(landing, "orders")
+    _write_csv(
+        os.path.join(orders, "orders_part2.csv"),
+        [ORDERS_HEADER, ["order_new_a", "cust_0002", "created",
+                         "2018-05-05 05:05:05", "", "", "", "2018-06-01 00:00:00"]],
+    )
+
+    def land_late(table: str) -> None:
+        if table == "orders":
+            _write_csv(
+                os.path.join(orders, "orders_part3.csv"),
+                [ORDERS_HEADER, ["order_new_b", "cust_0002", "created",
+                                 "2018-05-06 05:05:05", "", "", "",
+                                 "2018-06-01 00:00:00"]],
+            )
+
+    p = OlistPipeline(spark, lake, landing, clock=CLOCK + timedelta(hours=1))
+    with monkeypatch.context() as m:
+        _spy_streams(m, after=land_late)
+        p.run()
+
+    def ids(layer: str) -> set[str]:
+        return {r.order_id for r in p.table(layer, "orders").read().collect()}
+
+    assert "order_new_a" in ids("bronze") and "order_new_b" not in ids("bronze")
+    p.run()
+    assert {"order_new_a", "order_new_b"} <= ids("bronze")
+    assert {"order_new_a", "order_new_b"} <= ids("silver")

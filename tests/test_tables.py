@@ -83,6 +83,78 @@ def test_merge_upsert_rejects_duplicate_source_keys(spark, tmp_table):
         t.merge_upsert(dup, keys="id", guard_col="ver")
 
 
+def test_merge_upsert_first_write_rejects_duplicate_source_keys(spark, tmp_path):
+    """The one-row-per-key guard holds on the write that creates the
+    table as on a merge into an existing one: both raise, and the
+    create commits nothing."""
+    dup = _df(spark, [(1, "a", 1), (1, "b", 1), (2, "c", 1)])
+    fresh = LakeTable(spark, str(tmp_path / "fresh"))
+    with pytest.raises(ValueError, match="multiple rows per key"):
+        fresh.merge_upsert(dup, keys="id")
+    assert not fresh.exists()
+    existing = LakeTable(spark, str(tmp_path / "existing"))
+    existing.overwrite(_df(spark, [(3, "d", 1)]))
+    with pytest.raises(ValueError, match="multiple rows per key"):
+        existing.merge_upsert(dup, keys="id")
+
+
+def test_merge_upsert_is_one_join_over_one_target_scan(spark, tmp_table, monkeypatch):
+    """A MERGE joins target and source once: the written plan holds one
+    join and one scan of the target's files, and the commit adds one
+    data dir holding one file set (one file for this small merge)."""
+    import re
+
+    t = LakeTable(spark, tmp_table)
+    t.overwrite(_df(spark, [(i, f"v{i}", 1) for i in range(20)]))
+    data = os.path.join(tmp_table, "data")
+    dirs_before = set(os.listdir(data))
+    written = []
+    write_units = LakeTable._write_units
+
+    def spy(self, df, *args, **kwargs):
+        written.append(df)
+        return write_units(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_units", spy)
+    t.merge_upsert(
+        _df(spark, [(5, "new", 2), (50, "ins", 2)]), keys="id", guard_col="ver"
+    )
+    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
+    joins = re.findall(
+        r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|BroadcastNestedLoopJoin)",
+        plan,
+    )
+    assert len(joins) == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    added = set(os.listdir(data)) - dirs_before
+    assert len(added) == 1
+    files = [
+        f for f in os.listdir(os.path.join(data, added.pop()))
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == 1, files
+    got = {r.id: (r.v, r.ver) for r in t.read().collect()}
+    assert len(got) == 21
+    assert got[5] == ("new", 2) and got[50] == ("ins", 2) and got[4] == ("v4", 1)
+
+
+def test_merge_upsert_txn_markers_replay_or_record_as_given(spark, tmp_table):
+    """merge_upsert(txn=) has overwrite's ledger semantics: a marker at
+    or below its watermark skips the merge; replay=False records the
+    markers as given, a lower one included, and merges."""
+    t = LakeTable(spark, tmp_table)
+    assert t.merge_upsert(_df(spark, [(1, "a", 1)]), keys="id", txn={"in": 5}) == 1
+    assert t.merge_upsert(_df(spark, [(1, "b", 2)]), keys="id", txn={"in": 5}) is None
+    assert t.latest_version() == 1
+    v = t.merge_upsert(
+        _df(spark, [(1, "c", 3)]), keys="id", txn={"in": 2, "other": 7},
+        replay=False,
+    )
+    assert v == 2
+    assert (t.last_txn_version("in"), t.last_txn_version("other")) == (2, 7)
+    assert [(r.id, r.v) for r in t.read().collect()] == [(1, "c")]
+
+
 def test_merge_upsert_composite_keys(spark, tmp_table):
     t = LakeTable(spark, tmp_table)
     t.overwrite(_df(spark, [(1, "a", 1), (1, "b", 1)], "k1 long, k2 string, ver long"))
@@ -2220,3 +2292,114 @@ def test_zorder_survives_nan_and_inf_values(spark, tmp_table):
     finite = keyed.where(~F.isnan("x") & (F.abs("x") != float("inf")))
     # finite rows spread across many cells (dimension NOT collapsed)
     assert finite.select("z").distinct().count() > 10
+
+
+def _mk(spark, rows):
+    return spark.createDataFrame(rows, "id long, v string")
+
+
+def test_rewrite_after_mor_delete_clears_stale_tombstones(spark, tmp_path):
+    """merge_upsert on a table with active DVs materializes the
+    deletions; carrying the tombstones made count_rows undercount and
+    blocked read_stream forever (r5 review)."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.overwrite(_mk(spark, [(i, "v") for i in range(100)]))
+    t.delete(F.col("id") < 10, mode="mor")
+    assert t.count_rows() == 90
+    t.merge_upsert(_mk(spark, [(50, "updated")]), keys="id")
+    assert t.count_rows() == 90  # not 80
+    assert t.read().count() == 90
+    # unpartitioned merge rewrote everything: no tombstones remain, so
+    # the append-only stream surface is usable again
+    assert t._read_dv(t.latest_version()) == []
+    t.read_stream()  # must not raise "active tombstones"
+
+
+def test_cow_delete_keeps_tombstones_of_untouched_units(spark, tmp_path):
+    """Partition-scoped rewrites drop only the tombstones whose units
+    they materialized; DVs into untouched partitions stay active."""
+    t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"])
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, "x" if i % 2 else "y") for i in range(40)], "id long, p string"
+        )
+    )
+    t.delete((F.col("id") < 4), mode="mor")  # tombstones in BOTH partitions
+    assert t.count_rows() == 36
+    # merge touching only partition x
+    t.merge_upsert(
+        spark.createDataFrame([(5, "x")], "id long, p string"), keys="id"
+    )
+    # x's tombstones materialized by the rewrite; y's still active
+    assert t.count_rows() == 36
+    assert sorted(r.id for r in t.read().where("p = 'y'").collect()) == sorted(
+        i for i in range(40) if i % 2 == 0 and i >= 4
+    )
+
+
+def test_restore_restores_the_versions_own_deletion_vectors(spark, tmp_path):
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.overwrite(_mk(spark, [(i, "v") for i in range(10)]))  # v1
+    v2 = t.delete(F.col("id") < 3, mode="mor")["version"]  # v2: 7 live
+    t.compact()  # v3: materialized, dv=[]
+
+    t.restore(1)  # full 10 rows, no tombstones
+    assert t.count_rows() == 10
+    assert sorted(r.id for r in t.read().collect()) == list(range(10))
+
+    t.restore(v2)  # v2's snapshot INCLUDES its tombstones
+    assert t.count_rows() == 7
+    assert sorted(r.id for r in t.read().collect()) == list(range(3, 10))
+
+
+def test_clone_carries_identity_and_txn_ledgers(spark, tmp_path):
+    src = LakeTable(spark, str(tmp_path / "src"), identity="id")
+    src.append(spark.createDataFrame([("a",), ("b",)], "v string"))
+    src.append_once(
+        spark.createDataFrame([("c",)], "v string"), txn_app="app", txn_version=7
+    )
+    high = src._identity_high(src.latest_version())
+    assert high == 3
+
+    dest = src.clone(str(tmp_path / "dest"))
+    d = LakeTable(spark, dest.path, identity="id")
+    assert d._identity_high(d.latest_version()) == high
+    assert d.last_txn_version("app") == 7
+    d.append(spark.createDataFrame([("d",)], "v string"))
+    ids = sorted(r.id for r in d.read().collect())
+    assert ids == [1, 2, 3, 4]  # no duplicate identity values
+    # replay of the already-applied txn inserts nothing
+    assert (
+        d.append_once(
+            spark.createDataFrame([("dup",)], "v string"),
+            txn_app="app",
+            txn_version=7,
+        )
+        is None
+    )
+
+
+def test_merge_into_generated_hidden_partition_table(spark, tmp_path):
+    """The partition_transform recipe: writers never supply the
+    generated partition column — merges must compute it, not crash on
+    an unresolved column (r5 review)."""
+    t = LakeTable(
+        spark,
+        str(tmp_path / "t"),
+        partition_by=["__p"],
+        generated={"__p": "CAST(ts AS DATE)"},
+    )
+    df = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00"), (2, "2024-01-02 11:00:00")],
+        "id long, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    t.overwrite(df)
+    batch = spark.createDataFrame(
+        [(2, "2024-01-02 12:00:00"), (3, "2024-01-03 09:00:00")],
+        "id long, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    t.merge_upsert(batch, keys="id")  # no __p supplied
+    got = {r["id"]: str(r["__p"]) for r in t.read().collect()}
+    assert got == {1: "2024-01-01", 2: "2024-01-02", 3: "2024-01-03"}
+    t.merge_insert_only(batch, keys="id")  # replay inserts nothing
+    assert t.count_rows() == 3
