@@ -26,12 +26,16 @@ Skip contract: a cycle costs what changed.
   the listing lives in the table's checkpoint dir, so deleting the
   checkpoint resets it.
 - silver conforms only the bronze rows committed since its last run.
-- each gold and metrics unit declares its input tables (GOLD_UNITS,
-  METRICS_UNITS) and records their versions as txn markers in the
-  commit that writes it. A unit whose inputs are all at exactly those
-  versions is skipped, so its table keeps its earlier rows and its
-  earlier `gold_*_ts`. An input that moved either way, a rebuilt one at
-  a lower version included, rebuilds the unit.
+- each gold and metrics unit builds its frame through a reader that
+  pins every table it reads at its latest version and records that
+  version. Once the write commits, the unit's state file
+  (`_state/<layer>_<name>.json`) keeps the target's new version and
+  the versions read. A unit whose target is still at that version and
+  whose inputs are all at exactly the recorded versions is skipped, so
+  its table keeps its earlier rows and its earlier `gold_*_ts`. An
+  input that moved either way (a rebuilt one at a lower version
+  included), any other write to the target, or a lost state file
+  rebuilds the unit.
 
 Concurrency contract. Each layer method is a barrier: it returns only
 after all of its work is done, and `run()` calls the four layers in
@@ -56,7 +60,6 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 from functools import partial
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,36 +84,8 @@ from real_time_e_commerce_analytics_lakehouse_spark.streaming.pipeline import (
 from real_time_e_commerce_analytics_lakehouse_spark.tables import LakeTable
 
 
-class Unit(NamedTuple):
-    """One gold or metrics table: the tables it reads ("layer/table"),
-    and how it is written — a full-refresh overwrite when `keys` is
-    None, else merge_upsert on `keys` guarded by `guard_col`."""
-
-    inputs: tuple[str, ...]
-    keys: str | None = None
-    guard_col: str | None = None
-
-
-GOLD_UNITS: dict[str, Unit] = {
-    "dim_customers": Unit(("silver/customers",)),
-    "dim_products": Unit(("silver/products",)),
-    "dim_sellers": Unit(("silver/sellers",)),
-    "dim_geolocation": Unit(("silver/geolocation",)),
-    "fact_orders": Unit(
-        ("silver/orders", "silver/order_items", "silver/customers"),
-        "order_id",
-        "orders_silver_ts",  # 04:117
-    ),
-    "fact_payments": Unit(("silver/order_payments", "silver/orders"), "order_id"),
-    "fact_reviews": Unit(
-        ("silver/order_reviews", "silver/orders"), "review_id", "ingestion_ts"
-    ),
-}
-METRICS_UNITS: dict[str, Unit] = {
-    "metrics_revenue": Unit(("gold/fact_orders", "gold/fact_payments")),  # 07:72-78
-    "metrics_orders": Unit(("gold/fact_orders",)),
-    "metrics_customers": Unit(("gold/dim_customers", "gold/fact_orders")),
-}
+# reads a table, given its layer and name, for a gold or metrics frame
+Reader = Callable[[str, str], DataFrame]
 
 
 class OlistPipeline:
@@ -287,34 +262,63 @@ class OlistPipeline:
         return F.xxhash64(*[F.col(c) for c in cols])
 
     def gold_build(self) -> None:
-        """The 4 dims and the 3 facts, all 7 from silver."""
+        """The 4 dims and the 3 facts, all 7 from silver; a unit whose
+        inputs did not move is skipped (`_unit`)."""
+        unit = partial(self._unit, "gold")
         self._run_concurrently(
-            *(partial(self._unit, "gold", *unit) for unit in GOLD_UNITS.items())
+            partial(unit, "dim_customers", self._dim_customers_frame),
+            partial(unit, "dim_products", self._dim_products_frame),
+            partial(unit, "dim_sellers", self._dim_sellers_frame),
+            partial(unit, "dim_geolocation", self._dim_geolocation_frame),
+            partial(
+                unit, "fact_orders", self._fact_orders_frame,
+                "order_id", "orders_silver_ts",  # 04:117
+            ),
+            partial(unit, "fact_payments", self._fact_payments_frame, "order_id"),
+            partial(
+                unit, "fact_reviews", self._fact_reviews_frame,
+                "review_id", "ingestion_ts",
+            ),
         )
 
-    def _unit(self, layer: str, name: str, unit: Unit) -> None:
-        """Write `_<name>_frame()` to the table `layer/name` unless each
-        of the unit's inputs is at exactly the version its last commit
-        recorded. The write records the versions it read with
-        `replay=False`: an input rebuilt at a lower version must lower
-        its marker, not be taken for a replay. The layer barrier keeps
-        the inputs still while the unit reads them."""
+    def _unit(
+        self,
+        layer: str,
+        name: str,
+        frame: Callable[[Reader], DataFrame],
+        keys: str | None = None,
+        guard_col: str | None = None,
+    ) -> None:
+        """Write `frame(read)` to the table `layer/name`: a full-refresh
+        overwrite when `keys` is None, else merge_upsert on `keys`
+        guarded by `guard_col`. `read` pins each table at its latest
+        version and records it, so the versions recorded are the ones
+        the frame reads (building the frame is lazy and launches no
+        job). The write is skipped when the unit's state file holds the
+        target's current version and exactly these input versions;
+        otherwise the state is saved once the write has committed. The
+        layer barrier keeps the inputs still while the unit runs."""
         target = self.table(layer, name)
-        versions = {i: self.table(*i.split("/")).latest_version() for i in unit.inputs}
-        if target.exists() and all(
-            target.last_txn_version(i) == v for i, v in versions.items()
-        ):
-            return
-        frame = getattr(self, f"_{name}_frame")()
-        if unit.keys is None:
-            target.overwrite(frame, txn=versions, replay=False)
-        else:
-            target.merge_upsert(
-                frame, unit.keys, unit.guard_col, txn=versions, replay=False
-            )
+        read_versions: dict[str, int | None] = {}
 
-    def _dim_customers_frame(self) -> DataFrame:
-        customers = self.table("silver", "customers").read()
+        def read(in_layer: str, table: str) -> DataFrame:
+            t = self.table(in_layer, table)
+            v = read_versions[f"{in_layer}/{table}"] = t.latest_version()
+            return t.read(version=v)
+
+        df = frame(read)
+        consumer = f"{layer}_{name}"
+        state = {"target": target.latest_version(), "inputs": read_versions}
+        if self.runner.state(consumer) == state:
+            return
+        if keys is None:
+            state["target"] = target.overwrite(df)
+        else:
+            state["target"] = target.merge_upsert(df, keys, guard_col)
+        self.runner.save(consumer, state)
+
+    def _dim_customers_frame(self, read: Reader) -> DataFrame:
+        customers = read("silver", "customers")
         dim_customers = (
             dedup_latest(customers, "customer_id", "ingestion_ts", ("source_file",))
             .select(
@@ -329,8 +333,8 @@ class OlistPipeline:
         )
         return dim_customers
 
-    def _dim_products_frame(self) -> DataFrame:
-        products = self.table("silver", "products").read()
+    def _dim_products_frame(self, read: Reader) -> DataFrame:
+        products = read("silver", "products")
         dim_products = (
             dedup_latest(products, "product_id", "ingestion_ts", ("source_file",))
             .select(
@@ -348,8 +352,8 @@ class OlistPipeline:
         )
         return dim_products
 
-    def _dim_sellers_frame(self) -> DataFrame:
-        sellers = self.table("silver", "sellers").read()
+    def _dim_sellers_frame(self, read: Reader) -> DataFrame:
+        sellers = read("silver", "sellers")
         dim_sellers = (
             dedup_latest(sellers, "seller_id", "ingestion_ts", ("source_file",))
             .select(
@@ -363,8 +367,8 @@ class OlistPipeline:
         )
         return dim_sellers
 
-    def _dim_geolocation_frame(self) -> DataFrame:
-        geo = self.table("silver", "geolocation").read()
+    def _dim_geolocation_frame(self, read: Reader) -> DataFrame:
+        geo = read("silver", "geolocation")
         dim_geolocation = geo.select(
             self._sk("zip_code_prefix").alias("geolocation_sk"),
             "zip_code_prefix",
@@ -376,7 +380,7 @@ class OlistPipeline:
         )
         return dim_geolocation
 
-    def _fact_orders_frame(self) -> DataFrame:
+    def _fact_orders_frame(self, read: Reader) -> DataFrame:
         """fact_orders: pre-agg items per order + 3-way left join + the
         datediff measure triplet (04_gold_fact_orders.py:42-91). The
         order_id join runs first and customers join after as a broadcast
@@ -385,11 +389,11 @@ class OlistPipeline:
         orders are shuffled at most once, on order_id. The two left joins
         commute (distinct keys; neither depends on the other's
         columns)."""
-        orders = self.table("silver", "orders").read()
-        customers = self.table("silver", "customers").read().select(
+        orders = read("silver", "orders")
+        customers = read("silver", "customers").select(
             "customer_id", "customer_state"
         )
-        items = self.table("silver", "order_items").read()
+        items = read("silver", "order_items")
         item_agg = items.groupBy("order_id").agg(
             F.count("*").alias("order_item_count"),  # 04:46
             F.sum("price").alias("total_order_value"),  # 04:47
@@ -437,11 +441,11 @@ class OlistPipeline:
         )
         return fact
 
-    def _fact_payments_frame(self) -> DataFrame:
+    def _fact_payments_frame(self, read: Reader) -> DataFrame:
         """fact_payments: payments pre-agg per order + order attrs
         (05_gold_fact_payments.py:31-55)."""
-        payments = self.table("silver", "order_payments").read()
-        orders = self.table("silver", "orders").read().select(
+        payments = read("silver", "order_payments")
+        orders = read("silver", "orders").select(
             "order_id", "order_status", "order_purchase_timestamp"
         )
         pay_agg = payments.groupBy("order_id").agg(
@@ -453,12 +457,12 @@ class OlistPipeline:
             "gold_processed_ts", self._now()
         )
 
-    def _fact_reviews_frame(self) -> DataFrame:
+    def _fact_reviews_frame(self, read: Reader) -> DataFrame:
         """fact_reviews: reviews ⋈ orders + post-join dedup by review_id
         (06_gold_fact_reviews.py:54-90). Unlike the reference (06:96-103
         first-write bug), the DEDUPED frame is written on every path."""
-        reviews = self.table("silver", "order_reviews").read()
-        orders = self.table("silver", "orders").read().select(
+        reviews = read("silver", "order_reviews")
+        orders = read("silver", "orders").select(
             "order_id", "customer_id", "order_status"
         )
         enriched = reviews.join(orders, "order_id", "left").select(
@@ -480,16 +484,20 @@ class OlistPipeline:
     # ------------------------------------------------------------- metrics
 
     def metrics_build(self) -> None:
-        """The 3 marts, full refresh, from gold."""
+        """The 3 marts from gold, each a full refresh rebuilt only when
+        one of its gold inputs moved (`_unit`)."""
+        unit = partial(self._unit, "metrics")
         self._run_concurrently(
-            *(partial(self._unit, "metrics", *unit) for unit in METRICS_UNITS.items())
+            partial(unit, "metrics_revenue", self._metrics_revenue_frame),  # 07:72-78
+            partial(unit, "metrics_orders", self._metrics_orders_frame),
+            partial(unit, "metrics_customers", self._metrics_customers_frame),
         )
 
-    def _metrics_revenue_frame(self) -> DataFrame:
+    def _metrics_revenue_frame(self, read: Reader) -> DataFrame:
         """Revenue by (order_date, customer_state, order_status): facts
         inner-joined to payments — unpaid orders excluded (07:26-65)."""
-        fo = self.table("gold", "fact_orders").read()
-        fp = self.table("gold", "fact_payments").read().select(
+        fo = read("gold", "fact_orders")
+        fp = read("gold", "fact_payments").select(
             "order_id", "total_payment_value"
         )
         mart = (
@@ -507,9 +515,9 @@ class OlistPipeline:
         )
         return mart
 
-    def _metrics_orders_frame(self) -> DataFrame:
+    def _metrics_orders_frame(self, read: Reader) -> DataFrame:
         """Order status pivots + delivery-lag averages per day/state (08)."""
-        fo = self.table("gold", "fact_orders").read()
+        fo = read("gold", "fact_orders")
 
         def status(s: str):  # noqa: ANN202
             return F.sum(F.when(F.col("order_status") == s, 1).otherwise(0)).cast("long")
@@ -533,11 +541,11 @@ class OlistPipeline:
         )
         return mart
 
-    def _metrics_customers_frame(self) -> DataFrame:
+    def _metrics_customers_frame(self, read: Reader) -> DataFrame:
         """Customer metrics per state (09) — signup date FIXED to derive
         from the first order event, not warehouse-load time (09:30 quirk)."""
-        dc = self.table("gold", "dim_customers").read()
-        fo = self.table("gold", "fact_orders").read().select(
+        dc = read("gold", "dim_customers")
+        fo = read("gold", "fact_orders").select(
             "customer_id", "order_id", "order_status",
             "order_purchase_timestamp", "total_order_value",
         )

@@ -108,7 +108,10 @@ def record_listing(checkpoint_dir: str, listing: list[list]) -> None:
 
 
 class IncrementalRunner:
-    """Tracks per-consumer progress against LakeTable versions."""
+    """Tracks per-consumer progress against LakeTable versions: one JSON
+    doc per consumer in `state_dir`, `{"version": v}` for a `process`
+    consumer (pipelines/olist's gold and metrics units keep the input
+    versions they read in theirs)."""
 
     def __init__(self, state_dir: str):
         self.state_dir = state_dir
@@ -117,15 +120,20 @@ class IncrementalRunner:
     def _state_file(self, consumer: str) -> str:
         return os.path.join(self.state_dir, f"{consumer}.json")
 
-    def last_version(self, consumer: str) -> int | None:
+    def state(self, consumer: str) -> dict | None:
+        """The doc `save` last kept for `consumer`, or None."""
         p = self._state_file(consumer)
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return json.load(f)["version"]
+            return json.load(f)
 
-    def _save(self, consumer: str, version: int) -> None:
-        _write_json(self._state_file(consumer), {"version": version})
+    def save(self, consumer: str, doc: dict) -> None:
+        _write_json(self._state_file(consumer), doc)
+
+    def last_version(self, consumer: str) -> int | None:
+        doc = self.state(consumer)
+        return None if doc is None else doc["version"]
 
     def process(
         self,
@@ -142,8 +150,8 @@ class IncrementalRunner:
         changes = source.read_changes(since)
         if changes is None:
             if latest is not None and latest != since:
-                self._save(consumer, latest)
+                self.save(consumer, {"version": latest})
             return False
         fn(changes)
-        self._save(consumer, latest)
+        self.save(consumer, {"version": latest})
         return True

@@ -490,22 +490,11 @@ class LakeTable:
 
     def _txns(self, version: int | None) -> dict:
         """Copy of the txn ledger at `version` ({} for an empty table) —
-        the one spelling shared by _commit's carry and _txn_ledger."""
+        the one spelling shared by _commit's carry, append_once, and
+        overwrite(txn=...)."""
         return (
             dict(self._manifest_doc(version).get("txn", {})) if version else {}
         )
-
-    def _txn_ledger(
-        self, version: int | None, txn: dict, replay: bool = True
-    ) -> dict | None:
-        """The txn ledger at `version` with the `txn` markers folded in;
-        None when `replay` and a marker is at or below its recorded
-        watermark (the write already happened: skip it)."""
-        tx = self._txns(version)
-        if replay and any(int(v) <= int(tx.get(k, -1)) for k, v in txn.items()):
-            return None
-        tx.update({k: int(v) for k, v in txn.items()})
-        return tx
 
     def last_txn_version(self, txn_app: str) -> int | None:
         """Watermark the txn ledger records for `txn_app`, or None —
@@ -1613,8 +1602,7 @@ class LakeTable:
         df: DataFrame,
         where: object | None = None,
         txn: dict | None = None,
-        replay: bool = True,
-    ) -> int | None:
+    ) -> int:
         """Full-refresh write (S7; reference metrics marts 07:72-78).
         Resets deletion vectors AND column mapping — the new data
         defines the schema, so its names become the physical names.
@@ -1642,11 +1630,7 @@ class LakeTable:
         recorded watermark means this write already happened — skipped,
         returns None — and the ledger decision is pinned to the version
         it was read at (a concurrent commit surfaces as a conflict,
-        never a silently dropped ledger entry). `replay=False` records
-        the markers as given, lower ones included: for a caller that
-        decided to write by its own test, such as a pipeline unit
-        recording the versions of the inputs it read (an input rebuilt
-        at a lower version must lower its marker)."""
+        never a silently dropped ledger entry)."""
         if where is not None:
             if txn is not None:
                 raise ValueError("txn markers support full overwrite only")
@@ -1658,9 +1642,12 @@ class LakeTable:
             ih = start + n - 1 if n else "carry"
         if txn is not None:
             cur = self.latest_version()
-            tx = self._txn_ledger(cur, txn, replay)
-            if tx is None:
+            tx = self._txns(cur)
+            if any(
+                int(v) <= int(tx.get(k, -1)) for k, v in txn.items()
+            ):
                 return None  # stale marker: idempotent replay, skip
+            tx.update({k: int(v) for k, v in txn.items()})
             # strict base: the ledger snapshot was read at `cur`, so a
             # commit landing in between must conflict, not be dropped
             # from the merged ledger (same discipline as append_once)
@@ -1889,9 +1876,11 @@ class LakeTable:
         tool when the batch has no natural key or the caller already
         has exactly-once offsets (Structured Streaming's batchId)."""
         v = self.latest_version()
-        txns = self._txn_ledger(v, {txn_app: txn_version})
-        if txns is None:
+        txns = self._txns(v)
+        last = int(txns.get(txn_app, -1))
+        if txn_version <= last:
             return None
+        txns[txn_app] = int(txn_version)
         ih: int | str = "carry"
         if self.identity and self.identity not in df.columns:
             start = self._identity_high(v) + 1
@@ -2685,9 +2674,7 @@ class LakeTable:
         guard_col: str | None = None,
         delete_unmatched: bool = False,
         delete_condition: object | None = None,
-        txn: dict | None = None,
-        replay: bool = True,
-    ) -> int | None:
+    ) -> int:
         """Keyed upsert (S10-S12).
 
         - matched & (no guard, or source.guard > target.guard): source wins
@@ -2709,8 +2696,6 @@ class LakeTable:
           untouched partitions are carried verbatim, making this the
           partition-scoped sync pattern (sync one day's partition from
           a full re-extract without scanning the other 3,000 days)
-        - `txn` / `replay`: ledger markers committed with the merge, as
-          in `overwrite`.
 
         The whole merge is ONE full-outer join of target and source
         (`_merge_dataframes`): the target is scanned once, the source
@@ -2737,11 +2722,9 @@ class LakeTable:
             source = self._apply_generated(source)
         try:
             if not self.exists():
-                return self.overwrite(
-                    _dup_key_guard(source, ks), txn=txn, replay=replay
-                )
+                return self.overwrite(_dup_key_guard(source, ks))
             return self._merge(
-                source, ks, source, "merge_upsert", txn, replay,
+                source, ks, source, "merge_upsert",
                 guard_col=guard_col,
                 delete_unmatched=delete_unmatched,
                 delete_condition=delete_condition,
@@ -2760,20 +2743,12 @@ class LakeTable:
         ks: list[str],
         scope: DataFrame,
         op: str,
-        txn: dict | None = None,
-        replay: bool = True,
         **clauses: object,
-    ) -> int | None:
+    ) -> int:
         """The MERGE commit under merge_upsert and apply_changes: rewrite
         the target units in `scope`'s partitions (all of them when
-        unpartitioned) as one `_merge_dataframes` join with `source`,
-        and commit them with the `txn` markers."""
+        unpartitioned) as one `_merge_dataframes` join with `source`."""
         base_v = self.latest_version()
-        tx: dict | str = "carry"
-        if txn is not None:
-            tx = self._txn_ledger(base_v, txn, replay)
-            if tx is None:
-                return None  # stale marker: idempotent replay, skip
         current_units = self._read_manifest(base_v)
         if self.partition_by:
             src_parts = self._source_partitions(scope)
@@ -2796,7 +2771,6 @@ class LakeTable:
                 self._read_dv(base_v),
                 touched_paths if self.partition_by else None,
             ),
-            txn=tx,
         )
 
     def merge_scd2(

@@ -297,7 +297,7 @@ def test_fact_orders_frame_matches_reference_join_order(pipeline):
     )
     got = sorted(
         (r.order_id, r.customer_state, r.order_item_count, r.total_order_value)
-        for r in p._fact_orders_frame()
+        for r in p._fact_orders_frame(lambda layer, name: p.table(layer, name).read())
         .select(
             "order_id", "customer_state", "order_item_count", "total_order_value"
         )
@@ -559,3 +559,41 @@ def test_file_landing_after_the_listing_is_ingested_next_run(
     p.run()
     assert {"order_new_a", "order_new_b"} <= ids("bronze")
     assert {"order_new_a", "order_new_b"} <= ids("silver")
+
+
+def test_a_run_with_nothing_landed_launches_no_job(spark, tmp_path, monkeypatch):
+    """With nothing landed since the last run, no bronze stream starts
+    and every gold and metrics unit builds its lazy frame but skips its
+    write: the cycle launches no Spark job and no table moves. A unit's
+    state holds the versions its frame read, and a foreign write to its
+    target makes the next run rebuild it."""
+    landing, lake = _backfilled(spark, tmp_path)
+    p = OlistPipeline(spark, lake, landing, clock=CLOCK + timedelta(hours=1))
+    tables = {("gold", n) for n in (*DIMS, "fact_orders", "fact_payments", "fact_reviews")}
+    tables |= {("metrics", n) for n in MARTS}
+    before = {t: p.table(*t).latest_version() for t in tables}
+    assert p.runner.state("gold_fact_orders") == {
+        "target": before["gold", "fact_orders"],
+        "inputs": {
+            f"silver/{n}": p.table("silver", n).latest_version()
+            for n in ("orders", "order_items", "customers")
+        },
+    }
+    mart = _mart_rows(p, "metrics_orders")
+
+    started = _spy_streams(monkeypatch)
+    sc = spark.sparkContext
+    group = "olist_run_with_nothing_landed"
+    sc.setJobGroup(group, "a cycle with nothing landed")
+    try:
+        p.run()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert started == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {t: p.table(*t).latest_version() for t in tables} == before
+
+    orders = p.table("metrics", "metrics_orders")
+    orders.overwrite(orders.read().limit(0))
+    p.run()
+    assert _mart_rows(p, "metrics_orders") == mart

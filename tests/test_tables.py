@@ -138,23 +138,6 @@ def test_merge_upsert_is_one_join_over_one_target_scan(spark, tmp_table, monkeyp
     assert got[5] == ("new", 2) and got[50] == ("ins", 2) and got[4] == ("v4", 1)
 
 
-def test_merge_upsert_txn_markers_replay_or_record_as_given(spark, tmp_table):
-    """merge_upsert(txn=) has overwrite's ledger semantics: a marker at
-    or below its watermark skips the merge; replay=False records the
-    markers as given, a lower one included, and merges."""
-    t = LakeTable(spark, tmp_table)
-    assert t.merge_upsert(_df(spark, [(1, "a", 1)]), keys="id", txn={"in": 5}) == 1
-    assert t.merge_upsert(_df(spark, [(1, "b", 2)]), keys="id", txn={"in": 5}) is None
-    assert t.latest_version() == 1
-    v = t.merge_upsert(
-        _df(spark, [(1, "c", 3)]), keys="id", txn={"in": 2, "other": 7},
-        replay=False,
-    )
-    assert v == 2
-    assert (t.last_txn_version("in"), t.last_txn_version("other")) == (2, 7)
-    assert [(r.id, r.v) for r in t.read().collect()] == [(1, "c")]
-
-
 def test_merge_upsert_composite_keys(spark, tmp_table):
     t = LakeTable(spark, tmp_table)
     t.overwrite(_df(spark, [(1, "a", 1), (1, "b", 1)], "k1 long, k2 string, ver long"))
