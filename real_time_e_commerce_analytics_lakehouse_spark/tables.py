@@ -1061,10 +1061,14 @@ class LakeTable:
         else:
             reader = self.spark.read.option("mergeSchema", "true")
         df = reader.parquet(*paths)
+        partitioned = any(u.partition for u in units)
+        if not (partitioned or dv_paths or with_file_path or with_row_index):
+            # no lineage wanted: the scan reads the data columns alone,
+            # not `_metadata`'s row index and file fields
+            return df
         # capture metadata into real columns ONCE, at the scan — hidden
         # _metadata is not resolvable after a join, and the DV anti-join
         # below is a join
-        partitioned = any(u.partition for u in units)
         df = df.withColumn("__fp_raw", F.col("_metadata.file_path"))
         if dv_paths or with_row_index:
             df = df.withColumn("__ri_raw", F.col("_metadata.row_index"))

@@ -2661,3 +2661,195 @@ def test_alter_schema_add_rename_drop(spark, tmp_path):
         for f in DeltaSnapshot(p).schema_json["fields"]
     }
     assert "delta.columnMapping.id" in md["extra"]
+
+
+_SCHEMA_ID = json.dumps(
+    {
+        "type": "struct",
+        "fields": [
+            {"name": "id", "type": "long", "nullable": True, "metadata": {}}
+        ],
+    }
+)
+
+
+def _write_commit(path: str, version: int, actions: list[dict]) -> None:
+    with open(
+        os.path.join(path, "_delta_log", f"{version:020d}.json"), "w"
+    ) as f:
+        for a in actions:
+            f.write(json.dumps(a) + "\n")
+
+
+def _bootstrap_actions() -> list[dict]:
+    return [
+        {
+            "protocol": {
+                "minReaderVersion": 3,
+                "minWriterVersion": 7,
+                "readerFeatures": ["deletionVectors"],
+                "writerFeatures": ["deletionVectors"],
+            }
+        },
+        {
+            "metaData": {
+                "id": "foreign-writer-test",
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": _SCHEMA_ID,
+                "partitionColumns": [],
+                "configuration": {},
+            }
+        },
+    ]
+
+
+def _inline_dv(ids: list[int]) -> dict:
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.roaring import (
+        serialize_rba,
+        z85_encode,
+    )
+
+    payload = serialize_rba(ids)
+    pad = (-len(payload)) % 4
+    return {
+        "storageType": "i",
+        "pathOrInlineDv": z85_encode(payload + b"\x00" * pad),
+        "sizeInBytes": len(payload),
+        "cardinality": len(ids),
+    }
+
+
+def _add(path: str, dv: dict | None = None) -> dict:
+    a = {
+        "path": path,
+        "partitionValues": {},
+        "size": 1,
+        "modificationTime": 0,
+        "dataChange": True,
+    }
+    if dv is not None:
+        a["deletionVector"] = dv
+    return {"add": a}
+
+
+def test_add_before_remove_same_commit_keeps_file(spark, tmp_path):
+    """Snapshot replay reconciles a commit's file actions as a set: a
+    DV-delete commit emitting the add line before the remove line of the
+    SAME path must replay to 'file live with the new DV', not 'file
+    gone' — the spec keys logical files by (path, dvId), so the remove
+    targets the OLD logical file only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "foreign")
+    os.makedirs(os.path.join(path, "_delta_log"))
+    pq.write_table(
+        pa.table({"id": list(range(10))}),
+        os.path.join(path, "part-0.parquet"),
+    )
+    _write_commit(
+        path, 0, _bootstrap_actions() + [_add("part-0.parquet", _inline_dv([2]))]
+    )
+    # foreign writer deepens the DV: ADD (new DV {2,5}) serialized
+    # BEFORE the REMOVE (old DV {2}) — line-order replay dropped part-0
+    _write_commit(
+        path,
+        1,
+        [
+            _add("part-0.parquet", _inline_dv([2, 5])),
+            {
+                "remove": {
+                    "path": "part-0.parquet",
+                    "dataChange": True,
+                    "deletionVector": _inline_dv([2]),
+                }
+            },
+        ],
+    )
+    got = sorted(r.id for r in read_delta_log(spark, path).collect())
+    assert got == sorted(set(range(10)) - {2, 5})
+    # the reverse order (remove first, add second) must agree
+    _write_commit(
+        path,
+        2,
+        [
+            {
+                "remove": {
+                    "path": "part-0.parquet",
+                    "dataChange": True,
+                    "deletionVector": _inline_dv([2, 5]),
+                }
+            },
+            _add("part-0.parquet", _inline_dv([2, 5, 7])),
+        ],
+    )
+    got2 = sorted(r.id for r in read_delta_log(spark, path).collect())
+    assert got2 == sorted(set(range(10)) - {2, 5, 7})
+    # a plain remove (no re-add in the commit) still removes
+    _write_commit(
+        path, 3, [{"remove": {"path": "part-0.parquet", "dataChange": True}}]
+    )
+    assert read_delta_log(spark, path).count() == 0
+
+
+def test_dv_storage_p_accepts_file_uri(spark, tmp_path):
+    """storageType='p' pathOrInlineDv as a file:/// URI (as foreign
+    writers commonly serialize it)
+    resolves like add/remove paths do (plain absolute path still works —
+    covered by test_reader_applies_inline_and_path_dv_storage)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_time_e_commerce_analytics_lakehouse_spark.sources.roaring import (
+        serialize_rba,
+        write_dv_file,
+    )
+
+    path = str(tmp_path / "foreign")
+    os.makedirs(os.path.join(path, "_delta_log"))
+    pq.write_table(
+        pa.table({"id": list(range(10))}),
+        os.path.join(path, "part-0.parquet"),
+    )
+    payload = serialize_rba([1, 8])
+    img, offs = write_dv_file([payload])
+    dv_file = str(tmp_path / "external_dv.bin")
+    with open(dv_file, "wb") as f:
+        f.write(img)
+    desc = {
+        "storageType": "p",
+        "pathOrInlineDv": "file://" + dv_file,
+        "offset": offs[0],
+        "sizeInBytes": len(payload),
+        "cardinality": 2,
+    }
+    _write_commit(
+        path, 0, _bootstrap_actions() + [_add("part-0.parquet", desc)]
+    )
+    got = sorted(r.id for r in read_delta_log(spark, path).collect())
+    assert got == sorted(set(range(10)) - {1, 8})
+
+
+def test_partition_pruning_canonicalizes_bools(spark, tmp_path):
+    """partitions={'flag': [True]} must match the stored
+    canonical 'true' (str(True) == 'True' pruned every file), and a
+    writer-sensitive type (float) is rejected loudly."""
+    t = LakeTable(spark, str(tmp_path / "t"), partition_by=["flag"])
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, i % 2 == 0) for i in range(10)], "id long, flag boolean"
+        )
+    )
+    export_delta_log(t)
+    got = read_delta_log(spark, t.path, partitions={"flag": [True]})
+    assert sorted(r.id for r in got.collect()) == [0, 2, 4, 6, 8]
+    # int filters canonicalize too (str(int) is already canonical)
+    t2 = LakeTable(spark, str(tmp_path / "t2"), partition_by=["k"])
+    t2.overwrite(
+        spark.createDataFrame([(i, i % 3) for i in range(9)], "id long, k int")
+    )
+    export_delta_log(t2)
+    got2 = read_delta_log(spark, t2.path, partitions={"k": [1]})
+    assert sorted(r.id for r in got2.collect()) == [1, 4, 7]
+    with pytest.raises(TypeError, match="canonical Delta string"):
+        read_delta_log(spark, t.path, partitions={"flag": [1.5]})

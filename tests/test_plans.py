@@ -5,12 +5,14 @@ these tests pin the load-bearing properties of the headline plans so a
 refactor that silently un-pushes a filter, widens a scan, or drops a
 query into row-at-a-time Python fails CI — not the next bench run.
 Plan shape only: nothing here executes a job (sf0.001 inputs, no
-collect), so the whole module is cheap. The one exception is the last
-test, which pins a plan rewrite by its rows: `_copurchase_pairs`'
-basket-array pair generation (one groupBy + array comprehension)
-replaced a distinct + self-join spelling, and must compute exactly what
-that spelling did over a frame with duplicate lines, a singleton basket
-and a wide basket.
+collect), so the whole module is cheap. The exceptions are the last
+three tests. The first pins a plan rewrite by its rows:
+`_copurchase_pairs`' basket-array pair generation (one groupBy + array
+comprehension) replaced a distinct + self-join spelling, and must
+compute exactly what that spelling did over a frame with duplicate
+lines, a singleton basket and a wide basket. The other two pin plan
+guards on tiny corpora: a bigint-safe sampling predicate and the
+pair-fanout block budget.
 """
 
 from __future__ import annotations
@@ -234,3 +236,88 @@ def test_basket_pairs_match_old_selfjoin_spelling(spark, tmp_path):
         assert _rowset(op_new) == _rowset(op_old)
         # one basket row per distinct order
         assert baskets.count() == 4
+
+
+def test_importance_sample_bigint_safe_at_huge_corpus(spark, tmp_path):
+    """importance_sample_documents decides inclusion without forming the
+    u * Σw product: with Σ n_chars past 2^31 the old u*Σw predicate
+    wrapped int64 (Spark) / raised (DuckDB). The div-rearranged
+    predicate must match an exact Python big-int evaluation of
+    u*Σw < K*w*2^32, and the oracle must run clean in DuckDB."""
+    import duckdb
+
+    from real_time_e_commerce_analytics_lakehouse_spark.plans import QUERIES
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    # 4,000 docs of 2^20 chars each: Σw = 2^32 > 2^31 (old overflow
+    # regime) while staying tiny to scan
+    docs = spark.createDataFrame(
+        [(f"doc-{i:05d}", "en", 1 << 20) for i in range(4096)],
+        "doc_id string, lang string, n_chars long",
+    )
+    docs.coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+    q = QUERIES["importance_sample_documents"]
+    got = {r.doc_id for r in q.builder(spark, sf_dir).collect()}
+
+    # exact big-int reference of the ORIGINAL predicate
+    import hashlib
+
+    def hash_u32(s: str) -> int:
+        return int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big")
+
+    tw = 4096 * (1 << 20)
+    expect = {
+        f"doc-{i:05d}"
+        for i in range(4096)
+        if hash_u32(f"doc-{i:05d}") * tw < 50 * (1 << 20) * (1 << 32)
+    }
+    assert got == expect and got  # non-degenerate draw
+
+    con = duckdb.connect()
+    glob = os.path.join(sf_dir, "documents.parquet", "*.parquet")
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{glob}')"
+    )
+    oracle = {r[0] for r in con.execute(q.oracle).fetchall()}
+    assert oracle == expect
+
+
+def test_pair_fanout_block_budget_enforced(spark, tmp_path, monkeypatch):
+    """A pathological block (many docs sharing one shingle / band
+    bucket) must fail the job loudly at the cap instead of fanning out
+    ~n^2 pairs inside one key; normal corpora are untouched (the oracle
+    gate's hashes pin that)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_time_e_commerce_analytics_lakehouse_spark.plans import documents as docmod
+    from real_time_e_commerce_analytics_lakehouse_spark.plans import QUERIES
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(os.path.join(sf_dir, "documents.parquet"))
+    # 60 documents with IDENTICAL text: every shingle block and every
+    # LSH band bucket has 60 members
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [f"d{i:03d}" for i in range(60)],
+                "lang": ["en"] * 60,
+                "text": [text] * 60,
+                "n_chars": [len(text)] * 60,
+            }
+        ),
+        os.path.join(sf_dir, "documents.parquet", "part-0.parquet"),
+    )
+
+    monkeypatch.setattr(docmod, "PAIR_BLOCK_CAP", 50)
+    for name in ("ngram_jaccard_pairs", "lsh_candidate_pairs"):
+        with pytest.raises(Exception, match="PAIR_BLOCK_CAP|candidate pairs"):
+            QUERIES[name].builder(spark, sf_dir).collect()
+
+    # within budget: both run and agree with the duplicate structure
+    monkeypatch.setattr(docmod, "PAIR_BLOCK_CAP", 10_000)
+    pairs = QUERIES["lsh_candidate_pairs"].builder(spark, sf_dir)
+    assert pairs.count() == 60 * 59 // 2

@@ -98,6 +98,19 @@ def test_merge_upsert_first_write_rejects_duplicate_source_keys(spark, tmp_path)
         existing.merge_upsert(dup, keys="id")
 
 
+def _written_frames(monkeypatch) -> list:
+    """The frames every later `_write_units` call writes, in order."""
+    written = []
+    write_units = LakeTable._write_units
+
+    def spy(self, df, *args, **kwargs):
+        written.append(df)
+        return write_units(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_units", spy)
+    return written
+
+
 def test_merge_upsert_is_one_join_over_one_target_scan(spark, tmp_table, monkeypatch):
     """A MERGE joins target and source once: the written plan holds one
     join and one scan of the target's files, and the commit adds one
@@ -108,14 +121,7 @@ def test_merge_upsert_is_one_join_over_one_target_scan(spark, tmp_table, monkeyp
     t.overwrite(_df(spark, [(i, f"v{i}", 1) for i in range(20)]))
     data = os.path.join(tmp_table, "data")
     dirs_before = set(os.listdir(data))
-    written = []
-    write_units = LakeTable._write_units
-
-    def spy(self, df, *args, **kwargs):
-        written.append(df)
-        return write_units(self, df, *args, **kwargs)
-
-    monkeypatch.setattr(LakeTable, "_write_units", spy)
+    written = _written_frames(monkeypatch)
     t.merge_upsert(
         _df(spark, [(5, "new", 2), (50, "ins", 2)]), keys="id", guard_col="ver"
     )
@@ -136,6 +142,27 @@ def test_merge_upsert_is_one_join_over_one_target_scan(spark, tmp_table, monkeyp
     got = {r.id: (r.v, r.ver) for r in t.read().collect()}
     assert len(got) == 21
     assert got[5] == ("new", 2) and got[50] == ("ins", 2) and got[4] == ("v4", 1)
+
+
+def test_scan_without_lineage_reads_no_file_metadata(spark, tmp_table, monkeypatch):
+    """An unpartitioned table without deletion vectors, read with no
+    lineage column asked for, scans its data columns alone: neither a
+    read nor a MERGE's target scan reads `_metadata`'s row index or file
+    fields. A read that asks for the file path still gets it."""
+    t = LakeTable(spark, tmp_table)
+    t.overwrite(_df(spark, [(i, f"v{i}", 1) for i in range(20)]))
+    written = _written_frames(monkeypatch)
+    t.merge_upsert(_df(spark, [(5, "new", 2)]), keys="id", guard_col="ver")
+    for df in (t.read(), written[-1]):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        scans = [s for s in plan.splitlines() if "FileScan parquet" in s]
+        assert scans, plan
+        for scan in scans:
+            assert "ReadSchema: struct<id:bigint,v:string,ver:bigint>" in scan, scan
+            assert "_metadata" not in scan and "file_path" not in scan, scan
+    units = t._read_manifest(t.latest_version())
+    paths = {r.fp for r in t._read_units(units, with_file_path="fp").collect()}
+    assert paths and all(p.startswith("file:") and "/data/" in p for p in paths)
 
 
 def test_merge_upsert_composite_keys(spark, tmp_table):
